@@ -2,6 +2,8 @@ package graft.http
 
 import graft.conditions.Condition
 import graft.ir.{Edn, StreamResult}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 import java.io.{BufferedOutputStream, InputStream, OutputStream}
 import java.net.{InetSocketAddress, ServerSocket, Socket, URLDecoder}
@@ -136,23 +138,21 @@ final class WebSocketHub(port: Int = 0,
     * subscribers: for each subscriber on a channel this result published
     * to, the events passing its condition are sent as JSON text frames
     * (one frame per event, in the channel frame's deterministic
-    * (time, eventId) order). Subscribers sharing a (channel, condition)
-    * pair share one Spark job (conditions are case classes, so identical
-    * queries group structurally); a condition that fails analysis (e.g.
-    * referencing a field the frame lacks) is deterministic poison — those
-    * subscribers are dropped — while any other per-group failure is
-    * logged and skipped so one bad group can never abort fan-out or
-    * bubble into the synchronous push handler.
+    * (time, eventId) order, see [[WebSocketHub.orderedJson]]). Subscribers
+    * sharing a (channel, condition) pair share one collect (conditions are
+    * case classes, so identical queries group structurally); a condition
+    * that fails analysis (e.g. referencing a field the frame lacks) is
+    * deterministic poison — those subscribers are dropped — while any
+    * other per-group failure is logged and skipped so one bad group can
+    * never abort fan-out or bubble into the synchronous push handler.
     */
   def publish(result: StreamResult): Unit = {
     val channels = result.channels.keySet
     subs.asScala.filter(s => channels.contains(s.channel))
       .groupBy(s => (s.channel, s.condition)).foreach { case ((channel, cond), group) =>
         try {
-          val rows = result.subscribe(channel, cond)
-            .orderBy("time", "eventId")
-            .toJSON.collect()
-          val frames = rows.map(j => frameBytes(0x1, j.getBytes(UTF_8)))
+          val frames = WebSocketHub.orderedJson(result.subscribe(channel, cond))
+            .map(j => frameBytes(0x1, j.getBytes(UTF_8)))
           // a false offer on an already-closing sub is the graceful path
           // doing its job, not a slow consumer — don't abort the drain
           group.foreach(sub => if (!frames.forall(sub.offer) && !sub.isClosed) dropSub(sub))
@@ -370,6 +370,33 @@ final class WebSocketHub(port: Int = 0,
 }
 
 object WebSocketHub {
+  /** The frame's rows as JSON text (what `toJSON` writes), in the order of
+    * `orderBy("time", "eventId")`: ascending, nulls first. The rows are
+    * collected for the send anyway, so they are sorted on the driver; a
+    * frame that only filters a pushed local relation then runs no Spark
+    * job at all (Catalyst evaluates it in `ConvertToLocalRelation`). A
+    * frame without `time` or `eventId` fails analysis, as the sort did.
+    */
+  private[graft] def orderedJson(df: DataFrame): Array[String] =
+    df.select(col("time"), col("eventId"), to_json(struct(col("*"))))
+      .collect()
+      .sortWith((a, b) => sortKeyCompare(a, b) < 0)
+      .map(_.getString(2))
+
+  /** Spark's ascending, nulls-first order on the (time, eventId) prefix. */
+  private def sortKeyCompare(a: Row, b: Row): Int = {
+    def cmp(x: Any, y: Any): Int = (x, y) match {
+      case (null, null)           => 0
+      case (null, _)              => -1
+      case (_, null)              => 1
+      // Spark orders NaN last and -0.0 equal to 0.0
+      case (p: Double, q: Double) => if (p == q) 0 else java.lang.Double.compare(p, q)
+      case (p: Comparable[Any] @unchecked, q) => p.compareTo(q)
+    }
+    val t = cmp(a.get(0), b.get(0))
+    if (t != 0) t else cmp(a.get(1), b.get(1))
+  }
+
   /** Upper bound on the HTTP upgrade request (request line + headers). */
   val MaxHandshakeBytes: Int = 16 * 1024
 

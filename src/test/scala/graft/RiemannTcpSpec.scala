@@ -80,6 +80,31 @@ class RiemannTcpSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("a frame whose file-sink job fails is nacked and leaves no sink rows; the next frame lands") {
+    val out = java.nio.file.Files.createTempDirectory("riemann_tcp_fail").resolve("out")
+    val boom = org.apache.spark.sql.functions.udf((m: Double) =>
+      if (m == 666.0) throw new IllegalStateException("boom") else m)
+    val reg = new StreamRegistry(EngineCtx(testMode = false, custom = Map("boom" ->
+      (_ => (df: org.apache.spark.sql.DataFrame) =>
+        df.withColumn("metric", boom(org.apache.spark.sql.functions.col("metric")))))))
+    reg.add("sink", Node.fromJson(
+      s"""{"action":"custom","params":["boom"],
+         | "children":[{"action":"output-file","params":[{"path":"$out"}]}]}""".stripMargin),
+      default = true)
+    val srv = new RiemannTcpServer(reg, spark).start()
+    try {
+      val sock = new Socket("127.0.0.1", srv.boundPort)
+      val (ok, _) = sendFrame(sock, RiemannCodec.encodeMsg(Seq(rev(1.0, 1 * S, "a"), rev(666.0, 2 * S, "a"))))
+      assert(ok.contains(false))
+      // no part file, no staging directory
+      assert(java.nio.file.Files.list(out).count() == 0)
+      val (ok2, _) = sendFrame(sock, RiemannCodec.encodeMsg(Seq(rev(2.0, 3 * S, "a"))))
+      assert(ok2.contains(true))
+      assert(spark.read.json(out.toString).select("metric").collect().map(_.getDouble(0)).toSeq == Seq(2.0))
+      sock.close()
+    } finally srv.stop()
+  }
+
   test("TLS round-trip: mutual-TLS client delivers frames; plaintext client is rejected") {
     // throwaway PKI generated per-run (CA + server/client certs signed by
     // it) — mirrors the reference's key/cert/cacert config triple

@@ -238,4 +238,52 @@ class WebSocketSpec extends AnyFunSuite {
       c.close()
     } finally { cp.stop(); hub.stop() }
   }
+
+  test("publish frames and order are orderBy(time, eventId).toJSON's; a filtered pushed frame runs no Spark job") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    val schema = StructType(graft.model.Event.schema.fields.map(_.copy(nullable = true)))
+    def row(metric: java.lang.Double, time: java.lang.Long, id: java.lang.Long,
+            tags: Seq[String] = null, attrs: Map[String, String] = null): Row =
+      Row("h", "s", null, "critical", metric, time, 60.0, null, tags, attrs, id)
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      row(1.0, 30L, 1L, tags = Seq("a", "b")),
+      row(2.0, 10L, 5L, attrs = Map("k" -> "v", "x" -> "y")),
+      row(3.0, 10L, 2L),
+      row(null, 10L, null, tags = Nil),
+      row(5.0, null, 9L, attrs = Map.empty),
+      row(6.0, 20L, 3L),
+      row(7.0, -5L, 4L)), schema)
+    val expected = df.orderBy("time", "eventId").toJSON.collect().toSeq
+    assert(WebSocketHub.orderedJson(df).toSeq == expected)
+    val filtered = df.filter(graft.conditions.Condition.parse(Seq(">", "metric", 1)).column)
+    assert(WebSocketHub.orderedJson(filtered).toSeq ==
+      filtered.orderBy("time", "eventId").toJSON.collect().toSeq)
+
+    // jobs by group; a later fence job orders the listener's view
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach(groups.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    def inGroup[T](g: String)(body: => T): T = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    try {
+      inGroup("ws-sorted")(filtered.orderBy("time", "eventId").toJSON.collect())
+      inGroup("ws-publish")(WebSocketHub.orderedJson(filtered))
+      inGroup("ws-fence")(spark.range(1).count())
+      val deadline = System.nanoTime() + 10000000000L
+      while (!groups.contains("ws-fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("ws-fence"))
+      assert(groups.contains("ws-sorted")) // the old sort did run a job
+      assert(!groups.contains("ws-publish"))
+    } finally sc.removeSparkListener(listener)
+
+    // a frame without the sort columns still fails analysis
+    intercept[org.apache.spark.sql.AnalysisException](WebSocketHub.orderedJson(df.drop("eventId")))
+  }
 }
