@@ -308,11 +308,9 @@ final class ControlPlane(registry: StreamRegistry, spark: SparkSession, port: In
   }
 
   private def pushEvents(name: String, events: Seq[Event]): Unit = {
-    val s = spark
-    import s.implicits._
     pushesTotal.incrementAndGet()
     eventsTotal.addAndGet(events.size.toLong)
-    val results = registry.push(s.createDataset(events).toDF(), name)
+    val results = registry.push(Event.frame(spark, events), name)
     // pubsub fan-out: channels the pushed streams published to reach any
     // attached websocket subscribers (reference websocket.clj:47-119)
     websockets.foreach(h => results.values.foreach(h.publish))

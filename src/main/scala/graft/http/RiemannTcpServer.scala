@@ -125,9 +125,7 @@ final class RiemannTcpServer(registry: StreamRegistry, spark: SparkSession,
       eventId = eventSeq.incrementAndGet())
 
   private def pushDefault(events: Seq[Event]): Unit = {
-    val s = spark
-    import s.implicits._
-    val results = registry.push(s.createDataset(events).toDF(), "default")
+    val results = registry.push(Event.frame(spark, events), "default")
     // same fan-out as the HTTP push route: publish! channels reach
     // attached websocket subscribers regardless of the ingest transport
     websockets.foreach(h => results.values.foreach(h.publish))

@@ -5,7 +5,9 @@ import graft.operators.{Analytics, Stateless, Windows}
 import graft.sinks.FileSink
 import graft.streaming.Streaming
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import scala.collection.mutable
 
@@ -960,6 +962,30 @@ object Engine {
       targets.foreach(t => interp(t, df, Nil, ctx, res, registry, depth))
     }
 
+  /** Single-partition rule for driver-local frames. A batch frame whose
+    * analyzed plan reads only `LocalRelation`s — rows built on the driver,
+    * like every pushed frame — comes back with a non-shuffling
+    * `Repartition(1)` above each such leaf. One partition satisfies any
+    * clustered distribution, so grouped and windowed operators downstream
+    * plan no exchange: a push's `by → window → output!` runs as one job of
+    * one stage and one task instead of a shuffle's two jobs, three stages
+    * and an AQE re-plan between them. Filters and projections still push
+    * through the coalesce and fold into the leaf (`ConvertToLocalRelation`).
+    * Any other frame — streaming, or reading a file or table anywhere — is
+    * returned unchanged. Applied only where a frame reaches a side-effecting
+    * writer (`output!`, `output-file`); taps, channels and the recorded
+    * sends keep the original frame, so a `publish!` subscriber's filter
+    * still evaluates on the driver without a job.
+    */
+  private[graft] def singlePartitionIfLocal(df: DataFrame): DataFrame =
+    if (df.isStreaming) df
+    else {
+      val plan = df.queryExecution.analyzed
+      if (!plan.collectLeaves().forall(_.isInstanceOf[LocalRelation])) df
+      else Bridge.ofPlan(df.sparkSession,
+        plan.transformUp { case l: LocalRelation => Repartition(1, shuffle = false, l) })
+    }
+
   // --------------------------------------------------------------------
 
   private def interp(rawNode: Node, df: DataFrame, keys: Seq[String], ctx: EngineCtx,
@@ -1057,7 +1083,7 @@ object Engine {
         else {
           val out = ctx.outputs.getOrElse(name,
             throw new IllegalArgumentException(s"Output $name not found"))
-          out(df)
+          out(singlePartitionIfLocal(df))
           res.outputSends += ((name, df))
         }
         recurse(df)
@@ -1070,7 +1096,7 @@ object Engine {
           m.get("date-pattern").map(pStr))
         if (!ctx.testMode) {
           if (df.isStreaming) res.streamingQueries += FileSink.writeStream(df, spec)
-          else FileSink.write(df, spec)
+          else FileSink.write(singlePartitionIfLocal(df), spec)
           res.sinks += ((spec, df))
         }
         recurse(df)

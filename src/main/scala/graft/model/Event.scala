@@ -1,6 +1,9 @@
 package graft.model
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** The engine's single data abstraction: a monitoring event.
   *
@@ -53,4 +56,18 @@ object Event {
     StructField("attributes", MapType(StringType, StringType)),
     StructField("eventId", LongType, nullable = false)
   ))
+
+  /** Events as a frame over [[schema]], with rows converted straight to
+    * the schema (no encoder derived per call): the plan is a bare
+    * `LocalRelation`, equal in schema and rows to
+    * `spark.createDataset(events).toDF()`. The serving path builds every
+    * pushed frame with it.
+    */
+  def frame(spark: SparkSession, events: Seq[Event]): DataFrame =
+    spark.createDataFrame(events.map(toRow).asJava, schema)
+
+  private def toRow(e: Event): Row =
+    Row(e.host.orNull, e.service.orNull, e.name.orNull, e.state.orNull,
+      e.metric.map(Double.box).orNull, e.time, e.ttl.map(Double.box).orNull,
+      e.description.orNull, e.tags, e.attributes, e.eventId)
 }

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import graft.ir.SinkSpec
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
@@ -13,6 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import java.util.UUID
+import scala.util.control.NonFatal
 
 /** JSON-lines file sink — the Spark-native form of the reference's `file`
   * output (`/root/reference/src/clojure/mirabelle/output/file.clj:10-50`):
@@ -22,17 +23,26 @@ import java.util.UUID
   * also makes the written data partition-prunable on re-read.
   *
   * [[write]] is an append-only protocol with one Spark job per call, not
-  * the Hadoop commit protocol of `df.write`: the tasks write their JSON
-  * lines under a hidden staging directory of the call,
-  * `<path>/_staging-<uuid>/`, one file per (task attempt × partition
-  * directory); once the job succeeded, the driver renames the files of the
-  * successful attempts into place and removes the staging directory. A call
-  * that fails anywhere removes its staging directory and any file it
-  * already renamed, then rethrows, so a failed (nacked) push leaves no rows.
-  * Calls never share a directory of their own, so concurrent appends into
-  * one path are safe. No `_SUCCESS` marker is written. A process that dies
-  * mid-call leaves its `_staging-*` directory behind; Spark's readers skip
-  * it (underscore prefix) and nothing sweeps it.
+  * the Hadoop commit protocol of `df.write`. Every call stages in one
+  * shared hidden directory, `<path>/_staging/`, created once and kept: its
+  * tasks write flat files there, one per (task attempt × partition
+  * directory), each named `<callId>-p<partition>-a<attempt>-<k>.json`
+  * after the call's random id. Once the job succeeded, the driver renames
+  * the files of the successful attempts into their partition directories
+  * as `part-<partition>-<callId>-a<attempt>.json`. In a `finally`, on
+  * success and failure alike, it deletes every staged file whose name
+  * starts with its call id, which also removes the files of failed task
+  * attempts. A call that fails anywhere also deletes the files it already
+  * renamed, and the emptied staging directory when no other call of the
+  * process is in flight, then rethrows, so a failed (nacked) push leaves
+  * no rows. No successful call creates or removes a directory of its own
+  * (partition directories aside, once each): on a local file system
+  * without native Hadoop each created file or directory forks a `chmod`,
+  * so a per-call directory cost milliseconds on every push. Calls own
+  * disjoint file names, so concurrent appends into one path are safe. No
+  * `_SUCCESS` marker is written. A process that dies mid-call leaves its
+  * staged files behind; Spark's readers skip them (underscore prefix) and
+  * no later call sweeps them, since it only deletes its own.
   *
   * Lines and directory names are what `df.write.partitionBy(...).json`
   * writes for the same frame: the data columns through `to_json`, the
@@ -57,6 +67,11 @@ object FileSink {
   private def partitionDir(name: String) =
     udf((value: String) => ExternalCatalogUtils.getPartitionPathString(name, value))
 
+  /** The hidden directory below the sink root that every call stages its
+    * files in, flat, each name prefixed with the call's id.
+    */
+  private val StagingDir = "_staging"
+
   /** `dir` below `parent`; the empty `dir` of an unpartitioned sink is `parent`. */
   private def under(parent: Path, dir: String): Path =
     if (dir.isEmpty) parent else new Path(parent, dir)
@@ -71,6 +86,25 @@ object FileSink {
     taskConf._2
   }
 
+  /** Calls of this process in flight, per staging directory. */
+  private val callsIn = scala.collection.mutable.HashMap[Path, Int]()
+
+  private def enter(staging: Path): Unit = callsIn.synchronized {
+    callsIn(staging) = callsIn.getOrElse(staging, 0) + 1
+  }
+
+  /** Ends a call. A failed call that was the last one in flight removes
+    * the staging directory when it is empty, so a failed first call leaves
+    * an empty sink directory; with no other call in flight, no task of
+    * this process is creating a file in it meanwhile.
+    */
+  private def leave(fs: FileSystem, staging: Path, failed: Boolean): Unit = callsIn.synchronized {
+    val left = callsIn(staging) - 1
+    if (left == 0) callsIn -= staging else callsIn(staging) = left
+    if (failed && left == 0)
+      try fs.delete(staging, false) catch { case NonFatal(_) => } // not empty: kept
+  }
+
   def write(df: DataFrame, spec: SinkSpec): Unit = {
     val (toWrite, partCols) = spec.datePattern match {
       case Some(p) => (df.withColumn("date", dateCol(p)), spec.partitionFields :+ "date")
@@ -80,9 +114,8 @@ object FileSink {
     val base = new Path(spec.path)
     val fs = base.getFileSystem(sc.hadoopConfiguration)
     val root = fs.makeQualified(base)
-    fs.mkdirs(root)
+    val staging = new Path(root, StagingDir)
     val callId = UUID.randomUUID().toString
-    val staging = new Path(root, s"_staging-$callId")
 
     val dir = concat_ws("/", partCols.map(c => partitionDir(c)(quoted(c).cast("string"))): _*)
     val data = struct(toWrite.columns.filterNot(partCols.contains).map(quoted).toIndexedSeq: _*)
@@ -91,42 +124,53 @@ object FileSink {
     val conf = taskConfFor(sc)
     val stagingUri = staging.toString
     val published = scala.collection.mutable.ArrayBuffer[Path]()
+    var failed = true
+    enter(staging)
     try {
+      fs.mkdirs(staging) // also the sink root; a no-op once both exist
       // the rows go straight from the plan to the writers: no Row
       // deserialization, and still one SQL execution that listeners see
       val files = SQLExecution.withNewExecutionId(qe, Some("FileSink.write")) {
         qe.toRdd.mapPartitions(writeTask(conf, stagingUri, callId)).collect()
       }
       files.map(_._1).distinct.foreach(d => fs.mkdirs(under(root, d)))
-      files.foreach { case (d, name) =>
+      files.foreach { case (d, staged, name) =>
         val dst = new Path(under(root, d), name)
-        if (!fs.rename(new Path(under(staging, d), name), dst))
-          throw new java.io.IOException(s"FileSink: could not rename $name into ${dst.getParent}")
+        if (!fs.rename(new Path(staging, staged), dst))
+          throw new java.io.IOException(s"FileSink: could not rename $staged into ${dst.getParent}")
         published += dst
       }
+      failed = false
     } catch {
       case e: Throwable =>
         published.foreach(p => fs.delete(p, false))
         throw e
     } finally {
-      // best effort: a staging directory left behind holds no published
-      // rows and readers skip it, so failing here must not fail the call
-      try fs.delete(staging, true) catch { case scala.util.control.NonFatal(_) => }
+      // sweep what the call left in the shared staging directory: files
+      // of failed task attempts, and on failure everything not renamed.
+      // Best effort: a staged file holds no published rows and readers
+      // skip it, so failing here must not fail the call.
+      try fs.listStatus(staging, (p: Path) => p.getName.startsWith(callId))
+        .foreach(f => fs.delete(f.getPath, false))
+      catch { case NonFatal(_) => }
+      leave(fs, staging, failed)
     }
   }
 
   /** One task attempt: rows (dir, json) arrive sorted by partition
-    * directory; each directory gets one file named after the attempt,
-    * under the staging directory. Returns the (directory, file name)
-    * pairs it wrote.
+    * directory; each directory gets one file, written flat into the
+    * shared staging directory as `<callId>-p<partition>-a<attempt>-<k>.json`.
+    * Returns (directory, staged name, final name) per file; the final
+    * name is `part-<partition>-<callId>-a<attempt>.json` in its directory.
     */
   private def writeTask(conf: Broadcast[SerializableConfiguration], staging: String,
-                        callId: String)(rows: Iterator[InternalRow]): Iterator[(String, String)] = {
+                        callId: String)(rows: Iterator[InternalRow]): Iterator[(String, String, String)] = {
     val ctx = TaskContext.get()
-    val name = f"part-${ctx.partitionId()}%05d-$callId-a${ctx.attemptNumber()}.json"
+    val (part, attempt) = (ctx.partitionId(), ctx.attemptNumber())
+    val name = f"part-$part%05d-$callId-a$attempt.json"
     val stagingDir = new Path(staging)
     val fs = stagingDir.getFileSystem(conf.value.value)
-    val written = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    val written = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
     var out: java.io.OutputStream = null
     var dir: UTF8String = null
     try rows.foreach { r =>
@@ -134,8 +178,9 @@ object FileSink {
       if (out == null || d != dir) {
         if (out != null) out.close()
         dir = d.clone() // the row's buffer is reused
-        out = fs.create(new Path(under(stagingDir, dir.toString), name), false)
-        written += ((dir.toString, name))
+        val staged = s"$callId-p$part-a$attempt-${written.size}.json"
+        out = fs.create(new Path(stagingDir, staged), false)
+        written += ((dir.toString, staged, name))
       }
       r.getUTF8String(1).writeTo(out)
       out.write('\n')

@@ -30,6 +30,14 @@ class FileSinkSpec extends AnyFunSuite {
   private def stagingDirs(root: Path): Seq[Path] =
     walk(root).filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("_staging-"))
 
+  /** Everything below the shared `<root>/_staging` directory: no file
+    * once a call returned, and never a subdirectory (calls stage flat).
+    */
+  private def staged(root: Path): Seq[Path] = {
+    val dir = root.resolve("_staging")
+    walk(dir).filterNot(_ == dir)
+  }
+
   /** Partition directory (relative to the sink root) → its sorted lines. */
   private def layout(root: Path): Map[String, Seq[String]] =
     partFiles(root).groupBy(p => root.relativize(p.getParent).toString).map { case (d, fs) =>
@@ -63,6 +71,8 @@ class FileSinkSpec extends AnyFunSuite {
     assert(got.keySet.contains("host=__HIVE_DEFAULT_PARTITION__/service=__HIVE_DEFAULT_PARTITION__/date=1970-01-01"))
     assert(got.values.map(_.size).sum == 7)
     assert(stagingDirs(ours).isEmpty)
+    assert(Files.isDirectory(ours.resolve("_staging")))
+    assert(staged(ours).isEmpty)
     assert(!Files.exists(ours.resolve("_SUCCESS")))
 
     // unpartitioned: one directory, the same lines
@@ -72,6 +82,7 @@ class FileSinkSpec extends AnyFunSuite {
     df.write.json(flatRef.toString)
     assert(layout(flat) == layout(flatRef))
     assert(layout(flat).keySet == Set(""))
+    assert(staged(flat).isEmpty)
   }
 
   test("an empty frame creates the sink directory and publishes no part file") {
@@ -82,6 +93,7 @@ class FileSinkSpec extends AnyFunSuite {
       assert(Files.isDirectory(out))
       assert(partFiles(out).isEmpty, fields)
       assert(stagingDirs(out).isEmpty, fields)
+      assert(staged(out).isEmpty, fields)
     }
   }
 
@@ -94,11 +106,15 @@ class FileSinkSpec extends AnyFunSuite {
       intercept[Exception](FileSink.write(df, out.toString, fields))
       assert(walk(out).filter(Files.isRegularFile(_)).isEmpty, fields)
       assert(stagingDirs(out).isEmpty, fields)
+      assert(staged(out).isEmpty, fields)
+      // a failed call with no other call in flight removes the emptied _staging
+      assert(!Files.exists(out.resolve("_staging")), fields)
     }
     val out = tmp("graft-fsink-fail-ir").resolve("out")
     val node = Node.fromJson(s"""{"action":"output-file","params":[{"path":"$out"}]}""")
     intercept[Exception](Engine.run(node, df, EngineCtx(testMode = false)))
     assert(walk(out).filter(Files.isRegularFile(_)).isEmpty)
+    assert(staged(out).isEmpty)
   }
 
   test("concurrent appends into one directory: 4 threads x 25 calls, every row once, no staging left") {
@@ -120,6 +136,7 @@ class FileSinkSpec extends AnyFunSuite {
       val ids = spark.read.json(out.toString).select("eventId").collect().map(_.getLong(0)).toSeq
       assert(ids.sorted == (1 to 300).map(_.toLong), fields)
       assert(stagingDirs(out).isEmpty, fields)
+      assert(staged(out).isEmpty, fields)
     }
   }
 }
