@@ -265,6 +265,8 @@ final class ControlPlane(registry: StreamRegistry, spark: SparkSession, port: In
                |graft_http_events_total ${eventsTotal.get()}
                |# TYPE graft_streams gauge
                |graft_streams ${registry.list.size}
+               |# TYPE graft_stream_compiles_total counter
+               |graft_stream_compiles_total ${registry.compiles}
                |""".stripMargin
           respondPlain(ex, 200, text)
         case _ => respond(ex, 404, """{"error":"not found"}""")

@@ -1,15 +1,19 @@
 package graft.ir
 
 import graft.conditions.Condition
+import graft.model.Event
 import graft.operators.{Analytics, Stateless, Windows}
 import graft.sinks.FileSink
 import graft.streaming.Streaming
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Repartition}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Engine context: test-mode gating and the user plugin registry.
   *
@@ -85,12 +89,25 @@ final class StreamResult {
     channels(name) = channels.get(name).map(_.unionAll(df)).getOrElse(df)
 }
 
-/** The IR interpreter: `Node => (DataFrame => DataFrame)` per action, plus
+/** The IR compiler: `Node => (DataFrame => DataFrame)` per action, plus
   * the tree walk — the Spark analog of the reference's closure compiler
   * (`stream.clj:23-57` + registry `action.clj:3037-3114`). Catalyst is the
-  * second compilation stage: the interpreter only *declares* the plan, so
+  * second compilation stage: compiling only *declares* the plan, so
   * chained IR actions fuse, push down and codegen exactly like hand-written
-  * DataFrame code — interpretation cost is per-QUERY, never per-row.
+  * DataFrame code — compile cost is per plan, never per row.
+  *
+  * A pipeline compiles to a tree of steps over a template input frame.
+  * The actions on [[ReplayList]] build only a plan, reading no data and no
+  * driver state, so they run once, at compile time; every step that has a
+  * side effect (`output!`, `output-file`, `publish!`, `tap`, `reinject!`,
+  * the other writers, custom actions and every action not on the list)
+  * runs per frame, in tree order. [[run]] compiles against its actual
+  * input and runs once: its plans are the interpreter's. A
+  * [[StreamRegistry]] compiles each stream once, over an empty placeholder
+  * `LocalRelation` with [[graft.model.Event.schema]], and each push swaps
+  * its rows into the placeholder leaf of the kept analyzed plans. The
+  * swapped plans are marked analyzed, so a push builds one Dataset per
+  * effect and runs no Catalyst analysis of its own.
   *
   * `by` is special-cased as in the reference (`stream.clj:38-44`): instead
   * of re-compiling the subtree per fork, the grouping keys are threaded
@@ -101,24 +118,29 @@ object Engine {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Run one pipeline over an input frame. `include` nodes (config-layer
-    * snippet reuse, `action.clj:2249-2277`) are expanded before
-    * interpretation.
+  /** Run one pipeline over an input frame: compile against the input,
+    * then run once. `include` nodes (config-layer snippet reuse,
+    * `action.clj:2249-2277`) are expanded before compiling.
     */
   def run(node: Node, input: DataFrame, ctx: EngineCtx = EngineCtx(),
-          registry: StreamRegistry = null): StreamResult = {
-    // expand ONCE: both the preflight walk and the interpreter consume
-    // the expanded tree (preflightWarnings expands only when handed a
-    // raw tree)
-    val expanded = Node.expandIncludes(node)
-    preflightWarnings(expanded).foreach(w => log.warn(s"pipeline preflight: $w"))
+          registry: StreamRegistry = null): StreamResult =
+    runExpanded(Node.expandIncludes(node), input, ctx, registry)
+
+  /** [[run]] of a pipeline whose includes are already expanded. */
+  private[ir] def runExpanded(expanded: Node, input: DataFrame, ctx: EngineCtx,
+                              registry: StreamRegistry): StreamResult = {
+    lint(expanded)
     val res = new StreamResult
-    interp(expanded, input, Nil, ctx, res, registry, depth = 0)
+    compile(expanded, input, Nil, new Compilation(ctx))(
+      new Run(res, registry, 0, null, null))
     drainReinjects(ctx, res, registry)
     res
   }
 
-  /** Composition lints run before interpretation — warnings for chains
+  private def lint(expanded: Node): Unit =
+    compositionWarnings(expanded).foreach(w => log.warn(s"pipeline preflight: $w"))
+
+  /** Composition lints run before compiling — warnings for chains
     * that are individually correct but compose into a known footgun.
     * Currently one rule: `split-by-hash` upstream of a decontamination
     * stage. Hash-splitting DOCUMENTS puts near-duplicates of the same
@@ -129,9 +151,11 @@ object Engine {
     * decontam is `cluster-split` (near-dup clusters atomic across the
     * fence); `dup-rate-estimate` is the cheap probe for whether a
     * corpus is duplicate-heavy enough to care. Pure function of the
-    * tree (spec-pinned); [[run]] logs each warning at WARN.
+    * tree (spec-pinned); every compile logs each warning at WARN.
     */
-  def preflightWarnings(node: Node): Seq[String] = {
+  def preflightWarnings(node: Node): Seq[String] = compositionWarnings(Node.expandIncludes(node))
+
+  private def compositionWarnings(expanded: Node): Seq[String] = {
     val decontam = Set("decontam-exact", "decontam-fuzzy", "decontam-overlap")
     def descendants(n: Node): Iterator[Node] =
       n.children.iterator.flatMap(c => Iterator.single(c) ++ descendants(c))
@@ -149,7 +173,7 @@ object Engine {
         } else Nil
       here ++ n.children.flatMap(walk)
     }
-    walk(Node.expandIncludes(node))
+    walk(expanded)
   }
 
   /** Static pipeline validation — the analog of the reference's per-action
@@ -951,15 +975,19 @@ object Engine {
       // no-target form sends back to the default streams)
       val targets: Seq[Node] = Option(registry) match {
         case Some(reg) =>
-          reg.get(name).map(Seq(_)).getOrElse {
-            val defaults = if (name == "default") reg.defaults.flatMap(reg.get) else Nil
+          reg.pipeline(name).map(Seq(_)).getOrElse {
+            val defaults = if (name == "default") reg.defaults.flatMap(reg.pipeline) else Nil
             if (defaults.nonEmpty) defaults
             else throw new IllegalArgumentException(s"reinject! into unknown stream '$name'")
           }
         case None =>
           throw new IllegalArgumentException(s"reinject! into unknown stream '$name'")
       }
-      targets.foreach(t => interp(t, df, Nil, ctx, res, registry, depth))
+      // a reinjected frame is interpreted: compiled against itself, run
+      // once — never bound into a template, so no plan nests a stream's
+      // template inside another (or its own)
+      targets.foreach(t => compile(t, df, Nil, new Compilation(ctx))(
+        new Run(res, registry, depth, null, null)))
     }
 
   /** Single-partition rule for driver-local frames. A batch frame whose
@@ -987,30 +1015,199 @@ object Engine {
     }
 
   // --------------------------------------------------------------------
+  // Compiling: a node tree becomes a tree of steps over a template frame.
 
-  private def interp(rawNode: Node, df: DataFrame, keys: Seq[String], ctx: EngineCtx,
-                     res: StreamResult, registry: StreamRegistry, depth: Int): Unit = {
-    // #secret params reveal at interpretation time for the routing ops
-    // handled RIGHT HERE (output-file paths, publish!/output! names,
-    // custom args, ...) — applyOp deep-unmasks again for the operator
-    // params it receives, which is idempotent. The Node TREE stays
-    // masked everywhere it is stored or rendered.
+  /** The actions a compiled stream builds once and replays on every push.
+    * Their builders use the plan alone: they read no data and no driver
+    * state while building, and read their input once. Routing: `sdo`,
+    * `async-queue!`, `by`, `salt`, `split`, `exception-stream`, `io`; the
+    * filter, transform, window and `coll-*` families. Left out, so built
+    * per frame: `expired` / `not-expired` (a self-join reads the input
+    * twice), `debug` / `info` / `error` (read the log level),
+    * `aggr-custom` (calls a user aggregator), the per-key scans, and every
+    * action a custom action of the same name shadows.
+    */
+  val ReplayList: Set[String] = Set(
+    "sdo", "async-queue!", "by", "salt", "split", "exception-stream", "io",
+    "where", "over", "under", "tagged-all",
+    "increment", "decrement", "scale", "with", "default", "sdissoc", "keep-keys",
+    "rename-keys", "tag", "untag", "sformat", "to-string", "to-base64",
+    "from-base64", "from-json", "extract", "iterate-on", "sflatten",
+    "fixed-time-window", "sum", "mean", "rate", "top", "bottom", "ratio", "ssort",
+    "coalesce", "project", "percentiles", "coll-increase",
+    "coll-mean", "coll-sum", "coll-count", "coll-rate", "coll-quotient", "coll-max",
+    "coll-min", "coll-top", "coll-bottom", "coll-sort", "coll-where",
+    "coll-percentiles")
+
+  /** One compile. `failed`: some node did not compile, and its step only
+    * rethrows the error — the result must not be kept.
+    */
+  private final class Compilation(val ctx: EngineCtx) {
+    var failed = false
+  }
+
+  /** What a compiled node does for one frame. */
+  private type Step = Run => Unit
+
+  /** One frame through a compiled pipeline: where its results go, and how
+    * a template becomes this frame. With `rows == null` the templates are
+    * the frames (a pipeline compiled against its own input); otherwise
+    * every leaf reading the placeholder's `data` reads `rows` instead.
+    */
+  private final class Run(val res: StreamResult, val registry: StreamRegistry, val depth: Int,
+                          placeholder: LocalRelation, rows: Seq[InternalRow]) {
+    def frame(template: DataFrame): DataFrame =
+      if (rows == null) template
+      else Bridge.ofAnalyzedPlan(template.sparkSession, template.queryExecution.analyzed.transformUp {
+        case l: LocalRelation if l.data eq placeholder.data => l.copy(data = rows)
+      })
+
+    /** This run over templates that already hold its rows. */
+    def interpreted: Run = if (rows == null) this else new Run(res, registry, depth, null, null)
+
+    /** The template of a frame built per frame from this run's rows: its
+      * analyzed plan with the rows' leaf swapped back to the placeholder.
+      * Defined only when the plan reads the rows once, through a leaf with
+      * the placeholder's attributes, and nothing but driver-local rows
+      * besides.
+      */
+    def template(out: DataFrame): Option[LogicalPlan] =
+      if (rows == null || rows.isEmpty || out.isStreaming) None
+      else {
+        var reads = 0
+        val plan = out.queryExecution.analyzed.transformUp {
+          case l: LocalRelation if l.data eq rows =>
+            reads += 1
+            if (l.output == placeholder.output) placeholder else l.copy(data = placeholder.data)
+        }
+        if (reads == 1 && plan.collectLeaves().forall(_.isInstanceOf[LocalRelation]) &&
+            plan.find(_ eq placeholder).nonEmpty) Some(plan)
+        else None
+      }
+  }
+
+  /** A stream compiled over its placeholder; see [[compileStream]]. */
+  private[ir] final class Compiled(val spark: SparkSession, placeholder: LocalRelation, root: Step) {
+    /** Run one pushed frame, given as the rows of its `LocalRelation`. */
+    def run(rows: Seq[InternalRow], ctx: EngineCtx, registry: StreamRegistry): StreamResult = {
+      val res = new StreamResult
+      root(new Run(res, registry, 0, placeholder, rows))
+      drainReinjects(ctx, res, registry)
+      res
+    }
+  }
+
+  /** Compile an include-expanded stream over an empty placeholder
+    * `LocalRelation` with [[graft.model.Event.schema]]. Returns the
+    * compiled stream and whether to keep it: a node that failed to
+    * compile makes every run rethrow its error at that node, and the next
+    * push compiles again.
+    */
+  private[ir] def compileStream(expanded: Node, spark: SparkSession,
+                                ctx: EngineCtx): (Compiled, Boolean) = {
+    lint(expanded)
+    // a fresh empty array: its wrapper is the placeholder's identity, kept
+    // by reference by every copy of the leaf in the plans built over it
+    val placeholder = LocalRelation(DataTypeUtils.toAttributes(Event.schema),
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(new Array[InternalRow](0)))
+    val c = new Compilation(ctx)
+    val root = compile(expanded, Bridge.ofPlan(spark, placeholder), Nil, c)
+    (new Compiled(spark, placeholder, root), !c.failed)
+  }
+
+  /** The rows of a frame a compiled stream can run: a batch frame that is
+    * a bare `LocalRelation` with [[graft.model.Event.schema]], as every
+    * frame built by [[graft.model.Event.frame]] is.
+    */
+  private[ir] def pushedRows(input: DataFrame): Option[Seq[InternalRow]] =
+    input.queryExecution.analyzed match {
+      case l: LocalRelation if !l.isStreaming && l.schema == Event.schema => Some(l.data)
+      case _ => None
+    }
+
+  /** Compile one node over its template input. A node that fails to
+    * compile (a bad param, an unknown field or output) becomes a step
+    * that rethrows, so a frame still runs every effect before it in tree
+    * order and then fails with the error interpretation raised there.
+    */
+  private def compile(node: Node, in: DataFrame, keys: Seq[String], c: Compilation): Step =
+    try compileNode(node, in, keys, c)
+    catch { case NonFatal(e) => c.failed = true; _ => throw e }
+
+  /** The children of `n` over `out`; a leaf records `out` as an output. */
+  private def subtree(n: Node, out: DataFrame, keys: Seq[String], c: Compilation): Step =
+    if (n.children.isEmpty) r => r.res.outputs += r.frame(out)
+    else {
+      val steps = n.children.map(compile(_, out, keys, c))
+      r => steps.foreach(_(r))
+    }
+
+  /** The children of a node whose output is built per frame. They compile
+    * against that output per frame — except when the output has a
+    * template ([[Run.template]]) equal to the previous one: then the
+    * children compiled over it are reused, so an identity custom action
+    * (a tracing marker, say) costs its call, not a compile of its subtree.
+    */
+  private def perFrameChildren(n: Node, keys: Seq[String],
+                               c: Compilation): (Run, DataFrame) => Unit =
+    if (n.children.isEmpty) (r, out) => r.res.outputs += out
+    else {
+      val kept = new java.util.concurrent.atomic.AtomicReference[(LogicalPlan, Step)]()
+      (r, out) => r.template(out) match {
+        case Some(plan) =>
+          val last = kept.get
+          val step =
+            if (last != null && last._1 == plan) last._2
+            else {
+              val sub = new Compilation(c.ctx)
+              val s = subtree(n, Bridge.ofPlan(out.sparkSession, plan), keys, sub)
+              if (!sub.failed) kept.set((plan, s))
+              s
+            }
+          step(r)
+        case None =>
+          subtree(n, out, keys, new Compilation(c.ctx))(r.interpreted)
+      }
+    }
+
+  private def compileNode(rawNode: Node, in: DataFrame, keys: Seq[String],
+                          c: Compilation): Step = {
+    // #secret params reveal at compile time for the routing ops handled
+    // RIGHT HERE (output-file paths, publish!/output! names, custom
+    // args, ...) — applyOp deep-unmasks again for the operator params it
+    // receives, which is idempotent. The Node TREE stays masked
+    // everywhere it is stored or rendered.
     val n = rawNode.copy(params = rawNode.params.map(deepUnmask))
-    def recurse(out: DataFrame, newKeys: Seq[String] = keys): Unit =
-      if (n.children.isEmpty) res.outputs += out
-      else n.children.foreach(c => interp(c, out, newKeys, ctx, res, registry, depth))
+    val ctx = c.ctx
+    def children(out: DataFrame, newKeys: Seq[String] = keys): Step = subtree(n, out, newKeys, c)
+    // an effect on this node's frame, then the children over the same input
+    def effect(f: (Run, DataFrame) => Unit): Step = {
+      val next = if (n.children.isEmpty) null else children(in)
+      r => {
+        val df = r.frame(in)
+        f(r, df)
+        if (next == null) r.res.outputs += df else next(r)
+      }
+    }
+    // an effect suppressed in test mode (sinks and writers are io-gated)
+    def io(f: (Run, DataFrame) => Unit): Step = if (ctx.testMode) children(in) else effect(f)
+    // a builder run per frame on that frame
+    def perFrame(build: DataFrame => DataFrame): Step = {
+      val next = perFrameChildren(n, keys, c)
+      r => next(r, build(r.frame(in)))
+    }
 
     n.action match {
-      case "sdo" => recurse(df) // tee: every action already fans to all children
+      case "sdo" => children(in) // tee: every action already fans to all children
 
       case "async-queue!" => // hand subtree to a thread pool (action.clj:1680-1708)
         // Spark already schedules the whole DAG across executors, so the
         // reference's explicit thread-pool handoff has no work to do here;
         // the subtree simply continues (params = the queue name, ignored).
-        recurse(df)
+        children(in)
 
       case "by" => // per-key fork → grouping keys for the whole subtree
-        recurse(df, newKeys = pStrs(n.params.head))
+        children(in, newKeys = pStrs(n.params.head))
 
       case "salt" => // skew relief: widen downstream grouping with a salt key
         // {"buckets": N, "fields": [...]}: adds a deterministic __salt
@@ -1022,30 +1219,34 @@ object Engine {
         val m = n.params.headOption.map(pMap).getOrElse(Map.empty)
         val buckets = m.get("buckets").map(pLong).getOrElse(16L)
         val fields = m.get("fields").map(pStrs).getOrElse(Nil)
-        val basis = if (fields.nonEmpty) fields.map(col) else df.columns.toSeq.map(col)
-        val salted = df.withColumn("__salt", pmod(hash(basis: _*), lit(buckets.toInt)))
-        recurse(salted, newKeys = keys :+ "__salt")
+        val basis = if (fields.nonEmpty) fields.map(col) else in.columns.toSeq.map(col)
+        val salted = in.withColumn("__salt", pmod(hash(basis: _*), lit(buckets.toInt)))
+        children(salted, newKeys = keys :+ "__salt")
 
       case "split" => // first-matching-condition routing (action.clj:1109-1161)
         val conds = n.params.map(Condition.parse)
         require(n.children.size == conds.size || n.children.size == conds.size + 1,
           s"split: ${conds.size} conditions need ${conds.size} children (+1 default), got ${n.children.size}")
-        n.children.zipWithIndex.foreach { case (c, i) =>
-          interp(c, Stateless.splitBranch(conds, i)(df), keys, ctx, res, registry, depth)
+        val steps = n.children.zipWithIndex.map { case (ch, i) =>
+          compile(ch, Stateless.splitBranch(conds, i)(in), keys, c)
         }
+        r => steps.foreach(_(r))
 
       case "tap" | "test-action" => // test capture (action.clj:1724-1751;
         // test-action is the reference's internal recording child,
         // action.clj:391-402 — same semantics under a named tap)
-        if (ctx.testMode) res.recordTap(n.params.headOption.map(pStr).getOrElse("test"), df)
-        recurse(df)
+        if (!ctx.testMode) children(in)
+        else {
+          val name = n.params.headOption.map(pStr).getOrElse("test")
+          effect((r, df) => r.res.recordTap(name, df))
+        }
 
       case "publish!" => // in-proc pubsub channel (action.clj:1983-2005)
-        res.recordChannel(pStr(n.params.head), df)
-        recurse(df)
+        val name = pStr(n.params.head)
+        effect((r, df) => r.res.recordChannel(name, df))
 
       case "io" => // side-effect subtree, suppressed in test mode (action.clj:1710-1722)
-        if (!ctx.testMode) recurse(df)
+        if (ctx.testMode) _ => () else children(in)
 
       case "exception-stream" =>
         // Spark cannot try/catch per row inside a declarative plan
@@ -1055,38 +1256,41 @@ object Engine {
         // state="error", the rest to the first child.
         require(n.children.size == 2, "exception-stream needs [ok, error] children")
         val field = pStr(n.params.head)
-        interp(n.children.head, df.filter(col(field).isNotNull), keys, ctx, res, registry, depth)
-        interp(n.children(1),
-          df.filter(col(field).isNull).withColumn("state", lit("error")),
-          keys, ctx, res, registry, depth)
+        val ok = compile(n.children.head, in.filter(col(field).isNotNull), keys, c)
+        val error = compile(n.children(1),
+          in.filter(col(field).isNull).withColumn("state", lit("error")), keys, c)
+        r => { ok(r); error(r) }
 
-      case "reinject!" => // queued, drained by run() with a depth cap
+      case "reinject!" => // queued, drained after the run with a depth cap
         val target = n.params.headOption.map(pStr).getOrElse("default")
-        res.reinjects += ((target, df, depth + 1))
+        r => r.res.reinjects += ((target, r.frame(in), r.depth + 1))
 
       case "custom" if ctx.custom.contains("custom") =>
         // a registered action literally NAMED "custom" wins over the
         // indirection — the reference's merge order puts custom-actions
         // over builtins (stream.clj:29-34), and its own test fixtures
         // register :custom as an action name
-        recurse(ctx.custom("custom")(n.params)(df))
+        val fn = ctx.custom("custom")
+        perFrame(df => fn(n.params)(df))
 
       case "custom" => // user plugin indirection: params = [name, args...]
         val name = pStr(n.params.head)
         val fn = ctx.custom.getOrElse(name,
           throw new IllegalArgumentException(s"unknown custom action '$name'"))
-        recurse(fn(n.params.tail)(df))
+        perFrame(df => fn(n.params.tail)(df))
 
       case "output!" => // forward to a configured named output (action.clj:690-719)
         val name = pStr(n.params.head)
-        if (ctx.testMode) () // "Outputs are automatically discarded in test mode"
+        if (ctx.testMode) children(in) // "Outputs are automatically discarded in test mode"
         else {
           val out = ctx.outputs.getOrElse(name,
             throw new IllegalArgumentException(s"Output $name not found"))
-          out(singlePartitionIfLocal(df))
-          res.outputSends += ((name, df))
+          val local = singlePartitionIfLocal(in)
+          effect { (r, df) =>
+            out(r.frame(local))
+            r.res.outputSends += ((name, df))
+          }
         }
-        recurse(df)
 
       case "output-file" => // file sink (output/file.clj:10-50); io-gated
         val m = pMap(n.params.head)
@@ -1094,94 +1298,95 @@ object Engine {
           pStr(m("path")),
           m.get("fields").map(pStrs).getOrElse(Nil),
           m.get("date-pattern").map(pStr))
-        if (!ctx.testMode) {
-          if (df.isStreaming) res.streamingQueries += FileSink.writeStream(df, spec)
-          else FileSink.write(singlePartitionIfLocal(df), spec)
-          res.sinks += ((spec, df))
+        val local = singlePartitionIfLocal(in)
+        io { (r, df) =>
+          if (df.isStreaming) r.res.streamingQueries += FileSink.writeStream(df, spec)
+          else FileSink.write(r.frame(local), spec)
+          r.res.sinks += ((spec, df))
         }
-        recurse(df)
 
       case "output-bucketed" => // bucketed managed-table sink; io-gated
         val m = pMap(n.params.head)
-        if (!ctx.testMode)
+        io { (_, df) =>
           FileSink.writeBucketed(df, pStr(m("table")),
             pLong(m("buckets")).toInt, pStrs(m("keys")))
-        recurse(df)
+        }
 
       case "output-warc" => // WARC archive export; io-gated
         val m = pMap(n.params.head)
-        if (!ctx.testMode) {
+        io { (_, df) =>
           val recs = df.withColumn("__rec", graft.sources.Warc.recordBytes(
             col(pStr(m("uri"))), col(pStr(m("date"))),
             col(pStr(m("payload")))))
           graft.sources.Warc.writeArchives(recs, "__rec", pStr(m("path")),
             m.get("gzip").forall(_.asInstanceOf[Boolean]))
         }
-        recurse(df)
 
       case "output-tfrecord" => // TFRecord shard export; io-gated
         val m = pMap(n.params.head)
-        if (!ctx.testMode) {
+        io { (_, df) =>
           val recs = df.withColumn("__rec",
             graft.sources.TfRecord.frame(col(pStr(m("payload")))))
           graft.sources.TfRecord.writeShards(recs, "__rec", pStr(m("path")),
             m.get("gzip").exists(_.asInstanceOf[Boolean]))
         }
-        recurse(df)
 
       case "output-zordered" => // Z-order clustered parquet export; io-gated
         val m = pMap(n.params.head)
-        if (!ctx.testMode)
+        io { (_, df) =>
           graft.sources.Layout.writeZOrdered(df,
             pStrs(m("cols")).map(col), pStr(m("path")),
             pLong(m("shards")).toInt,
             m.get("bits").map(pLong(_).toInt).getOrElse(16))
-        recurse(df)
+        }
 
       case "output-hilbert" => // Hilbert-clustered parquet export; io-gated
         val m = pMap(n.params.head)
-        if (!ctx.testMode)
+        io { (_, df) =>
           graft.sources.Layout.writeHilbertOrdered(df,
             col(pStr(m("x"))), col(pStr(m("y"))), pStr(m("path")),
             pLong(m("shards")).toInt,
             m.get("bits").map(pLong(_).toInt).getOrElse(16))
-        recurse(df)
+        }
 
       case "output-bm25-index" => // persist the BM25 postings index; io-gated
         val m = pMap(n.params.head)
-        if (!ctx.testMode)
+        io { (_, df) =>
           graft.operators.Retrieval.buildBm25Index(df,
             pStr(m("id")), pStr(m("text")), pStr(m("path")),
             m.get("buckets").map(pLong(_).toInt).getOrElse(64))
-        recurse(df)
+        }
 
       case "append-bm25-index" => // delta-append to an existing index; io-gated
         val m = pMap(n.params.head)
-        if (!ctx.testMode)
+        io { (_, df) =>
           graft.operators.Retrieval.appendBm25Index(df,
             pStr(m("id")), pStr(m("text")), pStr(m("path")))
-        recurse(df)
+        }
 
       case "output-dedup-store" => // persist the dedup signature index; io-gated
         val m = pMap(n.params.head)
-        if (!ctx.testMode)
+        io { (_, df) =>
           graft.operators.IncrementalDedup.writeStore(df,
             pStr(m("text")), pStr(m("id")), pStr(m("path")),
             m.get("k").map(pLong(_).toInt).getOrElse(8),
             m.get("rows-per-band").map(pLong(_).toInt).getOrElse(2),
             m.get("buckets").map(pLong(_).toInt).getOrElse(64))
-        recurse(df)
+        }
 
       case "output-substring-store" => // persist the window-hash store; io-gated
         val m = pMap(n.params.head)
-        if (!ctx.testMode)
+        io { (_, df) =>
           graft.operators.SubstringStore.writeStore(df,
             pStr(m("text")), pStr(m("id")), pStr(m("path")),
             m.get("min-len").map(pLong(_).toInt).getOrElse(50),
             m.get("buckets").map(pLong(_).toInt).getOrElse(64))
-        recurse(df)
+        }
 
-      case _ => recurse(applyOp(n.action, n.params, keys, ctx)(df))
+      case action if ReplayList(action) && !ctx.custom.contains(action) =>
+        children(applyOp(action, n.params, keys, ctx)(in))
+
+      case action => perFrame(applyOp(action, n.params, keys, ctx)(_))
     }
   }
 
@@ -2606,10 +2811,27 @@ object Engine {
   * `stream.clj:129-143` reload, `stream.clj:276-296` dynamic add/remove).
   * Thread-safe; pipelines are plain [[Node]] data, so list/add/remove is a
   * control-plane operation, not a recompile of the engine.
+  *
+  * Each stream is compiled once ([[Engine]]), at the first push that can
+  * use the compiled form, and kept until the stream is re-added or
+  * removed; its includes are expanded when it is registered. A push runs
+  * against the stream entry it found when it started, so a re-add never
+  * mixes two pipelines in one push.
   */
 final class StreamRegistry(ctx: EngineCtx = EngineCtx()) {
-  private val streams = new scala.collection.concurrent.TrieMap[String, Node]()
-  private val defaultFlags = new scala.collection.concurrent.TrieMap[String, Boolean]()
+
+  /** One registered stream: its document, its pipeline with includes
+    * expanded at registration, and its compiled form once built. A failed
+    * expansion is not kept: it is retried, and fails again, at every use.
+    */
+  private final class Registered(val node: Node, val default: Boolean) {
+    private val expandedAtAdd = scala.util.Try(Node.expandIncludes(node))
+    def pipeline: Node = expandedAtAdd.getOrElse(Node.expandIncludes(node))
+    val compiled = new java.util.concurrent.atomic.AtomicReference[Engine.Compiled]()
+  }
+
+  private val streams = new scala.collection.concurrent.TrieMap[String, Registered]()
+  private val compileCount = new java.util.concurrent.atomic.AtomicLong()
 
   def add(name: String, pipeline: Node, default: Boolean = false): Unit = synchronized {
     // names arrive from JSON documents (the HTTP add-stream analog) and
@@ -2618,8 +2840,7 @@ final class StreamRegistry(ctx: EngineCtx = EngineCtx()) {
     require(name.nonEmpty && !name.contains('/') && !name.contains('\\') &&
       !name.contains("..") && name != "." ,
       s"invalid stream name '$name': must be non-empty, no path separators or '..'")
-    streams.put(name, pipeline)
-    defaultFlags.put(name, default)
+    streams.put(name, new Registered(pipeline, default))
   }
   /** Unregister a stream. Also forgets any directory-load record for the
     * name, so a later [[reloadFrom]] treats a still-present file as a
@@ -2633,27 +2854,29 @@ final class StreamRegistry(ctx: EngineCtx = EngineCtx()) {
     * resurrect a just-removed stream or drop a just-added dir record).
     */
   def remove(name: String): Unit = synchronized {
-    streams.remove(name); defaultFlags.remove(name)
+    streams.remove(name)
     dirDocs.remove(name); dirOrigin.remove(name)
   }
-  def get(name: String): Option[Node] = streams.get(name)
+  def get(name: String): Option[Node] = streams.get(name).map(_.node)
+
+  /** A stream's pipeline as it runs: includes expanded. */
+  private[ir] def pipeline(name: String): Option[Node] = streams.get(name).map(_.pipeline)
 
   /** Export a stream's full document as JSON (the HTTP API's
     * `get-stream`, which returns the stored config —
     * `handler.clj:64-72`); round-trips through [[addJson]].
     */
-  def getJson(name: String): Option[String] = streams.get(name).map { node =>
-    Node.toJson(Node("stream",
-      Seq(Map("name" -> name, "default" -> defaultFlags.getOrElse(name, false))),
-      Seq(node)))
-  }
+  def getJson(name: String): Option[String] = streams.get(name).map(s => Node.toJson(doc(name, s)))
+
+  private def doc(name: String, s: Registered): Node =
+    Node("stream", Seq(Map("name" -> name, "default" -> s.default)), Seq(s.node))
 
   def list: Seq[String] = streams.keySet.toSeq.sorted
 
   /** Streams flagged `default: true` — the ones that receive events not
     * addressed to a specific stream (reference `stream.clj:260-268`).
     */
-  def defaults: Seq[String] = defaultFlags.collect { case (n, true) => n }.toSeq.sorted
+  def defaults: Seq[String] = streams.collect { case (n, s) if s.default => n }.toSeq.sorted
 
   /** The reference's `push!` routing (`stream.clj:260-275`): input
     * addressed to `"default"` runs through every default-flagged stream;
@@ -2690,12 +2913,41 @@ final class StreamRegistry(ctx: EngineCtx = EngineCtx()) {
     name
   }
 
-  /** Run a registered pipeline over an input frame. */
+  /** Run a registered pipeline over an input frame. A pushed frame (see
+    * [[Engine.pushedRows]]) runs through the stream's compiled form; any
+    * other frame is compiled against and run once.
+    */
   def run(name: String, input: DataFrame): StreamResult = {
-    val node = get(name).getOrElse(
+    val s = streams.getOrElse(name,
       throw new IllegalArgumentException(s"unknown stream '$name'"))
-    Engine.run(node, input, ctx, this)
+    Engine.pushedRows(input) match {
+      case Some(rows) => compiled(s, input.sparkSession).run(rows, ctx, this)
+      case None       => Engine.runExpanded(s.pipeline, input, ctx, this)
+    }
   }
+
+  /** The stream's kept compiled form, compiling it when there is none
+    * for this session. A compile with a failed node is not kept.
+    */
+  private def compiled(s: Registered, spark: org.apache.spark.sql.SparkSession): Engine.Compiled = {
+    def kept = Option(s.compiled.get).filter(_.spark eq spark)
+    kept.getOrElse(s.synchronized {
+      kept.getOrElse {
+        val (c, keep) = Engine.compileStream(s.pipeline, spark, ctx)
+        if (keep) { s.compiled.set(c); compileCount.incrementAndGet() }
+        c
+      }
+    })
+  }
+
+  /** Stream compiles kept since this registry was made
+    * (`graft_stream_compiles_total`): one per stream and registration
+    * that was pushed to.
+    */
+  def compiles: Long = compileCount.get()
+
+  /** Registered streams that hold a compiled form. */
+  private[graft] def compiledStreams: Int = streams.values.count(_.compiled.get != null)
 
   /** Persist every registered stream as `<dir>/<name>.json` — the analog
     * of the reference's `add-stream` `:persist` flag, which writes the
@@ -2712,27 +2964,24 @@ final class StreamRegistry(ctx: EngineCtx = EngineCtx()) {
   def saveTo(dir: String): Unit = synchronized {
     val d = java.nio.file.Paths.get(dir)
     java.nio.file.Files.createDirectories(d)
-    streams.foreach { case (name, node) =>
+    streams.foreach { case (name, s) =>
       if (dirOrigin.get(name).exists(_ != normPath(dir))) {
         System.err.println(s"[registry] stream '$name' came from " +
           s"'${dirOrigin(name)}' — not persisted into '$dir' (its own file is the source of truth)")
-      } else persistOne(d, name, node)
+      } else persistOne(d, name, s)
     }
   }
 
-  private def persistOne(d: java.nio.file.Path, name: String, node: Node): Unit = {
+  private def persistOne(d: java.nio.file.Path, name: String, s: Registered): Unit = {
     // a #secret value serializes as its MASK (Node.toJson) — the
     // persisted copy cannot round-trip the secret. Warn loudly so the
     // operator keeps the EDN source of truth instead of silently
     // rebooting the stream with the literal mask string as the value.
-    if (hasSecret(node))
+    if (hasSecret(s.node))
       System.err.println(s"[registry] stream '$name' contains #secret values: " +
         "persisted copy is REDACTED and will not run correctly if reloaded — " +
         "keep the original EDN file as the source of truth")
-    val doc = Node("stream",
-      Seq(Map("name" -> name, "default" -> defaultFlags.getOrElse(name, false))),
-      Seq(node))
-    java.nio.file.Files.writeString(d.resolve(s"$name.json"), Node.toJson(doc))
+    java.nio.file.Files.writeString(d.resolve(s"$name.json"), Node.toJson(doc(name, s)))
   }
 
   private def hasSecret(n: Node): Boolean = StreamRegistry.hasSecret(n)

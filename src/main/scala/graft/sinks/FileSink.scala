@@ -2,7 +2,7 @@ package graft.sinks
 
 import graft.ir.SinkSpec
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.{SparkContext, TaskContext, TaskKilledException}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -129,9 +129,12 @@ object FileSink {
     try {
       fs.mkdirs(staging) // also the sink root; a no-op once both exist
       // the rows go straight from the plan to the writers: no Row
-      // deserialization, and still one SQL execution that listeners see
+      // deserialization, and still one SQL execution that listeners see.
+      // The job runs this object's task function, which captures no
+      // `this`: `collect` would hand the closure cleaner a lambda of
+      // `RDD`, whose class file it re-reads on every call.
       val files = SQLExecution.withNewExecutionId(qe, Some("FileSink.write")) {
-        qe.toRdd.mapPartitions(writeTask(conf, stagingUri, callId)).collect()
+        sc.runJob(qe.toRdd, writeTask(conf, stagingUri, callId) _).flatten
       }
       files.map(_._1).distinct.foreach(d => fs.mkdirs(under(root, d)))
       files.foreach { case (d, staged, name) =>
@@ -163,9 +166,8 @@ object FileSink {
     * Returns (directory, staged name, final name) per file; the final
     * name is `part-<partition>-<callId>-a<attempt>.json` in its directory.
     */
-  private def writeTask(conf: Broadcast[SerializableConfiguration], staging: String,
-                        callId: String)(rows: Iterator[InternalRow]): Iterator[(String, String, String)] = {
-    val ctx = TaskContext.get()
+  private def writeTask(conf: Broadcast[SerializableConfiguration], staging: String, callId: String)(
+      ctx: TaskContext, rows: Iterator[InternalRow]): Array[(String, String, String)] = {
     val (part, attempt) = (ctx.partitionId(), ctx.attemptNumber())
     val name = f"part-$part%05d-$callId-a$attempt.json"
     val stagingDir = new Path(staging)
@@ -177,15 +179,19 @@ object FileSink {
       val d = r.getUTF8String(0)
       if (out == null || d != dir) {
         if (out != null) out.close()
+        // a task of a failed call keeps running until it sees its kill,
+        // after the driver swept the call's files: it creates no file once
+        // killed, and never re-creates a staging directory the driver removed
+        if (ctx.isInterrupted()) throw new TaskKilledException("FileSink: call failed")
         dir = d.clone() // the row's buffer is reused
         val staged = s"$callId-p$part-a$attempt-${written.size}.json"
-        out = fs.create(new Path(stagingDir, staged), false)
+        out = fs.createFile(new Path(stagingDir, staged)).overwrite(false).build()
         written += ((dir.toString, staged, name))
       }
       r.getUTF8String(1).writeTo(out)
       out.write('\n')
     } finally if (out != null) out.close()
-    written.iterator
+    written.toArray
   }
 
   def write(df: DataFrame, path: String, partitionFields: Seq[String] = Nil,

@@ -49,6 +49,15 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** [[ofPlan]] of a plan that is already analyzed, for example an
+    * analyzed plan with a leaf swapped for one with the same output: the
+    * plan is marked analyzed, so the analyzer returns it as it is.
+    */
+  def ofAnalyzedPlan(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
+    ofPlan(spark, plan)
+  }
+
   /** Register a SQL function builder on a LIVE session (the runtime twin
     * of `SparkSessionExtensions.injectFunction`, which only applies at
     * session build time). Same triple shape as injectFunction.

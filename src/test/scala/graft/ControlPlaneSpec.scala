@@ -357,6 +357,32 @@ class ControlPlaneSpec extends AnyFunSuite {
     }
   }
 
+  test("metrics route: graft_stream_compiles_total is one compile per stream registration pushed to") {
+    withServer() { (_, base) =>
+      def compiles(): Long = {
+        val (code, text) = send("GET", s"$base/metrics")
+        assert(code == 200 && text.contains("# TYPE graft_stream_compiles_total counter"))
+        text.linesIterator.collectFirst {
+          case l if l.startsWith("graft_stream_compiles_total ") => l.stripPrefix("graft_stream_compiles_total ").toLong
+        }.get
+      }
+      val pipeline = """{"action":"where","params":[[">","metric",1]],"children":[{"action":"tap","params":["out"]}]}"""
+      def add(): Unit =
+        assert(send("POST", s"$base/api/v1/stream/s", s"""{"config":"${b64(pipeline)}"}""")._1 == 200)
+      def push(n: Int): Unit = (1 to n).foreach { i =>
+        assert(send("PUT", s"$base/api/v1/stream/s", s"""{"events":[{"metric":$i.5,"time":$i}]}""")._1 == 200)
+      }
+      assert(compiles() == 0)
+      add()
+      push(5)
+      assert(compiles() == 1)
+      add()
+      assert(compiles() == 1) // compiled at the first push, not at registration
+      push(3)
+      assert(compiles() == 2)
+    }
+  }
+
   test("error shapes: bad config is 400, unknown stream push is 400+, unknown route 404") {
     withServer() { (_, base) =>
       assert(send("POST", s"$base/api/v1/stream/x", """{"nope":1}""")._1 == 400)
