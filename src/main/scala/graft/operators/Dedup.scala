@@ -1482,10 +1482,10 @@ object Dedup {
       // probe and the next round's labels reuse it without a second join
       val joined = labels.as("l")
         .join(neigh.as("n"), col("l.id") === col("n.id"), "left")
-        .select(col("l.id").as("id"), col("l.cluster").as("__old"),
+        .select(col("l.id").as("id"), col("l.cluster").as("__prev"),
           least(col("l.cluster"), coalesce(col("__nl"), col("l.cluster"))).as("cluster"))
         .transform(Materialize.apply)
-      converged = joined.filter(col("cluster") =!= col("__old")).isEmpty
+      converged = joined.filter(col("cluster") =!= col("__prev")).isEmpty
       labels = joined.select("id", "cluster")
       it += 1
     }

@@ -50,6 +50,9 @@ object IncrementalDedup {
   /** Signature recipe pinned in the store's meta table. */
   final case class StoreMeta(k: Int, rowsPerBand: Int, nBuckets: Int)
 
+  private val Bands = BucketedStore.Dirs("bands", "bands_compact_tmp")
+  private val BandCols = Seq("id", "band", "sig", "sigbucket")
+
   private def bucketOf(sig: Column, nBuckets: Int): Column =
     pmod(Text.md5Hash64(sig), lit(nBuckets.toLong))
 
@@ -58,18 +61,6 @@ object IncrementalDedup {
     Dedup.bandTable(df, textCol, idCol, m.k, m.rowsPerBand)
       .select(col("__id").as("id"), col("band"), col("sig"),
         bucketOf(col("sig"), m.nBuckets).as("sigbucket"))
-
-  private def writeBands(bands: DataFrame, path: String, nBuckets: Int,
-                         mode: String): Unit =
-    bands
-      // one writer per bucket: repartition ON the partition column so a
-      // bucket's rows land in one file per append, not one per task
-      .repartition(nBuckets, col("sigbucket"))
-      .write.mode(mode)
-      .option("parquet.bloom.filter.enabled#sig", "true")
-      .option("parquet.bloom.filter.expected.ndv#sig", "1000000")
-      .partitionBy("sigbucket")
-      .parquet(s"$path/bands")
 
   /** Create the store from an accepted corpus (overwrites `path`). */
   def writeStore(df: DataFrame, textCol: String, idCol: String, path: String,
@@ -90,98 +81,56 @@ object IncrementalDedup {
         .toDF("k", "rows_per_band", "n_buckets")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
     }
-    writeBands(bandsWithBucket(df, textCol, idCol, meta), path, nBuckets, "overwrite")
+    BucketedStore.write(bandsWithBucket(df, textCol, idCol, meta), s"$path/bands",
+      "sigbucket", Some("sig"), nBuckets, "overwrite")
     Await.result(metaWrite, Duration.Inf)
   }
 
   /** Read the pinned recipe; fails loudly on a missing/empty store. */
   def readMeta(spark: SparkSession, path: String): StoreMeta = {
-    val rows = spark.read.parquet(s"$path/meta")
-      .select(col("k").cast("long"), col("rows_per_band").cast("long"),
-        col("n_buckets").cast("long")).collect()
-    require(rows.length == 1, s"readMeta: expected 1 meta row at $path, got ${rows.length}")
-    val r = rows.head
+    val r = BucketedStore.meta(spark, path, "k", "rows_per_band", "n_buckets")
     StoreMeta(r.getLong(0).toInt, r.getLong(1).toInt, r.getLong(2).toInt)
   }
 
   /** Append an already-accepted frame's signatures (same recipe). */
   def appendToStore(df: DataFrame, textCol: String, idCol: String,
-                    path: String): Unit = {
-    val meta = readMeta(df.sparkSession, path)
-    writeBands(bandsWithBucket(df, textCol, idCol, meta), path, meta.nBuckets, "append")
+                    path: String): Unit =
+    appendToStore(df, textCol, idCol, path, readMeta(df.sparkSession, path))
+
+  private def appendToStore(df: DataFrame, textCol: String, idCol: String,
+                            path: String, meta: StoreMeta): Unit = {
+    BucketedStore.recover(df.sparkSession, path, Bands)
+    BucketedStore.write(bandsWithBucket(df, textCol, idCol, meta), s"$path/bands",
+      "sigbucket", Some("sig"), meta.nBuckets, "append")
   }
 
   /** All stored band rows: the base `bands/` layout plus any streaming
     * `delta_bands/batch=N/` appends — excluding `excludeBatch` so a
     * REPLAYED micro-batch never collides with its own signatures (the
-    * exactly-once linchpin of [[dedupDeltaStream]]).
+    * exactly-once linchpin of [[dedupDeltaStream]]). Repairs a
+    * half-finished [[compactStore]] first ([[BucketedStore.recover]]).
     */
-  /** Repair a half-finished [[compactStore]] swap — the
-    * [[SubstringStore.recoverCompaction]] rules: a live `bands/` makes
-    * `bands_old`/`bands_compact_tmp` leftovers stale (swept); a missing
-    * `bands/` with `bands_old/` present means the crash hit between the
-    * two renames — rename the old image back (its `delta_bands` were
-    * not yet deleted, so verdicts are unchanged).
-    */
-  private[operators] def recoverCompaction(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$path/bands")
-    val oldDir = new org.apache.hadoop.fs.Path(s"$path/bands_old")
-    val tmpDir = new org.apache.hadoop.fs.Path(s"$path/bands_compact_tmp")
-    if (fs.exists(live)) {
-      if (fs.exists(oldDir)) fs.delete(oldDir, true)
-      if (fs.exists(tmpDir)) fs.delete(tmpDir, true)
-    } else if (fs.exists(oldDir)) {
-      require(fs.rename(oldDir, live),
-        s"recoverCompaction: rename $oldDir -> $live failed")
-      if (fs.exists(tmpDir)) fs.delete(tmpDir, true)
-    }
-    ()
-  }
-
   private def readBands(spark: SparkSession, path: String,
-                        excludeBatch: Option[Long]): DataFrame = {
-    recoverCompaction(spark, path)
-    val base = spark.read.parquet(s"$path/bands")
-    val deltaDir = new org.apache.hadoop.fs.Path(s"$path/delta_bands")
-    val fs = deltaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(deltaDir)) base
-    else {
-      val deltas = spark.read.parquet(s"$path/delta_bands")
-        .filter(excludeBatch.map(b => col("batch") =!= b).getOrElse(lit(true)))
-        .select("id", "band", "sig", "sigbucket")
-      base.unionByName(deltas)
-    }
-  }
-
-  /** The store scan pruned to the delta's touched sig buckets (a
-    * driver-side list of at most nBuckets values, independent of both
-    * corpus and delta size).
-    */
-  private def prunedStore(spark: SparkSession, path: String,
-                          touched: Array[Long],
-                          excludeBatch: Option[Long]): DataFrame =
-    readBands(spark, path, excludeBatch)
-      .filter(col("sigbucket").isin(touched: _*))
+                        excludeBatch: Option[Long]): DataFrame =
+    BucketedStore.read(spark, path, Bands, "delta_bands", excludeBatch, BandCols)
 
   /** Per delta id, the smallest colliding store id (`id`, `dup_of`) —
     * only ids WITH a collision appear.
     */
   def storeHits(delta: DataFrame, textCol: String, idCol: String,
-                path: String, excludeBatch: Option[Long] = None): DataFrame = {
-    val spark = delta.sparkSession
-    val meta = readMeta(spark, path)
+                path: String, excludeBatch: Option[Long] = None): DataFrame =
+    storeHits(delta, textCol, idCol, path, excludeBatch, readMeta(delta.sparkSession, path))
+
+  private def storeHits(delta: DataFrame, textCol: String, idCol: String, path: String,
+                        excludeBatch: Option[Long], meta: StoreMeta): DataFrame = {
     // the touched-bucket set rides the Materialize job as an observed
     // metric (≤ nBuckets values) instead of a separate distinct+collect
     // job over the blocks (guide §1.2; r17 — fallback job kept defensive)
     val dBandsSrc = bandsWithBucket(delta, textCol, idCol, meta)
       .observe("graft_dedup_touched", collect_set(col("sigbucket")).as("sb"))
     val dBands = Materialize(dBandsSrc)
-    val touched = dBandsSrc.queryExecution.observedMetrics.get("graft_dedup_touched")
-      .map(_.getSeq[Long](0).toArray)
-      .getOrElse(dBands.select(col("sigbucket")).distinct()
-        .collect().map(_.getLong(0)))
+    val touched = BucketedStore.touched(dBandsSrc, "graft_dedup_touched")(
+      dBands.select(col("sigbucket")).distinct().collect().map(_.getLong(0)))
     // collapse the pruned store slice to ONE row per (band, sig) BEFORE
     // the join: dup_of only needs the smallest colliding store id, and
     // min over a union of buckets == min over per-bucket minima — so a
@@ -191,7 +140,8 @@ object IncrementalDedup {
     // partition-pruned scan the probe already pays; without it the
     // store×delta bucket product is the same quadratic blow-up the
     // lshCandidates guard exists for, resurfacing in the probe join.
-    val owners = prunedStore(spark, path, touched, excludeBatch)
+    val owners = readBands(delta.sparkSession, path, excludeBatch)
+      .filter(col("sigbucket").isin(touched: _*))
       .groupBy(col("band"), col("sig")).agg(min(col("id")).as("__owner"))
     owners.as("s")
       .join(dBands.as("d"),
@@ -218,10 +168,15 @@ object IncrementalDedup {
   def dedupDeltaAudited(delta: DataFrame, textCol: String, idCol: String,
                         path: String, update: Boolean = false,
                         excludeBatch: Option[Long] = None,
-                        cap: Dedup.BucketCap = Dedup.BucketCap.Auto()): (DataFrame, Option[Dedup.LshAudit]) = {
-    val spark = delta.sparkSession
-    val meta = readMeta(spark, path)
-    val hits = Materialize(storeHits(delta, textCol, idCol, path, excludeBatch))
+                        cap: Dedup.BucketCap = Dedup.BucketCap.Auto()): (DataFrame, Option[Dedup.LshAudit]) =
+    dedupDeltaAudited(delta, textCol, idCol, path, update, excludeBatch, cap,
+      readMeta(delta.sparkSession, path))
+
+  private def dedupDeltaAudited(delta: DataFrame, textCol: String, idCol: String,
+                                path: String, update: Boolean, excludeBatch: Option[Long],
+                                cap: Dedup.BucketCap,
+                                meta: StoreMeta): (DataFrame, Option[Dedup.LshAudit]) = {
+    val hits = Materialize(storeHits(delta, textCol, idCol, path, excludeBatch, meta))
     val rest = delta.join(hits.select(col(idCol)), Seq(idCol), "left_anti")
     // within-delta stage under the same default guard as the batch LSH
     // family: a boilerplate-heavy shard (one crawl day of parked
@@ -247,7 +202,7 @@ object IncrementalDedup {
     if (update) {
       val kept = delta.join(
         out.filter(col("status") === "kept").select(col(idCol)), Seq(idCol))
-      appendToStore(kept, textCol, idCol, path)
+      appendToStore(kept, textCol, idCol, path, meta)
     }
     (out, audit)
   }
@@ -273,18 +228,15 @@ object IncrementalDedup {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val meta = readMeta(spark, storePath)
-        val verdicts = dedupDelta(batch, textCol, idCol, storePath,
-          update = false, excludeBatch = Some(batchId))
+        val meta = readMeta(batch.sparkSession, storePath)
+        val verdicts = dedupDeltaAudited(batch, textCol, idCol, storePath,
+          false, Some(batchId), Dedup.BucketCap.Auto(), meta)._1
         val kept = batch.join(
           verdicts.filter(col("status") === "kept").select(col(idCol)), Seq(idCol))
           .transform(Materialize.apply)
         kept.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        bandsWithBucket(kept, textCol, idCol, meta)
-          .repartition(meta.nBuckets, col("sigbucket"))
-          .write.mode("overwrite").partitionBy("sigbucket")
-          .parquet(s"$storePath/delta_bands/batch=$batchId")
+        BucketedStore.write(bandsWithBucket(kept, textCol, idCol, meta),
+          s"$storePath/delta_bands/batch=$batchId", "sigbucket", None, meta.nBuckets, "overwrite")
         ()
       }
       .start()
@@ -294,36 +246,20 @@ object IncrementalDedup {
     * probe's file count bounded as batches accumulate. Verdicts are
     * unchanged by construction (the probe reads the union either way);
     * run it between streaming sessions, never concurrently with one.
-    * Crash safety: stage-tmp → rename live ASIDE (`bands_old`) → rename
-    * tmp in → delete deltas → delete old, with [[recoverCompaction]]
-    * run by every read path — a crash at any step leaves a complete
-    * layout recoverable on the next probe (never a moment without a
-    * full `bands/` image on disk; leftover deltas re-fold idempotently).
+    * Crash safety is [[BucketedStore.swap]]'s, with the delta dirs
+    * deleted after the rename in: a crash at any step leaves a complete
+    * layout the next probe recovers (leftover deltas re-fold
+    * idempotently).
     */
   def compactStore(spark: SparkSession, path: String): Unit = {
-    recoverCompaction(spark, path)
+    BucketedStore.recover(spark, path, Bands)
     val meta = readMeta(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val deltaDir = new org.apache.hadoop.fs.Path(s"$path/delta_bands")
-    if (!fs.exists(deltaDir)) return // nothing to fold
-    val all = readBands(spark, path, excludeBatch = None)
-    val tmp = s"$path/bands_compact_tmp"
-    all.repartition(meta.nBuckets, col("sigbucket"))
-      .write.mode("overwrite")
-      .option("parquet.bloom.filter.enabled#sig", "true")
-      .option("parquet.bloom.filter.expected.ndv#sig", "1000000")
-      .partitionBy("sigbucket")
-      .parquet(tmp)
-    val bands = new org.apache.hadoop.fs.Path(s"$path/bands")
-    val oldDir = new org.apache.hadoop.fs.Path(s"$path/bands_old")
-    require(fs.rename(bands, oldDir),
-      s"compactStore: rename $bands -> $oldDir failed")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), bands),
-      s"compactStore: rename $tmp -> $bands failed")
-    fs.delete(deltaDir, true)
-    fs.delete(oldDir, true)
-    ()
+    val deltaDir = s"$path/delta_bands"
+    if (BucketedStore.exists(spark, deltaDir))
+      BucketedStore.swap(spark, path, Bands) { tmp =>
+        BucketedStore.write(readBands(spark, path, excludeBatch = None), tmp,
+          "sigbucket", Some("sig"), meta.nBuckets, "overwrite")
+      }(BucketedStore.delete(spark, deltaDir))
   }
 
   /** Output schema of [[dedupDelta]] keyed by the id column — the

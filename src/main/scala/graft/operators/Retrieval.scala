@@ -45,6 +45,8 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
+  private val Postings = BucketedStore.Dirs("postings", "postings_compact_tmp")
+
   /** Decimal-stable double sum: order-independent across partitions and
     * engines, then one double cast both sides replicate.
     */
@@ -202,26 +204,20 @@ object Retrieval {
     val statsF = Future {
       docs.agg(count(lit(1)), count_distinct(col(idCol))).head()
     }
-    postings(docs, idCol, textCol)
-      .select(col(idCol).as("id"), col("__dl").as("dl"), col("term"), col("tf"),
-        pmod(Text.md5Hash64(col("term")), lit(nBuckets.toLong)).as("termbucket"))
-      .repartition(nBuckets, col("termbucket"))
-      .write.mode("overwrite")
-      .option("parquet.bloom.filter.enabled#term", "true")
-      .option("parquet.bloom.filter.expected.ndv#term", "1000000")
-      .partitionBy("termbucket").parquet(s"$path/postings")
+    BucketedStore.write(
+      postings(docs, idCol, textCol)
+        .select(col(idCol).as("id"), col("__dl").as("dl"), col("term"), col("tf"),
+          pmod(Text.md5Hash64(col("term")), lit(nBuckets.toLong)).as("termbucket")),
+      s"$path/postings", "termbucket", Some("term"), nBuckets, "overwrite")
     // df and meta both derive from the just-written postings (one index
     // scan each, no corpus re-pass — the meta pass was a second full
     // TOKENIZE of the corpus before r16, guide §2.4) and are independent
     // of each other: overlap their jobs (guide §2.6)
     val dfWrite = Future {
-      spark.read.parquet(s"$path/postings")
-        .groupBy("termbucket", "term").agg(count(lit(1)).as("df"))
-        .repartition(nBuckets, col("termbucket"))
-        .write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#term", "true")
-        .option("parquet.bloom.filter.expected.ndv#term", "1000000")
-        .partitionBy("termbucket").parquet(s"$path/df")
+      BucketedStore.write(
+        spark.read.parquet(s"$path/postings")
+          .groupBy("termbucket", "term").agg(count(lit(1)).as("df")),
+        s"$path/df", "termbucket", Some("term"), nBuckets, "overwrite")
     }
     val tot = docStats(spark.read.parquet(s"$path/postings").select("id", "dl"))
     val stats = Await.result(statsF, Duration.Inf)
@@ -276,7 +272,7 @@ object Retrieval {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    recoverBm25Compaction(spark, path)
+    BucketedStore.recover(spark, path, Postings)
     // text-free delta count fused with the duplicate-id probe (see
     // buildBm25Index), launched before everything else: it only needs
     // the delta scan, so it overlaps the meta read AND the delta
@@ -284,9 +280,7 @@ object Retrieval {
     val statsF = Future {
       delta.agg(count(lit(1)), count_distinct(col(idCol))).head()
     }
-    val meta = spark.read.parquet(s"$path/meta")
-      .select(col("n_docs").cast("long"), col("total_len").cast("long"),
-        col("n_buckets").cast("long")).head()
+    val meta = BucketedStore.meta(spark, path, "n_docs", "total_len", "n_buckets")
     val (n0, tot0, nBuckets) = (meta.getLong(0), meta.getLong(1), meta.getLong(2).toInt)
     // the touched-bucket set rides the checkpoint job as an observed
     // metric (≤ nBuckets values) instead of a separate distinct+collect
@@ -305,29 +299,21 @@ object Retrieval {
     // (guide §1.2 / §2.6; r16 profile: ~50 sub-0.4 s jobs per
     // build+append+query cycle)
     val postingsAppend = Future {
-      post.repartition(nBuckets, col("termbucket"))
-        .write.mode("append")
-        .option("parquet.bloom.filter.enabled#term", "true")
-        .option("parquet.bloom.filter.expected.ndv#term", "1000000")
-        .partitionBy("termbucket").parquet(s"$path/postings")
+      BucketedStore.write(post, s"$path/postings", "termbucket", Some("term"),
+        nBuckets, "append")
     }
     val dfMerge = Future {
       val deltaDf = post.groupBy("termbucket", "term").agg(count(lit(1)).as("df"))
-      val touched = postSrc.queryExecution.observedMetrics.get("graft_bm25_touched")
-        .map(_.getSeq[Long](0).toArray)
-        .getOrElse(deltaDf.select("termbucket").distinct().collect().map(_.getLong(0)))
+      val touched = BucketedStore.touched(postSrc, "graft_bm25_touched")(
+        deltaDf.select("termbucket").distinct().collect().map(_.getLong(0)))
       val merged = spark.read.parquet(s"$path/df")
         .filter(col("termbucket").isin(touched: _*))
         .select(col("termbucket"), col("term"), col("df"))
         .union(deltaDf.select(col("termbucket"), col("term"), col("df")))
         .groupBy("termbucket", "term").agg(sum(col("df")).cast("long").as("df"))
         .localCheckpoint() // breaks lineage to the files the write replaces
-      merged.repartition(math.max(touched.length, 1), col("termbucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("parquet.bloom.filter.enabled#term", "true")
-        .option("parquet.bloom.filter.expected.ndv#term", "1000000")
-        .partitionBy("termbucket").parquet(s"$path/df")
+      BucketedStore.write(merged, s"$path/df", "termbucket", Some("term"),
+        math.max(touched.length, 1), "overwrite", dynamic = true)
     }
     // meta delta from the overlapped text-free count + the checkpointed
     // delta postings' dl column (was a second tokenize pass pre-r16)
@@ -354,59 +340,20 @@ object Retrieval {
     * per-append and `meta/` is untouched. Query results are identical
     * before and after by construction (same rows, same recipe).
     *
-    * Crash safety: stage to a temp dir, rename the live dir ASIDE
-    * (`postings_old`), rename the staged dir in, then delete the old —
-    * and every reader first runs [[recoverBm25Compaction]], so a crash
-    * at any step leaves a complete postings image recoverable on the
-    * next read (never a window with no `postings/` on disk).
+    * Crash safety is [[BucketedStore.swap]]'s, and every reader first
+    * runs [[BucketedStore.recover]], so a crash at any step leaves a
+    * complete postings image recoverable on the next read (never a
+    * window with no `postings/` on disk; the old image is row-identical
+    * to the staged one, so queries are unaffected either way).
     */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
                        path: String): Unit = {
-    recoverBm25Compaction(spark, path)
-    val nBuckets = spark.read.parquet(s"$path/meta")
-      .select(col("n_buckets").cast("long")).head().getLong(0).toInt
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = s"$path/postings_compact_tmp"
-    spark.read.parquet(s"$path/postings")
-      .repartition(nBuckets, col("termbucket"))
-      .write.mode("overwrite")
-      .option("parquet.bloom.filter.enabled#term", "true")
-      .option("parquet.bloom.filter.expected.ndv#term", "1000000")
-      .partitionBy("termbucket").parquet(tmp)
-    val postingsDir = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val oldDir = new org.apache.hadoop.fs.Path(s"$path/postings_old")
-    require(fs.rename(postingsDir, oldDir),
-      s"compactBm25Index: rename $postingsDir -> $oldDir failed")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), postingsDir),
-      s"compactBm25Index: rename $tmp -> $postingsDir failed")
-    fs.delete(oldDir, true)
-    ()
-  }
-
-  /** Repair a half-finished [[compactBm25Index]] swap (cheap `exists`
-    * checks when nothing is wrong): a live `postings/` makes any
-    * `postings_old`/`postings_compact_tmp` leftovers stale — sweep
-    * them; a MISSING `postings/` with `postings_old/` present means the
-    * crash hit between the two renames — rename the old image back
-    * (row-identical to the staged one, so queries are unaffected).
-    */
-  private[operators] def recoverBm25Compaction(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val oldDir = new org.apache.hadoop.fs.Path(s"$path/postings_old")
-    val tmpDir = new org.apache.hadoop.fs.Path(s"$path/postings_compact_tmp")
-    if (fs.exists(live)) {
-      if (fs.exists(oldDir)) fs.delete(oldDir, true)
-      if (fs.exists(tmpDir)) fs.delete(tmpDir, true)
-    } else if (fs.exists(oldDir)) {
-      require(fs.rename(oldDir, live),
-        s"recoverBm25Compaction: rename $oldDir -> $live failed")
-      if (fs.exists(tmpDir)) fs.delete(tmpDir, true)
-    }
-    ()
+    BucketedStore.recover(spark, path, Postings)
+    val nBuckets = BucketedStore.meta(spark, path, "n_buckets").getLong(0).toInt
+    BucketedStore.swap(spark, path, Postings) { tmp =>
+      BucketedStore.write(spark.read.parquet(s"$path/postings"), tmp, "termbucket",
+        Some("term"), nBuckets, "overwrite")
+    }(())
   }
 
   /** Query a persisted index: score-identical to [[bm25TopK]] on the
@@ -419,7 +366,7 @@ object Retrieval {
                      k: Int, k1: Double = 1.2, b: Double = 0.75,
                      idf: Long => Column => Column = rationalIdf): DataFrame = {
     require(k >= 1, s"queryBm25Index: k must be >= 1, got $k")
-    recoverBm25Compaction(spark, path)
+    BucketedStore.recover(spark, path, Postings)
     // the query-term tokenize/materialize does not depend on meta (the
     // bucket recipe is applied AFTER, as a cheap projection over the
     // materialized blocks), so it overlaps the meta read (guide §2.6)
@@ -438,21 +385,15 @@ object Retrieval {
         .observe("graft_bm25_qhashes", collect_set(Text.md5Hash64(col("term"))).as("h"))
       (Materialize(src), src)
     }
-    val metaRows = spark.read.parquet(s"$path/meta")
-      .select(col("n_docs").cast("long"), col("total_len").cast("long"),
-        col("n_buckets").cast("long")).collect()
-    require(metaRows.length == 1, s"queryBm25Index: expected 1 meta row at $path")
-    val (n, tot, nBuckets) =
-      (metaRows.head.getLong(0), metaRows.head.getLong(1), metaRows.head.getLong(2))
+    val meta = BucketedStore.meta(spark, path, "n_docs", "total_len", "n_buckets")
+    val (n, tot, nBuckets) = (meta.getLong(0), meta.getLong(1), meta.getLong(2))
     val avgdl = tot.toDouble / n
     val (qt, qtSrc) = Await.result(qtF, Duration.Inf)
     // distinct buckets: ≤ n_buckets driver-side values (pmod twin:
     // floorMod matches pmod for the positive bucket count)
-    val touched = qtSrc.queryExecution.observedMetrics.get("graft_bm25_qhashes")
-      .map(_.getSeq[Long](0).map(h => java.lang.Math.floorMod(h, nBuckets)).distinct.toArray)
-      .getOrElse(qt
-        .select(pmod(Text.md5Hash64(col("term")), lit(nBuckets)).as("termbucket"))
-        .distinct().collect().map(_.getLong(0)))
+    val touched = BucketedStore.touched(qtSrc, "graft_bm25_qhashes")(
+        qt.select(Text.md5Hash64(col("term"))).distinct().collect().map(_.getLong(0)))
+      .map(h => java.lang.Math.floorMod(h, nBuckets)).distinct
     val dfq = spark.read.parquet(s"$path/df")
       .filter(col("termbucket").isin(touched: _*))
       .join(broadcast(qt.select("term").distinct()), "term")

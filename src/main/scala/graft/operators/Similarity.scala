@@ -1032,7 +1032,7 @@ object Similarity {
       }.toSeq.toDF("mi", "j", "subvec").coalesce(1)
         .write.mode("overwrite").parquet(s"$path/codebooks")
     }
-    // one writer per cell (the writeBands discipline): without the
+    // one writer per cell (the BucketedStore.write discipline): without the
     // repartition every map task writes a file per cell it sees — up to
     // tasks × nCells small files per build, paid again by every pruned
     // query read
@@ -1068,7 +1068,7 @@ object Similarity {
     val model = loadIvfPqModel(spark, path)
     val assigned = ivfPqAssign(delta, idCol, vecCol, model.cents)
     ivfPqEncode(assigned, model)
-      // one file per touched cell per append (writeBands discipline) —
+      // one file per touched cell per append (BucketedStore.write discipline) —
       // daily deltas otherwise degrade the pruned read to a small-file
       // storm at tasks × cells files per append
       .repartition(model.cents.length, col("cell"))

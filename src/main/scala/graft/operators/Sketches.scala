@@ -305,10 +305,15 @@ object Sketches {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** Load a persisted sketch: `(buckets frame, gamma)`. */
+  private val Buckets = BucketedStore.Dirs("buckets", "buckets_tmp")
+
+  /** Load a persisted sketch: `(buckets frame, gamma)`, after repairing a
+    * half-finished [[appendDdSketch]] swap ([[recoverDdSketch]]).
+    */
   def readDdSketch(spark: org.apache.spark.sql.SparkSession,
                    path: String): (DataFrame, Double) = {
-    val gamma = spark.read.parquet(s"$path/meta").head.getDouble(0)
+    recoverDdSketch(spark, path)
+    val gamma = BucketedStore.meta(spark, path, "gamma").getDouble(0)
     (spark.read.parquet(s"$path/buckets"), gamma)
   }
 
@@ -318,48 +323,31 @@ object Sketches {
     * spec pins the contract). gamma comes from the store's own meta:
     * the caller cannot misbin a delta against a differently-bucketed
     * base. The delta pays one map-side-combined aggregate; the merge
-    * re-sums two bucket-count-sized frames (kilobytes) and swaps the
-    * store crash-safely (write tmp → rename live aside → rename tmp
-    * in → delete old; a reader or a crash mid-swap sees old or new,
-    * and [[recoverDdSketch]] finishes a half-swap).
+    * re-sums two bucket-count-sized frames (kilobytes) and replaces the
+    * store with [[BucketedStore.swap]] (a reader or a crash mid-swap
+    * sees old or new, and every read repairs a half-swap).
     */
   def appendDdSketch(df: DataFrame, valueCol: String, path: String): Unit = {
     val spark = df.sparkSession
     val (base, gamma) = readDdSketch(spark, path)
-    val merged = base.unionByName(ddBuckets(df, valueCol, gamma))
-      .groupBy("sign", "idx").agg(sum("cnt").as("cnt"))
-      .select(col("sign").cast("int"), col("idx"), col("cnt").cast("long"))
-      .coalesce(1)
-    merged.write.mode("overwrite").parquet(s"$path/buckets_tmp")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$path/buckets")
-    val old = new org.apache.hadoop.fs.Path(s"$path/buckets_old")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/buckets_tmp")
-    require(fs.rename(live, old), s"appendDdSketch: rename $live -> $old failed")
-    require(fs.rename(tmp, live), s"appendDdSketch: rename $tmp -> $live failed")
-    fs.delete(old, true)
+    BucketedStore.swap(spark, path, Buckets) { tmp =>
+      base.unionByName(ddBuckets(df, valueCol, gamma))
+        .groupBy("sign", "idx").agg(sum("cnt").as("cnt"))
+        .select(col("sign").cast("int"), col("idx"), col("cnt").cast("long"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(tmp)
+    }(())
   }
 
-  /** Repair a half-finished [[appendDdSketch]] swap: if `buckets/` is
-    * missing but `buckets_old/` exists, the crash hit between the two
-    * renames — restore the old layout (the append is then simply
-    * un-applied: re-run it). Stale `buckets_tmp`/`buckets_old` next to
-    * a live `buckets/` are swept. Idempotent.
+  /** Repair a half-finished [[appendDdSketch]] swap with
+    * [[BucketedStore.recover]]: if `buckets/` is missing but
+    * `buckets_old/` exists, the crash hit between the two renames — the
+    * old layout is restored (the append is then simply un-applied:
+    * re-run it). Stale `buckets_tmp`/`buckets_old` next to a live
+    * `buckets/` are swept. Idempotent; every read runs it.
     */
-  def recoverDdSketch(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$path/buckets")
-    val old = new org.apache.hadoop.fs.Path(s"$path/buckets_old")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/buckets_tmp")
-    if (!fs.exists(live) && fs.exists(old))
-      require(fs.rename(old, live), s"recoverDdSketch: rename $old -> $live failed")
-    if (fs.exists(live)) {
-      if (fs.exists(old)) fs.delete(old, true)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-    }
-  }
+  def recoverDdSketch(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    BucketedStore.recover(spark, path, Buckets)
 
   /** Serve quantiles straight from a persisted sketch. */
   def ddQuantilesStored(spark: org.apache.spark.sql.SparkSession, path: String,

@@ -41,6 +41,9 @@ object SubstringStore {
 
   final case class StoreMeta(minLen: Int, nBuckets: Int)
 
+  private val Hashes = BucketedStore.Dirs("hashes", "hashes_compact_tmp")
+  private val HashCols = Seq("hashbucket", "h", "owner")
+
   private def bucketOf(h: Column, nBuckets: Int): Column =
     pmod(h, lit(nBuckets.toLong))
 
@@ -53,15 +56,9 @@ object SubstringStore {
       .select(col("id"), (col("__p0") + 1).cast("long").as("p"), col("h"),
         bucketOf(col("h"), m.nBuckets).as("hashbucket"))
 
-  private def writeHashes(ws: DataFrame, path: String, nBuckets: Int,
-                          mode: String): Unit =
+  /** (hashbucket, h, owner) — each distinct hash with its smallest id. */
+  private def owners(ws: DataFrame): DataFrame =
     ws.groupBy("hashbucket", "h").agg(min(col("id")).as("owner"))
-      .repartition(nBuckets, col("hashbucket"))
-      .write.mode(mode)
-      .option("parquet.bloom.filter.enabled#h", "true")
-      .option("parquet.bloom.filter.expected.ndv#h", "1000000")
-      .partitionBy("hashbucket")
-      .parquet(s"$path/hashes")
 
   /** Create the store from an accepted corpus (overwrites `path`). */
   def writeStore(df: DataFrame, textCol: String, idCol: String, path: String,
@@ -81,39 +78,27 @@ object SubstringStore {
       Seq((minLen.toLong, nBuckets.toLong)).toDF("min_len", "n_buckets")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
     }
-    writeHashes(windows(df, textCol, idCol, meta), path, nBuckets, "overwrite")
+    BucketedStore.write(owners(windows(df, textCol, idCol, meta)), s"$path/hashes",
+      "hashbucket", Some("h"), nBuckets, "overwrite")
     Await.result(metaWrite, Duration.Inf)
   }
 
   /** Read the pinned window recipe; fails loudly on a missing store. */
   def readMeta(spark: SparkSession, path: String): StoreMeta = {
-    val rows = spark.read.parquet(s"$path/meta")
-      .select(col("min_len").cast("long"), col("n_buckets").cast("long"))
-      .collect()
-    require(rows.length == 1, s"readMeta: expected 1 meta row at $path, got ${rows.length}")
-    StoreMeta(rows.head.getLong(0).toInt, rows.head.getLong(1).toInt)
+    val r = BucketedStore.meta(spark, path, "min_len", "n_buckets")
+    StoreMeta(r.getLong(0).toInt, r.getLong(1).toInt)
   }
 
   /** All stored hash rows: the base `hashes/` layout plus any streaming
     * `delta_hashes/batch=N/` appends — excluding `excludeBatch` so a
     * REPLAYED micro-batch never probes its own hashes (the exactly-once
     * linchpin of [[cutDeltaStream]], same as
-    * [[IncrementalDedup.dedupDeltaStream]]'s band exclusion).
+    * [[IncrementalDedup.dedupDeltaStream]]'s band exclusion). Repairs a
+    * half-finished [[compactStore]] first ([[BucketedStore.recover]]).
     */
   private def readHashes(spark: SparkSession, path: String,
-                         excludeBatch: Option[Long]): DataFrame = {
-    recoverCompaction(spark, path)
-    val base = spark.read.parquet(s"$path/hashes")
-    val deltaDir = new org.apache.hadoop.fs.Path(s"$path/delta_hashes")
-    val fs = deltaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(deltaDir)) base
-    else {
-      val deltas = spark.read.parquet(s"$path/delta_hashes")
-        .filter(excludeBatch.map(b => col("batch") =!= b).getOrElse(lit(true)))
-        .select("hashbucket", "h", "owner")
-      base.select("hashbucket", "h", "owner").unionByName(deltas)
-    }
-  }
+                         excludeBatch: Option[Long]): DataFrame =
+    BucketedStore.read(spark, path, Hashes, "delta_hashes", excludeBatch, HashCols)
 
   /** Cut spans of a delta against the store: `(idCol, begin_tok,
     * end_tok, n_tokens)` — 1-based inclusive disjoint spans per delta
@@ -128,12 +113,18 @@ object SubstringStore {
     * over `partitionBy(h)`, which this operator deliberately avoids.
     */
   def probeDelta(delta: DataFrame, textCol: String, idCol: String,
-                 path: String, excludeBatch: Option[Long] = None): DataFrame = {
-    val spark = delta.sparkSession
-    val m = readMeta(spark, path)
-    val dw = Materialize(windows(delta, textCol, idCol, m))
-    val touched = dw.select("hashbucket").distinct().collect().map(_.getLong(0))
-    val store = readHashes(spark, path, excludeBatch)
+                 path: String, excludeBatch: Option[Long] = None): DataFrame =
+    probeDelta(delta, textCol, idCol, path, excludeBatch, readMeta(delta.sparkSession, path))
+
+  private def probeDelta(delta: DataFrame, textCol: String, idCol: String, path: String,
+                         excludeBatch: Option[Long], m: StoreMeta): DataFrame = {
+    // the touched-bucket set rides the Materialize job as an observed metric
+    val dwSrc = windows(delta, textCol, idCol, m)
+      .observe("graft_substr_touched", collect_set(col("hashbucket")).as("hb"))
+    val dw = Materialize(dwSrc)
+    val touched = BucketedStore.touched(dwSrc, "graft_substr_touched")(
+      dw.select("hashbucket").distinct().collect().map(_.getLong(0)))
+    val store = readHashes(delta.sparkSession, path, excludeBatch)
       .filter(col("hashbucket").isin(touched: _*))
       .select(col("h"))
     val hits = dw.join(store, Seq("h"), "left_semi")
@@ -165,22 +156,21 @@ object SubstringStore {
   def appendDelta(delta: DataFrame, textCol: String, idCol: String,
                   path: String): Unit = {
     val spark = delta.sparkSession
+    BucketedStore.recover(spark, path, Hashes)
     val m = readMeta(spark, path)
-    val dh = Materialize(windows(delta, textCol, idCol, m)
-      .groupBy("hashbucket", "h").agg(min(col("id")).as("owner")))
-    val touched = dh.select("hashbucket").distinct().collect().map(_.getLong(0))
+    val dhSrc = owners(windows(delta, textCol, idCol, m))
+      .observe("graft_substr_touched", collect_set(col("hashbucket")).as("hb"))
+    val dh = Materialize(dhSrc)
+    val touched = BucketedStore.touched(dhSrc, "graft_substr_touched")(
+      dh.select("hashbucket").distinct().collect().map(_.getLong(0)))
     val merged = spark.read.parquet(s"$path/hashes")
       .filter(col("hashbucket").isin(touched: _*))
-      .select(col("hashbucket"), col("h"), col("owner"))
-      .unionByName(dh.select(col("hashbucket"), col("h"), col("owner")))
+      .select(HashCols.map(col): _*)
+      .unionByName(dh.select(HashCols.map(col): _*))
       .groupBy("hashbucket", "h").agg(min(col("owner")).as("owner"))
       .localCheckpoint() // breaks lineage to the files the write replaces
-    merged.repartition(math.max(touched.length, 1), col("hashbucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("parquet.bloom.filter.enabled#h", "true")
-      .option("parquet.bloom.filter.expected.ndv#h", "1000000")
-      .partitionBy("hashbucket").parquet(s"$path/hashes")
+    BucketedStore.write(merged, s"$path/hashes", "hashbucket", Some("h"),
+      math.max(touched.length, 1), "overwrite", dynamic = true)
   }
 
   /** The continuously-ingesting cut loop — "remove already-seen text as
@@ -205,17 +195,12 @@ object SubstringStore {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val m = readMeta(spark, storePath)
-        val spans = probeDelta(batch, textCol, idCol, storePath,
-          excludeBatch = Some(batchId))
+        val m = readMeta(batch.sparkSession, storePath)
+        val spans = probeDelta(batch, textCol, idCol, storePath, Some(batchId), m)
         val cut = Materialize(Dedup.cutBySpans(batch, spans, textCol, idCol))
         cut.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        windows(cut, textCol, idCol, m)
-          .groupBy("hashbucket", "h").agg(min(col("id")).as("owner"))
-          .repartition(m.nBuckets, col("hashbucket"))
-          .write.mode("overwrite").partitionBy("hashbucket")
-          .parquet(s"$storePath/delta_hashes/batch=$batchId")
+        BucketedStore.write(owners(windows(cut, textCol, idCol, m)),
+          s"$storePath/delta_hashes/batch=$batchId", "hashbucket", None, m.nBuckets, "overwrite")
         ()
       }
       .start()
@@ -226,67 +211,25 @@ object SubstringStore {
     * unchanged by construction (the probe reads the union either way);
     * never run concurrently with a streaming session.
     *
-    * Crash safety: the swap is stage-tmp → rename live ASIDE
-    * (`hashes_old`) → rename tmp in → delete deltas → delete old, and
-    * every read path first runs [[recoverCompaction]], so a crash at
-    * ANY step leaves a store the next probe (or compaction) restores to
-    * a complete layout: either the original (`hashes_old` renamed
-    * back, deltas still present) or the compacted one (leftover
-    * `hashes_old`/`delta_hashes` are stale-but-idempotent — the
-    * min-owner merge over the union gives the same answer — and are
-    * swept). There is never a moment after which no complete `hashes`
-    * image exists on disk.
+    * Crash safety is [[BucketedStore.swap]]'s, with the delta dirs
+    * deleted after the rename in, and every read path first runs
+    * [[BucketedStore.recover]]: a crash at ANY step leaves a store the
+    * next probe (or compaction) restores to a complete layout — either
+    * the original (`hashes_old` renamed back, deltas still present) or
+    * the compacted one (leftover `hashes_old`/`delta_hashes` are
+    * stale-but-idempotent — the min-owner merge over the union gives
+    * the same answer — and are swept).
     */
   def compactStore(spark: SparkSession, path: String): Unit = {
-    recoverCompaction(spark, path)
+    BucketedStore.recover(spark, path, Hashes)
     val m = readMeta(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val deltaDir = new org.apache.hadoop.fs.Path(s"$path/delta_hashes")
-    if (!fs.exists(deltaDir)) return // nothing to fold
-    val tmp = s"$path/hashes_compact_tmp"
-    readHashes(spark, path, excludeBatch = None)
-      .groupBy("hashbucket", "h").agg(min(col("owner")).as("owner"))
-      .repartition(m.nBuckets, col("hashbucket"))
-      .write.mode("overwrite")
-      .option("parquet.bloom.filter.enabled#h", "true")
-      .option("parquet.bloom.filter.expected.ndv#h", "1000000")
-      .partitionBy("hashbucket")
-      .parquet(tmp)
-    val hashesDir = new org.apache.hadoop.fs.Path(s"$path/hashes")
-    val oldDir = new org.apache.hadoop.fs.Path(s"$path/hashes_old")
-    require(fs.rename(hashesDir, oldDir),
-      s"compactStore: rename $hashesDir -> $oldDir failed")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), hashesDir),
-      s"compactStore: rename $tmp -> $hashesDir failed")
-    fs.delete(deltaDir, true)
-    fs.delete(oldDir, true)
-    ()
-  }
-
-  /** Repair any half-finished [[compactStore]] swap — called by every
-    * read path (cheap `exists` checks when nothing is wrong). Rules:
-    * if `hashes/` exists, any `hashes_old`/`hashes_compact_tmp`
-    * leftovers are stale (the new image is complete; lingering
-    * `delta_hashes` re-fold idempotently) — delete them. If `hashes/`
-    * is MISSING and `hashes_old/` exists, the crash hit between the two
-    * renames — rename the old image back (its `delta_hashes` were not
-    * yet deleted, so nothing is lost) and drop the tmp stage.
-    */
-  private[operators] def recoverCompaction(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hashesDir = new org.apache.hadoop.fs.Path(s"$path/hashes")
-    val oldDir = new org.apache.hadoop.fs.Path(s"$path/hashes_old")
-    val tmpDir = new org.apache.hadoop.fs.Path(s"$path/hashes_compact_tmp")
-    if (fs.exists(hashesDir)) {
-      if (fs.exists(oldDir)) fs.delete(oldDir, true)
-      if (fs.exists(tmpDir)) fs.delete(tmpDir, true)
-    } else if (fs.exists(oldDir)) {
-      require(fs.rename(oldDir, hashesDir),
-        s"recoverCompaction: rename $oldDir -> $hashesDir failed")
-      if (fs.exists(tmpDir)) fs.delete(tmpDir, true)
-    }
-    ()
+    val deltaDir = s"$path/delta_hashes"
+    if (BucketedStore.exists(spark, deltaDir))
+      BucketedStore.swap(spark, path, Hashes) { tmp =>
+        BucketedStore.write(
+          readHashes(spark, path, excludeBatch = None)
+            .groupBy("hashbucket", "h").agg(min(col("owner")).as("owner")),
+          tmp, "hashbucket", Some("h"), m.nBuckets, "overwrite")
+      }(BucketedStore.delete(spark, deltaDir))
   }
 }

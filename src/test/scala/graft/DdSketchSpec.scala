@@ -133,4 +133,13 @@ class DdSketchSpec extends AnyFunSuite {
     Sketches.recoverDdSketch(spark, dir)
     assert(live.exists() && !new java.io.File(s"$dir/buckets_tmp").exists())
   }
+
+  test("every read repairs a half-finished swap without an explicit recover") {
+    val dir = java.nio.file.Files.createTempDirectory("ddspec3").toString
+    Sketches.writeDdSketch(Sketches.ddBuckets(df(values), "v", Gamma), dir, Gamma)
+    val before = Sketches.ddQuantilesStored(spark, dir, Seq(0.5)).collect().head.getDouble(1)
+    assert(new java.io.File(s"$dir/buckets").renameTo(new java.io.File(s"$dir/buckets_old")))
+    assert(Sketches.ddQuantilesStored(spark, dir, Seq(0.5)).collect().head.getDouble(1) == before)
+    assert(!new java.io.File(s"$dir/buckets_old").exists())
+  }
 }

@@ -281,4 +281,26 @@ class IncrementalDedupSpec extends AnyFunSuite {
       assert(out == Map(30L -> "dup_store", 31L -> "kept"))
     } finally rmrf(dir)
   }
+
+  test("append after a crash between the compaction renames keeps the base bands") {
+    // the crash leaves bands/ missing and bands_old/ present; the append
+    // must restore the old image before it writes, or the next probe
+    // sweeps bands_old as stale and every store doc is forgotten
+    val store = frame((0L until 25L).map(i => i -> doc(i.toInt)))
+    val dir = tmpDir()
+    try {
+      IncrementalDedup.writeStore(store, "text", "doc_id", dir, nBuckets = 8)
+      java.nio.file.Files.move(java.nio.file.Paths.get(s"$dir/bands"),
+        java.nio.file.Paths.get(s"$dir/bands_old"))
+      IncrementalDedup.appendToStore(frame(Seq(100L -> doc(100))), "text", "doc_id", dir)
+      val copies = frame((0L until 25L).map(i => (1000L + i) -> doc(i.toInt)) :+
+        (2000L -> doc(100)))
+      val out = IncrementalDedup.dedupDelta(copies, "text", "doc_id", dir)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getString(1), if (r.isNullAt(2)) -1L else r.getLong(2)))).toMap
+      assert(out == ((0L until 25L).map(i => (1000L + i) -> (("dup_store", i))) :+
+        (2000L -> (("dup_store", 100L)))).toMap)
+      assert(!new java.io.File(s"$dir/bands_old").exists)
+    } finally rmrf(dir)
+  }
 }

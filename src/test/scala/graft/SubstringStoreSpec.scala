@@ -142,4 +142,25 @@ class SubstringStoreSpec extends AnyFunSuite {
         "/does/not/exist/substr")
     }
   }
+
+  test("appendDelta after a crash between the compaction renames matches an uncrashed append") {
+    val dir = tmpDir()
+    try {
+      val base = frame(Seq(0L -> "alpha beta gamma delta epsilon"))
+      val delta = frame(Seq(7L -> "one two three four five six"))
+      val probe = frame(Seq(50L -> "alpha beta gamma delta", 51L -> "two three four five"))
+      def appendedSpans(store: String, crash: Boolean): Set[(Long, Long, Long)] = {
+        SubstringStore.writeStore(base, "text", "doc_id", store, minLen = 4, nBuckets = 8)
+        if (crash) java.nio.file.Files.move(java.nio.file.Paths.get(s"$store/hashes"),
+          java.nio.file.Paths.get(s"$store/hashes_old"))
+        SubstringStore.appendDelta(delta, "text", "doc_id", store)
+        SubstringStore.probeDelta(probe, "text", "doc_id", store)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      }
+      val want = appendedSpans(s"$dir/clean", crash = false)
+      assert(want.map(_._1) == Set(50L, 51L), s"$want")
+      assert(appendedSpans(s"$dir/crashed", crash = true) == want)
+      assert(!new java.io.File(s"$dir/crashed/hashes_old").exists)
+    } finally rmrf(dir)
+  }
 }
