@@ -77,6 +77,32 @@ object QueriesPipeline {
     s"($dot / (sqrt($na) * sqrt($nb)))"
   }
 
+  /** Delete a directory tree, children first; a missing path is a no-op. */
+  private def deleteTree(dir: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    if (java.nio.file.Files.exists(root)) {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
+      finally walk.close()
+    }
+  }
+
+  private val gateStoreDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  sys.addShutdownHook(gateStoreDirs.forEach(d => deleteTree(d)))
+
+  /** A fresh temp directory for a gate's persisted store, deleted with its
+    * contents at JVM exit. The gate's result still reads the store lazily
+    * when the caller forces it, so the gate cannot delete it itself
+    * without forcing the result first — an extra Spark job inside a
+    * timed gate body.
+    */
+  private def gateStoreDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    gateStoreDirs.add(dir)
+    dir
+  }
+
   /** Unrolled full-batch-GD CTE chain for the shared probe model
     * (classifier / el2n / cartography gates): from `base(vec_id, x, y)`,
     * `nn(n)` and `w0(w)` CTEs, produces `w1..w<epochs>` replaying
@@ -1635,16 +1661,15 @@ object QueriesPipeline {
           .select(col("id").as("doc_id"), col("cluster")).orderBy("doc_id")
       }
 
-      // same labels via large-star/small-star contraction — the
-      // diameter-independent path; one oracle gates both algorithms
-      // because the contract is identical (cluster = min reachable id)
+      // the same query as `dedup_clusters` (both IR names reach one
+      // operator); kept under this name, which the batch benchmark times
       register("dedup_clusters_star",
         s"""${lshPrefix.replaceFirst("WITH ", "WITH RECURSIVE ")},
            |$closure
            |SELECT doc_id, cluster FROM labels ORDER BY doc_id""".stripMargin) { (s, dir) =>
         val pairs = Dedup.lshCandidates(docs(s, dir), "text", "doc_id", k = k, rowsPerBand = 2,
           cap = Dedup.BucketCap.Unlimited)
-        Dedup.clusterPairsStar(pairs)
+        Dedup.clusterPairs(pairs)
           .select(col("id").as("doc_id"), col("cluster")).orderBy("doc_id")
       }
 
@@ -1888,7 +1913,7 @@ object QueriesPipeline {
               .select((col("doc_id") + 1000001).as("doc_id"), col("text")))
             .unionAll(d.filter(col("doc_id") % 20 === 1)
               .select((col("doc_id") + 2000001).as("doc_id"), col("text")))
-          val tmp = java.nio.file.Files.createTempDirectory("inc_dedup").toString
+          val tmp = gateStoreDir("inc_dedup")
           IncrementalDedup.writeStore(store, "text", "doc_id", tmp, nBuckets = 16)
           IncrementalDedup.dedupDelta(delta, "text", "doc_id", tmp)
             .select(col("doc_id"), col("status"),
@@ -2356,9 +2381,7 @@ object QueriesPipeline {
             d.filter(pmod(col("doc_id"), lit(2)) === 1), "text", "doc_id", tmp)
             .select("doc_id", "begin_tok", "end_tok", "n_tokens")
             .orderBy("doc_id", "begin_tok"))
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala
-          .toSeq.reverse.foreach(pp => java.nio.file.Files.deleteIfExists(pp))
+        deleteTree(tmp)
         out
       }
 
@@ -2625,7 +2648,7 @@ object QueriesPipeline {
       // same batch — score-identical to the in-one-go operator, so ONE
       // oracle gates both paths
       register("bm25_persisted", bm25Sql) { (s, dir) =>
-        val tmp = java.nio.file.Files.createTempDirectory("bm25_idx").toString
+        val tmp = gateStoreDir("bm25_idx")
         graft.operators.Retrieval.buildBm25Index(docs(s, dir), "doc_id", "text",
           tmp, nBuckets = 16)
         graft.operators.Retrieval.queryBm25Index(s, tmp, bm25Queries(s, dir),
@@ -2638,7 +2661,7 @@ object QueriesPipeline {
       // identically to build(A ∪ B), so the SAME oracle gates it
       register("bm25_incremental", bm25Sql) { (s, dir) =>
         val d = docs(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("bm25_inc").toString
+        val tmp = gateStoreDir("bm25_inc")
         graft.operators.Retrieval.buildBm25Index(
           d.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", "text",
           tmp, nBuckets = 16)
@@ -3270,9 +3293,7 @@ object QueriesPipeline {
           Similarity.queryOpqIndex(s, s"$tmp/idx", e.filter(col("vec_id") < 50),
             "vec_id", "embedding", topK)
             .orderBy("query_id", "rank"))
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala
-          .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
+        deleteTree(tmp)
         out
       }
     }
@@ -3455,9 +3476,7 @@ object QueriesPipeline {
           Similarity.queryIvfPqIndex(s, tmp, e.filter(col("vec_id") < 50),
             "vec_id", "embedding", topK, nProbe)
             .orderBy("query_id", "rank"))
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala
-          .toSeq.reverse.foreach(pp => java.nio.file.Files.deleteIfExists(pp))
+        deleteTree(tmp)
         out
       }
 
@@ -3476,9 +3495,7 @@ object QueriesPipeline {
           Similarity.queryIvfPqIndex(s, tmp, e.filter(col("vec_id") < 50),
             "vec_id", "embedding", topK, nProbe)
             .orderBy("query_id", "rank"))
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala
-          .toSeq.reverse.foreach(pp => java.nio.file.Files.deleteIfExists(pp))
+        deleteTree(tmp)
         out
       }
     }
@@ -5437,7 +5454,7 @@ object QueriesPipeline {
       // merge law, so the SAME oracle gates the whole loop
       register("dd_persisted", ddSql) { (s, dir) =>
         val d = docs(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("dd_sketch").toString
+        val tmp = gateStoreDir("dd_sketch")
         graft.operators.Sketches.writeDdSketch(
           graft.operators.Sketches.ddBuckets(
             d.filter(pmod(col("doc_id"), lit(2)) === 0), "n_chars", g), tmp, g)

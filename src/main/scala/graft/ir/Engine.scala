@@ -1697,12 +1697,10 @@ object Engine {
         writeCapAudit(m, df.sparkSession, audit)
         pairs
       }
-    // pair list (id1, id2) → (id, cluster) labels via connected components
-    case "dedup-cluster" =>
+    // pair list (id1, id2) → (id, cluster) labels via connected
+    // components; `dedup-cluster-star` is the older name of the same action
+    case "dedup-cluster" | "dedup-cluster-star" =>
       df => graft.operators.Dedup.clusterPairs(df)
-    // diameter-independent twin: large-star/small-star contraction
-    case "dedup-cluster-star" =>
-      df => graft.operators.Dedup.clusterPairsStar(df)
     // deterministic sampling / splitting (Sampling.scala)
     case "sample-hash" =>
       val m = pMap(params.head)

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.conditions.Condition
 import graft.model.Event
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -203,8 +203,8 @@ object Analytics {
     * either passes, drops, or rewrites `metric` — the shape of the
     * reference's throttle/ewma family (`action.clj:1163-1276`).
     *
-    * Unlike [[perKeyScan]] this never decodes the row: after the shuffle
-    * + external sort it walks the Tungsten rows directly, reading the two
+    * It never decodes the row into an `Event`: after the shuffle +
+    * external sort it walks the Tungsten rows directly, reading the two
     * fixed-width fields and the key columns lazily. The `tags` array and
     * `attributes` map stay as undecoded bytes (unless a key names an
     * attribute), so the per-row cost is two field reads instead of a full
@@ -223,8 +223,8 @@ object Analytics {
     val metricOrd = schema.fieldIndex("metric")
     val topLevel = schema.fieldNames.toSet
     val attrOrd = if (topLevel("attributes")) schema.fieldIndex("attributes") else -1
-    // Per key: Left(top-level ordinal) or Right(attribute name), mirroring
-    // perKeyScan's keyOf. Attribute keys scan the map's key array in place.
+    // Per key: Left(top-level ordinal) or Right(attribute name).
+    // Attribute keys scan the map's key array in place.
     // Only string-typed top-level columns may be read via getUTF8String —
     // a numeric ordinal would read garbage bytes from the UnsafeRow, so
     // reject it at plan construction instead.
@@ -293,43 +293,6 @@ object Analytics {
       }
     }
     Bridge.fromInternalRows(spark, rdd, schema)
-  }
-
-  /** Repartition by `keys`, sort each partition by (keys, time, eventId),
-    * then run a sequential stateful scan; `init` state is re-created at
-    * every key change.
-    */
-  def perKeyScan[S](df: DataFrame, keys: Seq[String])(
-      init: () => S)(step: (S, Event) => (S, Iterator[Event])): Dataset[Event] = {
-    warnKeyless("per-key-scan", keys)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = df.select(
-      col("host"), col("service"), col("name"), col("state"),
-      col("metric"), col("time"), col("ttl"), col("description"),
-      col("tags"), col("attributes"), col("eventId")).as[Event]
-    val sortCols = keys.map(col) ++ Seq(col("time"), col("eventId"))
-    val parted =
-      if (keys.isEmpty) ds.repartition(1).sortWithinPartitions(sortCols: _*)
-      else ds.repartition(keys.map(col): _*).sortWithinPartitions(sortCols: _*)
-    val keyOf: Event => Seq[Option[String]] = e => keys.map {
-      case "host"    => e.host
-      case "service" => e.service
-      case "name"    => e.name
-      case "state"   => e.state
-      case other     => e.attributes.get(other)
-    }
-    parted.mapPartitions { it =>
-      var curKey: Seq[Option[String]] = null
-      var state: S = null.asInstanceOf[S]
-      it.flatMap { e =>
-        val k = keyOf(e)
-        if (curKey == null || k != curKey) { curKey = k; state = init() }
-        val (s2, out) = step(state, e)
-        state = s2
-        out
-      }
-    }
   }
 
   /** `ewma-timeless` — EWMA with ratio r, seeded at 0, one output per

@@ -1162,7 +1162,7 @@ object Curation {
     * secondary-sort pattern: repartition on the group key, sort
     * partitions by (group, id), fold each partition with state reset at
     * group boundaries — one shuffle, no group ever materialized in
-    * memory, identical shape to `Analytics.perKeyScan`.
+    * memory, identical shape to `Analytics.perKeyMetricScan`.
     *
     * Output: (groupCol, idCol, tokensCol, bin, bin_fill) — `bin` is the
     * 0-based bin index within the group, `bin_fill` the bin's running

@@ -621,7 +621,7 @@ object Dedup {
     // bucket-SIZE histogram: (size, how many buckets have it) — distinct
     // sizes are bounded by the largest bucket, so this collect is
     // model-sized even when the bucket table itself is corpus-sized
-    val hist = bandedBuckets(sample, textCol, idCol, k, rowsPerBand, Text.md5HashMod)
+    val hist = bandTable(sample, textCol, idCol, k, rowsPerBand, Text.md5HashMod)
       .groupBy(col("band"), col("sig")).agg(count(lit(1)).as("__c"))
       .groupBy(col("__c")).agg(count(lit(1)).as("__n"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
@@ -678,15 +678,6 @@ object Dedup {
     hashed.groupBy("__id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Banded LSH bucket table for a corpus: one `(__id, band, sig)` row
-    * per band per document — the shared front half of [[lshCandidates]]
-    * (self-join) and [[crossCorpusCandidates]] (two-corpus join).
-    */
-  private def bandedBuckets(df: DataFrame, textCol: String, idCol: String,
-                            k: Int, rowsPerBand: Int,
-                            hashFn: Column => Column): DataFrame =
-    bandTable(df, textCol, idCol, k, rowsPerBand, hashFn)
-
   /** Public face of the banded bucket table — `(__id, band, sig)` rows,
     * one per band per document. The unit [[IncrementalDedup]] persists:
     * a stored corpus's band table IS its reusable dedup index.
@@ -735,18 +726,6 @@ object Dedup {
                     cap: BucketCap = BucketCap.Auto()): DataFrame =
     lshCandidatesAudited(df, textCol, idCol, k, rowsPerBand, hashFn, cap)._1
 
-  /** [[lshCandidates]] with the guard's account attached: returns the
-    * candidate pairs plus a one-row [[LshAudit]] when a guard was
-    * active (`None` for [[BucketCap.Unlimited]] — nothing can be
-    * excluded, and computing the histogram would cost an eager job the
-    * unguarded path never needed). Guarded modes materialize the band
-    * table anyway (it feeds the cap aggregate, the semi-join and both
-    * join sides), so the audit's histogram is one extra map-side-
-    * combined aggregate with a bucket-count-sized collect — and in
-    * [[BucketCap.Auto]] mode the same collect IS the cap resolution.
-    * Exclusions are logged at WARN so a production run surfaces the
-    * trade in-band even when the caller drops the audit.
-    */
   /** Re-spread the STREAM side of an expanding banded join when it is
     * under-split. AQE coalesces band tables by BYTES (a few MB of
     * `(band, sig, id)` rows → one or two partitions), the planner
@@ -784,22 +763,41 @@ object Dedup {
     else banded
   }
 
+  /** [[lshCandidates]] with the guard's account attached: returns the
+    * candidate pairs plus a one-row [[LshAudit]] when a guard was
+    * active (`None` for [[BucketCap.Unlimited]] — nothing can be
+    * excluded, and computing the histogram would cost an eager job the
+    * unguarded path never needed). Guarded modes materialize the band
+    * table anyway (it feeds the cap aggregate, the semi-join and both
+    * join sides), so the audit's histogram is one extra map-side-
+    * combined aggregate with a bucket-count-sized collect — and in
+    * [[BucketCap.Auto]] mode the same collect IS the cap resolution.
+    * Exclusions are logged at WARN so a production run surfaces the
+    * trade in-band even when the caller drops the audit.
+    */
   def lshCandidatesAudited(df: DataFrame, textCol: String, idCol: String,
                            k: Int = 8, rowsPerBand: Int = 2,
                            hashFn: Column => Column = Text.md5HashMod,
                            cap: BucketCap = BucketCap.Auto()): (DataFrame, Option[LshAudit]) = {
-    val banded0 = bandedBuckets(df, textCol, idCol, k, rowsPerBand, hashFn)
+    val banded0 = bandTable(df, textCol, idCol, k, rowsPerBand, hashFn)
     val (banded, audit) =
       cappedBandTable(banded0, Seq("band", "sig"), k / rowsPerBand, cap, "lshCandidates",
         spreadKept = true)
+    (bandSelfJoin(banded), audit)
+  }
+
+  /** The banded self-join every MinHash pair face shares: one
+    * `(id1, id2)` row, `id1 < id2`, per two ids that collide in any
+    * `(band, sig)` bucket.
+    */
+  private def bandSelfJoin(banded: DataFrame): DataFrame = {
     val l = banded.as("l")
     val r = banded.as("r")
-    val pairs = l.join(r,
+    l.join(r,
       col("l.band") === col("r.band") && col("l.sig") === col("r.sig") &&
         col("l.__id") < col("r.__id"))
       .select(col("l.__id").as("id1"), col("r.__id").as("id2"))
       .distinct()
-    (pairs, audit)
   }
 
   /** The CONNECTIVITY face of [[lshCandidatesAudited]] — for consumers
@@ -822,24 +820,18 @@ object Dedup {
     * emitted from each. Connectivity consumers (connected components)
     * are insensitive; dedupe with `.distinct()` if a distinct edge
     * list is needed (an extra exchange the main prune/split path
-    * deliberately does not pay — [[clusterPairsStar]] distincts its
-    * own edge union anyway).
+    * deliberately does not pay — [[clusterPairs]] distincts its own
+    * edge union anyway).
     */
   def lshCandidatesConnectivity(df: DataFrame, textCol: String, idCol: String,
                                 k: Int = 8, rowsPerBand: Int = 2,
                                 hashFn: Column => Column = Text.md5HashMod,
                                 cap: BucketCap = BucketCap.Auto()): (DataFrame, Option[LshAudit]) = {
-    val banded0 = bandedBuckets(df, textCol, idCol, k, rowsPerBand, hashFn)
+    val banded0 = bandTable(df, textCol, idCol, k, rowsPerBand, hashFn)
     val (banded, audit, stars) = cappedBandTableWithStars(banded0,
       Seq("band", "sig"), k / rowsPerBand, cap, "lshCandidates(connectivity)",
       starEdges = true, spreadKept = true)
-    val l = banded.as("l")
-    val r = banded.as("r")
-    val pairs = l.join(r,
-      col("l.band") === col("r.band") && col("l.sig") === col("r.sig") &&
-        col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id1"), col("r.__id").as("id2"))
-      .distinct()
+    val pairs = bandSelfJoin(banded)
     (stars.map(pairs.unionAll).getOrElse(pairs), audit)
   }
 
@@ -1079,14 +1071,7 @@ object Dedup {
       k, rowsPerBand)
     val (banded, audit) = cappedBandTable(banded0, Seq("band", "sig"),
       k / rowsPerBand, cap, "weightedLshCandidates")
-    val l = banded.as("l")
-    val r = banded.as("r")
-    val pairs = l.join(r,
-      col("l.band") === col("r.band") && col("l.sig") === col("r.sig") &&
-        col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id1"), col("r.__id").as("id2"))
-      .distinct()
-    (pairs, audit)
+    (bandSelfJoin(banded), audit)
   }
 
   /** Cross-corpus candidates under the MULTISET relation — the weighted
@@ -1207,11 +1192,11 @@ object Dedup {
                                    capRight: BucketCap = BucketCap.Auto())
       : (DataFrame, Option[LshAudit], Option[LshAudit]) = {
     val (l, auditL) = cappedBandTable(
-      bandedBuckets(left, textCol, idCol, k, rowsPerBand, hashFn),
+      bandTable(left, textCol, idCol, k, rowsPerBand, hashFn),
       Seq("band", "sig"), k / rowsPerBand, capLeft, "crossCorpusCandidates(left)",
       materializeUnlimited = false)
     val (r, auditR) = cappedBandTable(
-      bandedBuckets(right, textCol, idCol, k, rowsPerBand, hashFn),
+      bandTable(right, textCol, idCol, k, rowsPerBand, hashFn),
       Seq("band", "sig"), k / rowsPerBand, capRight, "crossCorpusCandidates(right)",
       materializeUnlimited = false)
     val pairs = l.as("l").join(r.as("r"),
@@ -1412,52 +1397,55 @@ object Dedup {
     * keep/drop decision when duplicates chain (A~B, B~C ⇒ {A,B,C} even if
     * A~C was never emitted).
     *
-    * Algorithm: iterative min-label propagation — each round every node
-    * takes the min of its own label and its neighbors' labels; fixpoint
-    * when a round changes nothing. Rounds = cluster diameter, and
-    * near-dup clusters are dense (LSH emits most in-cluster pairs), so
-    * 2–4 rounds in practice; `maxIters` caps pathological chains. Each
-    * round is one shuffle of the EDGE list (pairs, both directions — tiny
-    * next to the corpus); `localCheckpoint` truncates lineage so plans
-    * don't grow with iteration count. The driver only orchestrates and
-    * checks an `isEmpty` fixpoint probe per round — no edge data ever
-    * leaves the executors.
+    * The pair list is read ONCE: its undirected closure, self-loops kept
+    * (so an `(a, a)` pair still labels `a`), is the one materialized edge
+    * list every path below reads, and its edge count rides that job as an
+    * observed metric. `pairs` is usually the unmaterialized banded LSH
+    * self-join, so a second consumer would re-run the whole candidate
+    * pipeline (tokenize → minhash → band → join).
     *
-    * Output: one row per distinct id in `pairs`, columns (`id`, `cluster`).
+    * Small graphs with integral ids — the common case: LSH pair output is
+    * tiny next to the corpus — take one single-task union-find
+    * ([[unionFindLabels]]), which already emits one row per id: per-round
+    * job scheduling would cost more than the compute. Larger graphs and
+    * non-integral ids (string hosts from [[Snapshots.mirrorPairs]]) run
+    * alternating large-star / small-star contraction (Kiveris, Lattanzi,
+    * Mirrokni, Rastogi, Vassilvitskii, "Connected Components in MapReduce
+    * and Beyond", SoCC 2014). Min-label propagation would pay one round
+    * per hop of component DIAMETER: a duplicate chain a~b~c~…~z of length
+    * 10⁶ (real in boilerplate-heavy web corpora, where page N near-dups
+    * page N+1) needs 10⁶ shuffles. Star contraction instead rewires every
+    * node to its neighborhood minimum each round, halving-or-better the
+    * height of every tree — O(log² n) rounds worst case, ≤ ~log₂(n) in
+    * practice — so the round count depends on component SIZE's
+    * logarithm, never its shape.
+    *
+    * Per round: large-star connects every node's strictly-larger
+    * neighbors to its neighborhood min (one groupBy on the node = one
+    * edge-list shuffle, then a re-join replayed from the same aggregate
+    * via explode — no second shuffle); small-star does the same for the
+    * ≤-side. Fixpoint when large-star changes nothing: every component is
+    * then a star centered on its minimum id, and (id, center) IS the
+    * label table. Lineage is truncated per round via [[Materialize]]; the
+    * driver sees only a block-scan probe per round, and `maxIters` caps
+    * the rounds with a loud failure instead of silently split clusters.
+    *
+    * Output: one row per distinct id in `pairs`, columns (`id`,
+    * `cluster`), cluster = min reachable id — the contract the
+    * recursive-CTE oracle gates on both paths.
     */
   def clusterPairs(pairs: DataFrame, id1Col: String = "id1", id2Col: String = "id2",
-                   maxIters: Int = 20, onePartitionThreshold: Long = 10000000L): DataFrame = {
+                   maxIters: Int = 60, onePartitionThreshold: Long = 10000000L): DataFrame = {
     val half = pairs.select(col(id1Col).as("a"), col(id2Col).as("b"))
     // the edge count (the small-graph gate input below) rides the
     // Materialize job as an observed metric instead of a separate
-    // count() job over the checkpointed blocks — one fewer job per
-    // clustering call on both paths (guide §1.2); plain-count fallback
-    // is defensive only
+    // count() job over the checkpointed blocks (guide §1.2); the
+    // plain-count fallback is defensive only
     val edgesSrc = half.union(half.select(col("b").as("a"), col("a").as("b")))
       .distinct().observe("graft_cp_edges", count(lit(1)).as("n"))
     val edges = Materialize(edgesSrc)
     def edgeCount: Long = edgesSrc.queryExecution.observedMetrics
       .get("graft_cp_edges").map(_.getLong(0)).getOrElse(edges.count())
-
-    // Adaptive small-graph path: a pair list far below cluster scale (the
-    // common case — LSH pair output is tiny next to the corpus) pays more
-    // in per-round job scheduling than in compute. When the edge list
-    // fits one task comfortably AND ids are integral, run a single-task
-    // union-find (union-by-min + path compression — exact, one pass, an
-    // EXECUTOR-side kernel, not a driver collect). Billion-edge graphs
-    // and non-integral ids take the iterative path below.
-    //
-    // 10×-scale-probe note (bench history shows dedup_clusters ratios of
-    // 1.7-2.2 between sf0.01 and sf0.1): BOTH bench scale points take
-    // THIS path (sf0.1 produces ~157k LSH edges, 60× under the 10M
-    // threshold), so the probed ratio says nothing about the iterative
-    // label-propagation rounds — it is the upstream LSH candidate
-    // pipeline scaling plus this path's fixed multi-job floor (edge
-    // count, checkpoint, one single-task kernel). Measured clean-load
-    // steady state 2026-08: 0.58s @sf0.01 vs 1.0s @sf0.1 = 1.75; in-bench
-    // readings above 2.0 track ambient load / code-cache pressure, not a
-    // superlinear operator (which would surface in dedup_minhash_lsh
-    // first — same pipeline, no clustering).
     val integralIds = {
       import org.apache.spark.sql.types._
       edges.schema.fields.forall(_.dataType match {
@@ -1465,49 +1453,69 @@ object Dedup {
         case _ => false
       })
     }
-    if (integralIds && edgeCount <= onePartitionThreshold)
-      return unionFindLabels(edges)
-    // round 1 needs no label join: labels start as the identity, so the
-    // propagated label is simply min(self, min neighbor id)
-    var labels = edges.groupBy(col("a"))
-      .agg(least(min(col("b")), col("a")).as("cluster"))
-      .select(col("a").as("id"), col("cluster"))
-      .transform(Materialize.apply)
-    var it = 1
-    var converged = false
-    while (!converged && it < maxIters) {
-      val neigh = edges.join(labels, edges("b") === labels("id"))
-        .groupBy(edges("a").as("id")).agg(min(col("cluster")).as("__nl"))
-      // carry old and new labels in ONE checkpointed frame: the fixpoint
-      // probe and the next round's labels reuse it without a second join
-      val joined = labels.as("l")
-        .join(neigh.as("n"), col("l.id") === col("n.id"), "left")
-        .select(col("l.id").as("id"), col("l.cluster").as("__prev"),
-          least(col("l.cluster"), coalesce(col("__nl"), col("l.cluster"))).as("cluster"))
-        .transform(Materialize.apply)
-      converged = joined.filter(col("cluster") =!= col("__prev")).isEmpty
-      labels = joined.select("id", "cluster")
-      it += 1
+    if (integralIds && edgeCount <= onePartitionThreshold) unionFindLabels(edges)
+    else {
+      var cur = edges.filter(col("a") =!= col("b"))
+      var it = 0
+      var converged = false
+      while (!converged) {
+        // large-star: m(u) = min(N(u) ∪ {u}); emit (v, m(u)) for
+        // v ∈ N(u), v > u. One shuffle on u; the (v>u → m) edges come
+        // straight out of the same aggregate by collecting the larger
+        // neighbors alongside min. The aggregate ALSO carries the
+        // fixpoint probe (min neighbor + degree): the graph is a union
+        // of min-centered stars ⇔ no node has a smaller neighbor AND
+        // any second neighbor — so convergence is read off this frame
+        // instead of a separate aggregate job, and a converged graph
+        // never pays another (idempotent) round
+        val lsAgg = cur.groupBy(col("a"))
+          .agg(least(min(col("b")), col("a")).as("m"),
+            collect_list(when(col("b") > col("a"), col("b"))).as("big"),
+            min(col("b")).as("__mn"), count(lit(1)).as("__cnt"))
+          .transform(Materialize.apply)
+        converged = lsAgg.filter(col("__mn") < col("a") && col("__cnt") > 1).isEmpty
+        if (!converged) {
+          if (it >= maxIters)
+            throw new IllegalStateException(
+              s"clusterPairs did not converge after $maxIters rounds — raise maxIters " +
+                "(rounds grow with log of component size; 60 covers any practical graph)")
+          val ls = lsAgg.select(explode(col("big")).as("a"), col("m").as("b"))
+            .filter(col("a") =!= col("b"))
+            .distinct()
+          // small-star on large-star's output: m = min(N(u) ∪ {u});
+          // emit (v, m) for v ≤ u — with self-loops dropped, (u, m)
+          // plus the smaller neighbors re-pointed at m. Pipelined into
+          // the round's one edge checkpoint together with the
+          // undirected closure (neither ls nor ss has a second consumer)
+          val ss = ls.groupBy(col("a"))
+            .agg(least(min(col("b")), col("a")).as("m"),
+              collect_list(when(col("b") < col("a"), col("b"))).as("small"))
+            .select(explode(concat(col("small"), array(col("a")))).as("a"), col("m").as("b"))
+            .filter(col("a") =!= col("b"))
+            .distinct()
+          cur = ss.union(ss.select(col("b").as("a"), col("a").as("b")))
+            .distinct().transform(Materialize.apply)
+          it += 1
+        }
+      }
+      // stars: every member's min neighbor (or itself, for the center)
+      // is the component minimum; ids seen only in self-loops label
+      // themselves
+      val labels = cur.groupBy(col("a"))
+        .agg(least(min(col("b")), col("a")).as("cluster"))
+        .select(col("a").as("id"), col("cluster"))
+      val ids = edges.select(col("a").as("id")).distinct()
+      ids.join(labels, ids("id") === labels("id"), "left")
+        .select(ids("id"), coalesce(labels("cluster"), ids("id")).as("cluster"))
     }
-    // exiting via the iteration cap means labels are still moving —
-    // downstream keep/drop decisions would silently split real clusters.
-    // Fail loudly: the caller can raise maxIters (rounds = component
-    // diameter, so a hit here means a >maxIters-long duplicate chain).
-    if (!converged)
-      throw new IllegalStateException(
-        s"clusterPairs did not converge after $maxIters rounds — a connected " +
-          s"component has diameter > $maxIters; raise maxIters")
-    labels.select("id", "cluster")
   }
 
   /** Single-task union-find (union-by-min + path compression) over an
-    * undirected edge list — the exact small-graph path shared by
-    * [[clusterPairs]] and [[clusterPairsStar]]: a pair list far below
-    * cluster scale (the common case — LSH pair output is tiny next to
-    * the corpus) pays more in per-round job scheduling than in compute,
-    * so one EXECUTOR-side pass (not a driver collect) labels it in one
-    * job. Output: (id, cluster = min reachable id), one row per id in
-    * the edge list — bit-identical to the iterative paths' labels.
+    * undirected edge list — [[clusterPairs]]' exact small-graph path: one
+    * EXECUTOR-side pass (not a driver collect) labels the whole list in
+    * one job. Output: (id, cluster = min reachable id), one row per id in
+    * the edge list (self-loop-only ids included) — the same labels as the
+    * star rounds.
     */
   private def unionFindLabels(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
@@ -1527,135 +1535,12 @@ object Dedup {
           parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
           val ra = find(a); val rb = find(b)
           // union by MIN id: the root of every component stays its
-          // minimum member, matching the iterative paths' labels
+          // minimum member, matching the star rounds' labels
           if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
         }
         parent.keysIterator.map(id => (id, find(id)))
       }
       .toDF("id", "cluster")
-  }
-
-  /** Connected components by alternating large-star / small-star
-    * contraction (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii,
-    * "Connected Components in MapReduce and Beyond", SoCC 2014) — the
-    * diameter-independent twin of [[clusterPairs]]' min-label
-    * propagation. Label propagation pays one round per hop of component
-    * DIAMETER: a duplicate chain a~b~c~…~z of length 10⁶ (real in
-    * boilerplate-heavy web corpora, where page N links near-dups page
-    * N+1) needs 10⁶ shuffles and trips the fail-loud cap. Star
-    * contraction instead rewires every node to its neighborhood minimum
-    * each round, halving-or-better the height of every tree — O(log² n)
-    * rounds worst case, ≤ ~log₂(n) in practice — so the round count
-    * depends on component SIZE's logarithm, never its shape.
-    *
-    * Per round: large-star connects every node's strictly-larger
-    * neighbors to its neighborhood min (one groupBy on the node = one
-    * edge-list shuffle, then a broadcast-free re-join replayed from the
-    * same aggregate via explode — no second shuffle of the corpus);
-    * small-star does the same for the ≤-side. Fixpoint when large-star
-    * changes nothing: every component is then a star centered on its
-    * minimum id, and (id, center) IS the label table. Lineage is
-    * truncated per round via [[Materialize]] exactly like
-    * [[clusterPairs]]; the driver sees only a count per round.
-    *
-    * Output matches [[clusterPairs]] bit-for-bit: one row per distinct
-    * id in `pairs`, columns (`id`, `cluster`), cluster = min reachable
-    * id — so the same recursive-CTE oracle gates both paths.
-    */
-  def clusterPairsStar(pairs: DataFrame, id1Col: String = "id1",
-                       id2Col: String = "id2", maxIters: Int = 60,
-                       onePartitionThreshold: Long = 10000000L): DataFrame = {
-    // materialize the pair list ONCE: it has two consumers here (the
-    // singleton-id table and the initial edge set), and `pairs` is
-    // usually the UNMATERIALIZED banded LSH self-join — without this the
-    // whole candidate pipeline (tokenize → minhash → band → join) ran
-    // twice per clustering call (r16 fix, guide §2.4)
-    val pr = Materialize(pairs.select(col(id1Col).as("a"), col(id2Col).as("b")))
-    val half = pr.filter(col("a") =!= col("b"))
-    // singletons in the pair list (a=b rows) still deserve a label row;
-    // single consumer (the final join) reading materialized pr blocks —
-    // no checkpoint of its own needed
-    val selfIds = pr.select(col("a").as("id"))
-      .union(pr.select(col("b").as("id"))).distinct()
-    // edge count rides the Materialize job (see [[clusterPairs]]) — no
-    // separate count() job for the small-graph gate
-    val edgesSrc = half.union(half.select(col("b").as("a"), col("a").as("b")))
-      .distinct().observe("graft_cps_edges", count(lit(1)).as("n"))
-    val edges = Materialize(edgesSrc)
-    def edgeCount: Long = edgesSrc.queryExecution.observedMetrics
-      .get("graft_cps_edges").map(_.getLong(0)).getOrElse(edges.count())
-
-    // Adaptive small-graph path ([[clusterPairs]]' rule, shared kernel):
-    // far below cluster scale the star rounds pay more in per-round job
-    // scheduling than in compute — one single-task union-find labels the
-    // edge list exactly, in one job. Labels are min-reachable-id either
-    // way, so the same oracle gates both paths.
-    val integralIds = {
-      import org.apache.spark.sql.types._
-      edges.schema.fields.forall(_.dataType match {
-        case LongType | IntegerType | ShortType | ByteType => true
-        case _ => false
-      })
-    }
-    val labels =
-      if (integralIds && edgeCount <= onePartitionThreshold)
-        unionFindLabels(edges)
-      else {
-        var cur = edges
-        var it = 0
-        var converged = false
-        while (!converged) {
-          // large-star: m(u) = min(N(u) ∪ {u}); emit (v, m(u)) for
-          // v ∈ N(u), v > u. One shuffle on u; the (v>u → m) edges come
-          // straight out of the same aggregate by collecting the larger
-          // neighbors alongside min. The aggregate ALSO carries the
-          // fixpoint probe (min neighbor + degree): the graph is a union
-          // of min-centered stars ⇔ no node has a smaller neighbor AND
-          // any second neighbor — so convergence is read off this frame
-          // instead of a separate post-round aggregate job, and a
-          // converged graph never pays the (idempotent) round it used to
-          // (r16: 4 checkpoints + 1 probe job per round → 2 checkpoints
-          // + 1 block-scan probe, and the final round drops entirely)
-          val lsAgg = cur.groupBy(col("a"))
-            .agg(least(min(col("b")), col("a")).as("m"),
-              collect_list(when(col("b") > col("a"), col("b"))).as("big"),
-              min(col("b")).as("__mn"), count(lit(1)).as("__cnt"))
-            .transform(Materialize.apply)
-          converged = lsAgg.filter(col("__mn") < col("a") && col("__cnt") > 1).isEmpty
-          if (!converged) {
-            if (it >= maxIters)
-              throw new IllegalStateException(
-                s"clusterPairsStar did not converge after $maxIters rounds — raise maxIters " +
-                  "(rounds grow with log of component size; 60 covers any practical graph)")
-            val ls = lsAgg.select(explode(col("big")).as("a"), col("m").as("b"))
-              .filter(col("a") =!= col("b"))
-              .distinct()
-            // small-star on large-star's output: m = min(N(u) ∪ {u});
-            // emit (v, m) for v ≤ u — with self-loops dropped, (u, m)
-            // plus the smaller neighbors re-pointed at m. Pipelined into
-            // the round's one edge checkpoint together with the
-            // undirected closure (ls and ss each had their own
-            // checkpoint before; neither has a second consumer).
-            val ss = ls.groupBy(col("a"))
-              .agg(least(min(col("b")), col("a")).as("m"),
-                collect_list(when(col("b") < col("a"), col("b"))).as("small"))
-              .select(explode(concat(col("small"), array(col("a")))).as("a"), col("m").as("b"))
-              .filter(col("a") =!= col("b"))
-              .distinct()
-            cur = ss.union(ss.select(col("b").as("a"), col("a").as("b")))
-              .distinct().transform(Materialize.apply)
-            it += 1
-          }
-        }
-        // stars: every member's min neighbor (or itself, for the center /
-        // singletons) is the component minimum
-        cur.groupBy(col("a"))
-          .agg(least(min(col("b")), col("a")).as("cluster"))
-          .select(col("a").as("id"), col("cluster"))
-      }
-    selfIds.join(labels, selfIds("id") === labels("id"), "left")
-      .select(selfIds("id"),
-        coalesce(labels("cluster"), selfIds("id")).as("cluster"))
   }
 
   /** The deduplicated corpus: drop every row whose id is a NON-canonical
@@ -1671,15 +1556,15 @@ object Dedup {
   }
 
   /** One-call near-dup pruning — the curation-chain stage: MinHash-LSH
-    * candidates ([[lshCandidates]]) → star-contraction components
-    * ([[clusterPairsStar]], the diameter-independent path) → keep each
-    * cluster's canonical (minimum-id) member. Rows in no candidate pair
+    * candidates ([[lshCandidates]]) → connected components
+    * ([[clusterPairs]]) → keep each cluster's canonical (minimum-id)
+    * member. Rows in no candidate pair
     * survive untouched; everything else anti-joins against the loser
     * set (pair-derived, never corpus-sized, broadcast when duplicates
     * are rare — the common case AQE detects).
     *
-    * This is [[dedupByClusters]] with the pair generation and the
-    * star labeling fused into one call, so a pipeline (or the IR's
+    * This is [[dedupByClusters]] with the pair generation fused into
+    * the same call, so a pipeline (or the IR's
     * `near-dup-prune` action) states the POLICY — "drop near-dups, keep
     * the first copy" — without wiring three operators. For keep-best
     * semantics use [[dedupByClustersKeepBest]]; for the exact-Jaccard
@@ -1710,9 +1595,7 @@ object Dedup {
                            cap: BucketCap = BucketCap.Auto()): (DataFrame, Option[LshAudit]) = {
     val (pairs, audit) =
       lshCandidatesConnectivity(df, textCol, idCol, k, rowsPerBand, hashFn, cap)
-    val losers = clusterPairsStar(pairs)
-      .filter(col("cluster") =!= col("id")).select(col("id").as("__loser"))
-    (df.join(losers, df(idCol) === col("__loser"), "left_anti"), audit)
+    (dedupByClusters(df, pairs, idCol), audit)
   }
 
   /** Leakage-free train/val/test assignment — the split rule evaluation
@@ -1721,13 +1604,13 @@ object Dedup {
     * fence (the classic contamination-by-split bug; Lee et al. 2022 §6
     * measure the resulting eval inflation), so the atomic unit must be
     * the near-dup CLUSTER. Every document is assigned the split of its
-    * cluster root (min reachable id via diameter-independent
-    * [[clusterPairsStar]]); documents in no pair are their own root, so
-    * the assignment is total and, for clean corpora, degrades to the
-    * plain [[graft.operators.Sampling.splitByHash]].
+    * cluster root (min reachable id via [[clusterPairs]]); documents
+    * in no pair are their own root, so the assignment is total and, for
+    * clean corpora, degrades to the plain
+    * [[graft.operators.Sampling.splitByHash]].
     *
-    * Output: input columns + `split`. Scale: the star-contraction
-    * rounds on the PAIR LIST (edge-list-sized, not corpus-sized) plus
+    * Output: input columns + `split`. Scale: connected components on
+    * the PAIR LIST (edge-list-sized, not corpus-sized) plus
     * one broadcast-or-shuffle join of labels back to the corpus; the
     * split itself is a map-side hash.
     */
@@ -1738,7 +1621,7 @@ object Dedup {
     // input frame that already carries a `cluster` column (a prior
     // clustering pass is exactly when this operator gets used) must not
     // collide with the internal label table
-    val labels = clusterPairsStar(pairs)
+    val labels = clusterPairs(pairs)
       .select(col("id").as("__cid"), col("cluster").as("__croot"))
     val rooted = df.join(labels, df(idCol) === col("__cid"), "left")
       .withColumn("__root", coalesce(col("__croot"), df(idCol)))
@@ -2051,7 +1934,7 @@ object Dedup {
     // (the clean path keeps its plan identical to the plain pair list)
     val pairs = graft.operators.Materialize(
       if (audit.exists(_.excludedBuckets > 0)) pairs0.distinct() else pairs0)
-    val losers = clusterPairsStar(pairs)
+    val losers = clusterPairs(pairs)
       .filter(col("cluster") =!= col("id"))
     val nSampled = sample.count()
     val nPairs = pairs.count()

@@ -188,7 +188,7 @@ object IncrementalDedup {
     val (pairs, audit) = Dedup.lshCandidatesConnectivity(rest, textCol, idCol,
       meta.k, meta.rowsPerBand, cap = cap)
     val losers = Materialize(
-      Dedup.clusterPairsStar(pairs)
+      Dedup.clusterPairs(pairs)
         .filter(col("cluster") =!= col("id"))
         .select(col("id").as(idCol), col("cluster").as("__canon")))
     val out = delta.select(col(idCol))

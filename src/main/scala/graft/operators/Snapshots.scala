@@ -81,8 +81,8 @@ object Snapshots {
     * Emits `(host1, host2, shared)` pairs — `host1 < host2` — with
     * `shared` = number of distinct digests both hosts serve, kept at
     * `shared >= minShared`. Feed into [[Dedup.clusterPairs]] (string
-    * ids take its iterative path) to collapse mirror families, or join
-    * back to keep one host per family.
+    * ids take its star-contraction rounds) to collapse mirror
+    * families, or join back to keep one host per family.
     *
     * Digests served by more than `maxHostsPerDigest` hosts are excluded
     * BEFORE any host list materializes: a payload on thousands of hosts

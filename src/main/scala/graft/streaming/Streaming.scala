@@ -20,9 +20,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Genuinely sequential operators (count windows, throttle, ewma, changed,
   * smax/smin) use `flatMapGroupsWithState` keyed by the `by` fork fields —
-  * the streaming twin of `Analytics.perKeyScan`; state is per-key, spills
-  * to the state store, and never crosses a key boundary, so the plan
-  * shards across executors exactly like the batch path.
+  * the streaming twin of `Analytics.perKeyMetricScan`; state is per-key,
+  * spills to the state store, and never crosses a key boundary, so the
+  * plan shards across executors exactly like the batch path.
   *
   * Within a micro-batch, events are folded in (time, eventId) order — the
   * deterministic stand-in for the reference's arrival order. Output schema

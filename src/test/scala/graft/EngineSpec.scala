@@ -889,7 +889,8 @@ class EngineSpec extends AnyFunSuite {
         | "children":[{"action":"tap","params":["out"]}]}""".stripMargin),
       pairs, EngineCtx(testMode = true)).taps("out")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == out, "star contraction must label identically to min-label propagation")
+    // the older action name still parses and reaches the same operator
+    assert(star == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
   test("curation IR actions dispatch on document frames (line-dedup, domain-mix, pack-nextfit)") {

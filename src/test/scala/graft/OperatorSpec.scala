@@ -233,7 +233,7 @@ class OperatorSpec extends AnyFunSuite {
     val chained = Dedup.clusterPairs(chain).collect().map(_.getLong(1)).toSet
     assert(chained == Set(1L))
 
-    // the distributed iterative path (threshold 0 forces it past the
+    // the distributed star rounds (threshold 0 forces them past the
     // single-task union-find) must label identically
     def labelsOf(threshold: Long) =
       Dedup.clusterPairs(pairs, onePartitionThreshold = threshold)
@@ -298,65 +298,71 @@ class OperatorSpec extends AnyFunSuite {
     assert(kept == keptUnlimited)
   }
 
-  test("clusterPairsStar: labels == clusterPairs on chains, forests, and random graphs") {
+  test("clusterPairs: labels == in-test union-find on chains, forests, random graphs") {
     import graft.operators.Dedup
     val s = spark
     import s.implicits._
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L)).toDF("id1", "id2")
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(toMap(Dedup.clusterPairsStar(pairs)) ==
+    // independent reference: driver-side union-find over the pair list,
+    // every id labeled with the min id of its component
+    def reference(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = parent.getOrElseUpdate(x, x) match {
+        case `x` => x
+        case p => val r = find(p); parent(x) = r; r
+      }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+      parent.keys.map(k => k -> find(k)).toMap
+    }
+    val forest = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L))
+    assert(toMap(Dedup.clusterPairs(forest.toDF("id1", "id2"))) ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
+    assert(reference(forest) == toMap(Dedup.clusterPairs(forest.toDF("id1", "id2"))))
 
-    // pseudo-random graph: seeded edges over 60 nodes; star labels must
-    // equal the union-find path's bit-for-bit
+    // seeded random graphs: the union-find path and the forced star
+    // rounds (threshold 0) both equal the reference; the second graph
+    // mixes chains, self-pairs and singleton ids
     val rng = new scala.util.Random(42)
     val rand = Seq.fill(120)((rng.nextInt(60).toLong, rng.nextInt(60).toLong))
-      .filter { case (a, b) => a != b }.toDF("id1", "id2")
-    assert(toMap(Dedup.clusterPairsStar(rand)) == toMap(Dedup.clusterPairs(rand)))
-    // r16: the star face now ALSO takes the adaptive union-find path on
-    // small graphs — pin the forced-iterative rounds (threshold 0)
-    // against the union-find default and against clusterPairs, on a
-    // graph mixing chains, forests, self-pairs and singleton ids
-    val mixed = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 9L), (7L, 8L)) ++
-      Seq.fill(60)((rng.nextInt(40).toLong, rng.nextInt(40).toLong)))
-      .toDF("id1", "id2")
-    val viaUf = toMap(Dedup.clusterPairsStar(mixed))
-    val viaRounds = toMap(Dedup.clusterPairsStar(mixed, onePartitionThreshold = 0L))
-    assert(viaUf == viaRounds, "union-find and star-round labels diverged")
-    assert(viaUf == toMap(Dedup.clusterPairs(mixed)))
-  }
-
-  test("clusterPairsStar: diameter-independent — a 200-hop chain converges in O(log) rounds") {
-    import graft.operators.Dedup
-    val s = spark
-    import s.implicits._
-    // label propagation pays one round per hop: this chain exceeds its
-    // default 20-round cap. Star contraction's rounds grow with log of
-    // component SIZE, so 12 rounds is ample for 200 nodes.
-    val chain = (1L to 200L).map(i => (i, i + 1)).toDF("id1", "id2").repartition(7)
-    // threshold 0 forces the ITERATIVE star rounds (the default would
-    // take the r16 union-find path and never exercise them)
-    assert(Dedup.clusterPairsStar(chain, maxIters = 12, onePartitionThreshold = 0L)
-      .collect().map(_.getLong(1)).toSet == Set(1L))
-    assertThrows[IllegalStateException] {
-      Dedup.clusterPairs(chain, maxIters = 20, onePartitionThreshold = 0L).collect()
+      .filter { case (a, b) => a != b }
+    val mixed = Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 9L), (7L, 8L)) ++
+      Seq.fill(60)((rng.nextInt(40).toLong, rng.nextInt(40).toLong))
+    for (g <- Seq(rand, mixed)) {
+      val viaUf = toMap(Dedup.clusterPairs(g.toDF("id1", "id2")))
+      val viaRounds = toMap(Dedup.clusterPairs(g.toDF("id1", "id2"), onePartitionThreshold = 0L))
+      assert(viaUf == reference(g))
+      assert(viaRounds == viaUf, "union-find and star-round labels diverged")
     }
   }
 
-  test("clusterPairsStar: self-loop pairs label as singletons; empty input is empty") {
+  test("clusterPairs: a 200-hop chain converges in at most 12 star rounds") {
+    import graft.operators.Dedup
+    val s = spark
+    import s.implicits._
+    // star contraction's rounds grow with log of component SIZE, not
+    // its diameter, so 12 rounds is ample for 200 nodes; threshold 0
+    // forces the rounds (the default takes the union-find path)
+    val chain = (1L to 200L).map(i => (i, i + 1)).toDF("id1", "id2").repartition(7)
+    assert(Dedup.clusterPairs(chain, maxIters = 12, onePartitionThreshold = 0L)
+      .collect().map(_.getLong(1)).toSet == Set(1L))
+  }
+
+  test("clusterPairs: self-loop pairs label as singletons; empty input is empty") {
     import graft.operators.Dedup
     val s = spark
     import s.implicits._
     val selfy = Seq((5L, 5L), (1L, 2L)).toDF("id1", "id2")
-    assert(Dedup.clusterPairsStar(selfy).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
-    assert(Dedup.clusterPairsStar(Seq.empty[(Long, Long)].toDF("id1", "id2")).isEmpty)
-    // same pins through the forced-iterative rounds (r16 adaptive path)
-    assert(Dedup.clusterPairsStar(selfy, onePartitionThreshold = 0L).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
-    assert(Dedup.clusterPairsStar(Seq.empty[(Long, Long)].toDF("id1", "id2"),
-      onePartitionThreshold = 0L).isEmpty)
+    val empty = Seq.empty[(Long, Long)].toDF("id1", "id2")
+    // same pins on the union-find path and through the forced star rounds
+    for (threshold <- Seq(10000000L, 0L)) {
+      assert(Dedup.clusterPairs(selfy, onePartitionThreshold = threshold).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
+      assert(Dedup.clusterPairs(empty, onePartitionThreshold = threshold).isEmpty)
+    }
   }
 
   test("multiset MinHash: repetition counts — weighted relation separates what the set relation cannot") {
@@ -823,11 +829,12 @@ class OperatorSpec extends AnyFunSuite {
     import graft.operators.Dedup
     val s = spark
     import s.implicits._
-    // a diameter-9 chain cannot converge in 3 rounds of min-propagation;
-    // silent unconverged labels would split the cluster downstream
+    // a 10-node chain is no star: one round of the forced star
+    // contraction cannot finish it, and silent unconverged labels would
+    // split the cluster downstream
     val chain = (1L to 9L).map(i => (i, i + 1)).toDF("id1", "id2")
     val e = intercept[IllegalStateException] {
-      Dedup.clusterPairs(chain, maxIters = 3, onePartitionThreshold = 0L).collect()
+      Dedup.clusterPairs(chain, maxIters = 1, onePartitionThreshold = 0L).collect()
     }
     assert(e.getMessage.contains("did not converge"))
     // same graph with headroom converges to the single component

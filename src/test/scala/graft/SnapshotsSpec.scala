@@ -102,6 +102,18 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(byCluster.contains(Set("a.com", "a-mirror.com", "c.com", "c2.com", "b.com")))
   }
 
+  test("clusterPairs labels a 30-hop chain of string hosts with the min host") {
+    val s = spark
+    import s.implicits._
+    // string ids never take the integral union-find path; a chain longer
+    // than a per-hop round cap must still collapse to one family
+    val hosts = (0 to 30).map(i => f"h$i%03d.com")
+    val chain = hosts.zip(hosts.tail).toDF("host1", "host2")
+    val labels = Dedup.clusterPairs(chain, "host1", "host2").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(labels == hosts.map(_ -> "h000.com").toMap)
+  }
+
   test("mirror-pairs is a declarable IR action") {
     import graft.ir.{Engine, EngineCtx, Node}
     val s = spark
