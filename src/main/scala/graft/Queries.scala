@@ -41,6 +41,12 @@ object Queries {
       |  FROM events
       |)""".stripMargin
 
+  /** Window start (ns) of event time for a window of `d` ns: the floor of
+    * `time` to `d`, as `Windows` keys it. DuckDB's `//` truncates toward
+    * zero, which would differ for pre-1970 times.
+    */
+  private[graft] def winSqlOf(d: Long): String = s"(time - ((time % $d) + $d) % $d)"
+
   /** Decimal-stable double sum (order-independent across engines). */
   private def dsum(c: Column): Column =
     sum(c.cast("decimal(38,6)")).cast("double")
@@ -349,7 +355,7 @@ object Queries {
 
     // ---------------- §2.5 windows ----------------
 
-    val winSql = "(time // 3600000000000) * 3600000000000"
+    val winSql = winSqlOf(3600000000000L)
 
     register("fixed_time_window",
       s"""$EventsView
@@ -383,9 +389,8 @@ object Queries {
          |SELECT $winSql AS window_start,
          |       CAST(sum(CAST(metric AS DECIMAL(38,6))) AS DOUBLE) / count(*) AS metric
          |FROM ev GROUP BY 1 ORDER BY window_start""".stripMargin) { (s, dir) =>
-      ev(s, dir).withColumn("window_start", Windows.windowStart(3600))
-        .groupBy("window_start")
-        .agg((dsum(col("metric")) / count(lit(1))).as("metric"))
+      ev(s, dir).transform(Windows.customWindow(3600, dsum(col("metric")) / count(lit(1))))
+        .select(col("window_start"), col("metric"))
         .orderBy("window_start")
     }
 
@@ -749,7 +754,7 @@ object Queries {
     // groupBy keys replace fork management entirely.
     register("by_sum",
       s"""$EventsView
-         |SELECT host, service, (time // 3600000000000) * 3600000000000 AS window_start,
+         |SELECT host, service, ${winSqlOf(3600000000000L)} AS window_start,
          |       CAST(sum(CAST(metric AS DECIMAL(38,6))) AS DOUBLE) AS metric
          |FROM ev GROUP BY 1, 2, 3 ORDER BY host, service, window_start""".stripMargin) { (s, dir) =>
       ev(s, dir).withColumn("metric", col("metric").cast("decimal(38,6)"))
@@ -761,7 +766,7 @@ object Queries {
 
   // ---------------- §2.6 collection aggregates ----------------
   private def buildCollections(): Unit = {
-    val winSql = "(time // 3600000000000) * 3600000000000"
+    val winSql = winSqlOf(3600000000000L)
 
     // list fold prefix shared by the coll oracles: the payload in event
     // order (time, eventId), exactly collectOrdered's order.
@@ -923,7 +928,7 @@ object Queries {
     register("coll_percentiles",
       s"""$EventsView
          |, w AS (
-         |  SELECT (time // 600000000000) * 600000000000 AS window_start,
+         |  SELECT ${winSqlOf(600000000000L)} AS window_start,
          |         list_sort(list(metric)) AS sorted
          |  FROM ev GROUP BY 1)
          |SELECT window_start, q.quantile,
@@ -1045,9 +1050,9 @@ object Queries {
     register("ssort",
       s"""$EventsView
          |SELECT window_start, pos, eventId, metric FROM (
-         |  SELECT (time // 3600000000000) * 3600000000000 AS window_start,
+         |  SELECT ${winSqlOf(3600000000000L)} AS window_start,
          |         eventId, metric,
-         |         row_number() OVER (PARTITION BY (time // 3600000000000)
+         |         row_number() OVER (PARTITION BY ${winSqlOf(3600000000000L)}
          |                            ORDER BY metric, eventId) - 1 AS pos
          |  FROM ev) ORDER BY window_start, pos""".stripMargin) { (s, dir) =>
       ev(s, dir).transform(Windows.ssort(3600, "metric", emitPos = true))

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 object QueriesIr {
 
   private val Ev = Queries.EventsView
-  private val winSql = "(time // 3600000000000) * 3600000000000"
+  private val winSql = Queries.winSqlOf(3600000000000L)
 
   private def ev(s: SparkSession, dir: String): DataFrame = Tables.events(s, dir)
 

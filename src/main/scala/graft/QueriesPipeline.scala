@@ -91,13 +91,13 @@ object QueriesPipeline {
   private val gateStoreDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   sys.addShutdownHook(gateStoreDirs.forEach(d => deleteTree(d)))
 
-  /** A fresh temp directory for a gate's persisted store, deleted with its
-    * contents at JVM exit. The gate's result still reads the store lazily
-    * when the caller forces it, so the gate cannot delete it itself
-    * without forcing the result first — an extra Spark job inside a
-    * timed gate body.
+  /** A fresh temp directory for a gate's persisted store or written
+    * files, deleted with its contents at JVM exit. The gate's result still
+    * reads the directory lazily when the caller forces it, so the gate
+    * cannot delete it itself without forcing the result first — an extra
+    * Spark job inside a timed gate body.
     */
-  private def gateStoreDir(prefix: String): String = {
+  private[graft] def gateStoreDir(prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toString
     gateStoreDirs.add(dir)
     dir

@@ -147,8 +147,7 @@ object QueriesRelational {
     }
 
     // one row PER SESSION (session_window semantics: end = last + gap);
-    // the streaming twin is Spark's native session window, StreamingSpec
-    // pins stream == batch
+    // the same plan runs on a stream, StreamingSpec pins stream == batch
     register("sessionize_rows",
       s"""${Queries.EventsView}
          |, gaps AS (
@@ -170,7 +169,7 @@ object QueriesRelational {
          |       count(*) AS n_events
          |FROM sess GROUP BY host, sid
          |ORDER BY host, session_start""".stripMargin) { (s, dir) =>
-      graft.operators.Analytics.sessionize(1800, Seq("host"))(Tables.events(s, dir))
+      graft.operators.Windows.sessionize(1800, Seq("host"))(Tables.events(s, dir))
         .orderBy("host", "session_start")
     }
   }

@@ -688,7 +688,7 @@ object QueriesSources {
       val hostile = Tables.documents(s, dir)
         .select(col("doc_id"),
           concat(col("text"), lit("\"\\\n\tcaf\u00e9 \u2603")).as("text"))
-      val tmp = java.nio.file.Files.createTempDirectory("jsonl_rt").toString
+      val tmp = QueriesPipeline.gateStoreDir("jsonl_rt")
       graft.sources.Jsonl.writeShards(hostile, s"$tmp/shards", "doc_id", shards = 4)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
@@ -714,7 +714,7 @@ object QueriesSources {
       val hostile = Tables.documents(s, dir)
         .select(col("doc_id"),
           concat(col("text"), lit(",\"\n\tcafé ☃")).as("text"))
-      val tmp = java.nio.file.Files.createTempDirectory("csv_rt").toString
+      val tmp = QueriesPipeline.gateStoreDir("csv_rt")
       graft.sources.Csv.writeShards(hostile, s"$tmp/shards", "doc_id", shards = 4)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",

@@ -1453,29 +1453,17 @@ object Engine {
     case "sflatten"    => Stateless.sflatten(params.headOption.map(pStr).getOrElse("events"))
     case "debug" | "info" | "error" => Stateless.logEvents(action)
 
-    // §2.5 windows (keys = enclosing `by` fork). On a streaming frame the
-    // same IR node compiles to the watermarked Structured Streaming twin;
-    // the optional "delay" param is the reference's allowed lateness
-    // (action.clj:2419-2432) and becomes the watermark delay.
-    case "fixed-time-window" => df =>
-      if (df.isStreaming) Streaming.fixedTimeWindow(durOf(params), delayOf(params), keys)(df)
-      else Windows.fixedTimeWindow(durOf(params), keys)(df)
-    case "sum" => df =>
-      if (df.isStreaming) Streaming.sumWindow(durOf(params), delayOf(params), keys)(df)
-      else Windows.sumWindow(durOf(params), keys)(df)
-    case "mean" => df =>
-      if (df.isStreaming) Streaming.meanWindow(durOf(params), delayOf(params), keys)(df)
-      else Windows.meanWindow(durOf(params), keys)(df)
-    case "rate" => df =>
-      if (df.isStreaming) Streaming.rateWindow(durOf(params), delayOf(params), keys)(df)
-      else Windows.rateWindow(durOf(params), keys)(df)
-    case "top" => df =>
-      if (df.isStreaming) Streaming.topWindow(durOf(params), delayOf(params), keys)(df)
-      else Windows.topWindow(durOf(params), keys)(df)
-    case "bottom" => df =>
-      if (df.isStreaming) Streaming.bottomWindow(durOf(params), delayOf(params), keys)(df)
-      else Windows.bottomWindow(durOf(params), keys)(df)
-    case "aggr-custom" => df =>
+    // §2.5 windows (keys = enclosing `by` fork). One builder for both
+    // runtimes: the optional "delay" param is the reference's allowed
+    // lateness (action.clj:2419-2432) and becomes the watermark delay,
+    // which a batch frame ignores.
+    case "fixed-time-window" => Windows.fixedTimeWindow(durOf(params), keys, delayOf(params))
+    case "sum"    => Windows.sumWindow(durOf(params), keys, delayOf(params))
+    case "mean"   => Windows.meanWindow(durOf(params), keys, delayOf(params))
+    case "rate"   => Windows.rateWindow(durOf(params), keys, delayOf(params))
+    case "top"    => Windows.topWindow(durOf(params), keys, delayOf(params))
+    case "bottom" => Windows.bottomWindow(durOf(params), keys, delayOf(params))
+    case "aggr-custom" =>
       // pluggable aggregation pair (keyword->aggr-fn registry,
       // action.clj:2285-2374): params = {duration, name, args?, delay?}
       val m = pMap(params.head)
@@ -1487,45 +1475,29 @@ object Engine {
         case Some(x)          => Seq(x)
         case None             => Nil
       }
-      if (df.isStreaming)
-        Streaming.customWindow(durOf(params), delayOf(params), aggOf(argsOf), keys)(df)
-      else Windows.customWindow(durOf(params), aggOf(argsOf), keys)(df)
-
+      Windows.customWindow(durOf(params), aggOf(argsOf), keys, delayOf(params))
     case "ratio" =>
       val m = pMap(params.head)
-      val (c1, c2) = (Condition.parse(m("cond1")), Condition.parse(m("cond2")))
-      val useMetric = m.get("metric").exists(_ == true)
-      df =>
-        if (df.isStreaming)
-          Streaming.ratioWindow(pLong(m("duration")), delayOf(params), c1, c2, useMetric, keys)(df)
-        else Windows.ratioWindow(pLong(m("duration")), c1, c2, useMetric, keys)(df)
+      Windows.ratioWindow(pLong(m("duration")), Condition.parse(m("cond1")), Condition.parse(m("cond2")),
+        m.get("metric").exists(_ == true), keys, delayOf(params))
     case "ssort" =>
       val m = pMap(params.head)
-      df =>
-        if (df.isStreaming) Streaming.ssort(pLong(m("duration")), delayOf(params), pStr(m("field")), keys)(df)
-        else Windows.ssort(pLong(m("duration")), pStr(m("field")), keys)(df)
+      Windows.ssort(pLong(m("duration")), pStr(m("field")), keys, delaySeconds = delayOf(params))
     case "coalesce" =>
       val m = pMap(params.head)
-      df =>
-        if (df.isStreaming) Streaming.coalesceWindow(pLong(m("duration")), delayOf(params), pStrs(m("fields")))(df)
-        else Windows.coalesceWindow(pLong(m("duration")), pStrs(m("fields")))(df)
+      Windows.coalesceWindow(pLong(m("duration")), pStrs(m("fields")), delayOf(params))
     // `project` is one plan for both runtimes: the unwindowed conditional
     // max_by aggregate IS the streaming current-state view — run the sink
     // in update/complete mode (StreamingSpec pins stream == batch).
     case "project"     => Windows.project(params.head.asInstanceOf[Seq[Any]].map(Condition.parse))
     case "percentiles" =>
       // full-event per-quantile output like the reference (action.clj:2845-2929):
-      // tumbling window payload + event-identity percentile pick; the
-      // payload window is the streaming one on a streaming frame and
-      // collPercentiles is a pure post-agg projection either way
+      // tumbling window payload + event-identity percentile pick;
+      // collPercentiles is a pure post-agg projection
       val m = pMap(params.head)
-      val qs = pDoubles(m("quantiles"))
-      df =>
-        val windowed =
-          if (df.isStreaming) Streaming.fixedTimeWindow(pLong(m("duration")), delayOf(params), keys)(df)
-          else Windows.fixedTimeWindow(pLong(m("duration")), keys)(df)
-        Windows.collPercentiles(qs)(windowed)
-    case "coll-increase" => Windows.collIncrease(durOf(params), keys)
+      val windowed = Windows.fixedTimeWindow(pLong(m("duration")), keys, delayOf(params)) _
+      windowed.andThen(Windows.collPercentiles(pDoubles(m("quantiles"))))
+    case "coll-increase" => Windows.collIncrease(durOf(params), keys, delayOf(params))
 
     case "fixed-event-window" => df =>
       // streaming output carries (key, windowId, events) — see Streaming
@@ -1583,12 +1555,7 @@ object Engine {
         if (df.isStreaming)
           Streaming.condDt(Condition.evaluator(cond), pLong(m("duration")), keys)(df).toDF()
         else Analytics.condDt(cond, pLong(m("duration")), keys)(df)
-    case "sessionize" =>
-      val m = pMap(params.head)
-      df =>
-        if (df.isStreaming)
-          Streaming.sessionize(pLong(m("gap")), delayOf(params), keys)(df)
-        else Analytics.sessionize(pLong(m("gap")), keys)(df)
+    case "sessionize" => Windows.sessionize(pLong(pMap(params.head)("gap")), keys, delayOf(params))
     case "ddt" => df =>
       if (df.isStreaming) Streaming.ddt(keys)(df).toDF() else Analytics.ddt(keys)(df)
     case "ddt-pos" => df =>
@@ -2818,6 +2785,8 @@ object Engine {
   */
 final class StreamRegistry(ctx: EngineCtx = EngineCtx()) {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** One registered stream: its document, its pipeline with includes
     * expanded at registration, and its compiled form once built. A failed
     * expansion is not kept: it is retried, and fails again, at every use.
@@ -2964,7 +2933,7 @@ final class StreamRegistry(ctx: EngineCtx = EngineCtx()) {
     java.nio.file.Files.createDirectories(d)
     streams.foreach { case (name, s) =>
       if (dirOrigin.get(name).exists(_ != normPath(dir))) {
-        System.err.println(s"[registry] stream '$name' came from " +
+        log.warn(s"[registry] stream '$name' came from " +
           s"'${dirOrigin(name)}' — not persisted into '$dir' (its own file is the source of truth)")
       } else persistOne(d, name, s)
     }
@@ -2976,7 +2945,7 @@ final class StreamRegistry(ctx: EngineCtx = EngineCtx()) {
     // operator keeps the EDN source of truth instead of silently
     // rebooting the stream with the literal mask string as the value.
     if (hasSecret(s.node))
-      System.err.println(s"[registry] stream '$name' contains #secret values: " +
+      log.warn(s"[registry] stream '$name' contains #secret values: " +
         "persisted copy is REDACTED and will not run correctly if reloaded — " +
         "keep the original EDN file as the source of truth")
     java.nio.file.Files.writeString(d.resolve(s"$name.json"), Node.toJson(doc(name, s)))

@@ -40,29 +40,6 @@ object Analytics {
     w.orderBy(col("time"), col("eventId"))
   }
 
-  /** Sessionize: group events into per-key sessions separated by gaps of
-    * more than `gapSeconds`, one output row per session with its start,
-    * end, and event count. Times are µs-aligned ns and the session end is
-    * `last event + gap` — exactly Spark's `session_window` semantics, so
-    * the streaming twin ([[graft.streaming.Streaming.sessionize]]) is the
-    * NATIVE session window and this batch form matches it row for row.
-    */
-  def sessionize(gapSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame = {
-    val gapNs = gapSeconds * Event.NsPerSecond
-    val w = orderedWindow(keys)
-    df.withColumn("__t", expr("(time div 1000) * 1000"))
-      .withColumn("__new",
-        when(lag(col("__t"), 1).over(w).isNull ||
-          col("__t") - lag(col("__t"), 1).over(w) > gapNs, 1L).otherwise(0L))
-      .withColumn("__sid", sum(col("__new"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(keys.map(col) :+ col("__sid"): _*)
-      .agg(min(col("__t")).as("session_start"),
-        (max(col("__t")) + gapNs).as("session_end"),
-        count(lit(1)).as("n_events"))
-      .drop("__sid")
-  }
-
   /** `ddt` / `ddt-pos` — d(metric)/d(time) between consecutive events
     * (`action.clj:1042-1083`). The reference divides by the raw ns time
     * delta; `ddt-pos` drops negative derivatives (counter resets), zero-dt

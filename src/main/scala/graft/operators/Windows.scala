@@ -2,44 +2,79 @@ package graft.operators
 
 import graft.conditions.Condition
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Event-time tumbling-window aggregations (SURVEY §2.5) and the
-  * collection (window-payload) aggregates (§2.6).
+/** Event-time tumbling-window aggregations (SURVEY §2.5), the session
+  * window, and the collection (window-payload) aggregates (§2.6).
   *
   * The reference implements one shared `aggregation*` machine
   * (`src/clojure/mirabelle/action.clj:2387-2454`): window index =
   * `(time - start) / duration`, allowed lateness via `:delay`, pluggable
   * accumulate/finalize pairs (`action.clj:2285-2374`) — exactly Spark's
   * partial/final aggregate split. Here each window op is a single
-  * `groupBy(windowStart, keys).agg(...)`: map-side partial aggregation,
+  * `groupBy(window, keys).agg(...)`: map-side partial aggregation,
   * one shuffle on (window, keys), whole-stage codegen — the plan scales
   * linearly with input and never materializes per-window buffers except
   * for the ops that genuinely emit the window payload (`collect_list`).
   *
-  * Windows here are epoch-aligned (the reference aligns to the first event
-  * seen, `action.clj:2407-2417` — a single-process notion that has no
-  * distributed equivalent; epoch alignment is the deterministic,
-  * partition-friendly choice and is what the DuckDB oracle mirrors).
+  * One builder serves batch and streaming frames. On a stream every
+  * window op groups through [[grouped]]: `window(__ts, d)` (or
+  * `session_window`) under `withWatermark(__ts, delay)`. That is the
+  * reference's flush rule — a window is emitted once
+  * `clock - delay >= window_end`, the watermark standing in for
+  * `clock - delay` and advancing at micro-batch boundaries instead of per
+  * event (documented delta, SURVEY §7.4.3). A batch frame groups all data
+  * at once on the same window keys (see [[windowAgg]]). `delaySeconds` is
+  * the reference's allowed lateness; batch callers leave it at 0.
   *
-  * Event time is a ns-long; window arithmetic stays in integer space
-  * (ns longs exceed 2^53 — double arithmetic would corrupt them).
+  * Windows are epoch-aligned and floor event time (the reference aligns
+  * to the first event seen, `action.clj:2407-2417` — a single-process
+  * notion that has no distributed equivalent; epoch alignment is the
+  * deterministic, partition-friendly choice and is what the DuckDB oracle
+  * mirrors, `Queries.winSqlOf`). Event time is a ns-long; `__ts` is its µs-precision
+  * timestamp and `window_start` is projected back to ns.
   */
 object Windows {
 
-  /** Epoch-aligned window start (ns) for a duration in seconds. */
-  def windowStart(durationSeconds: Long, timeCol: String = "time"): Column = {
-    val d = durationSeconds * graft.model.Event.NsPerSecond
-    expr(s"($timeCol div ${d}L) * ${d}L")
-  }
+  /** `df` with the µs-precision event-time column `__ts` the watermark
+    * machinery needs (event time stays a ns long everywhere else), under
+    * a watermark of `delaySeconds`.
+    */
+  private[graft] def watermarked(df: DataFrame, delaySeconds: Long): DataFrame =
+    df.withColumn("__ts", timestamp_micros(expr("time div 1000")))
+      .withWatermark("__ts", s"$delaySeconds seconds")
 
-  private def grouped(df: DataFrame, durationSeconds: Long, keys: Seq[String]) =
-    df.groupBy((col("window_start") +: keys.map(col)): _*)
+  /** Start (ns) of the window column `__w` — the ns twin of `__w.start`. */
+  private[graft] val windowStartNs: Column =
+    (unix_micros(col("__w.start")) * 1000).as("window_start")
 
-  private def withWindow(df: DataFrame, durationSeconds: Long): DataFrame =
-    df.withColumn("window_start", windowStart(durationSeconds))
+  /** The one event-time grouping: `window` (built over `__ts`) as `__w`,
+    * then `keys`.
+    */
+  private def grouped(df: DataFrame, delaySeconds: Long, window: Column, keys: Seq[String]) =
+    watermarked(df, delaySeconds).groupBy(window.as("__w") +: keys.map(col): _*)
+
+  /** Tumbling-window aggregate: one row per (window, keys) with
+    * `window_start`, the keys, then `aggs`. A stream groups on
+    * `window(__ts, d)`, the key its watermark closes. A batch frame has no
+    * watermark (Spark drops it at analysis), so it groups on that
+    * window's start as a ns long — the same floor of µs event time to
+    * `d` — without the struct key and its per-row projection, which added
+    * 15% to the median ack of a served stream's push (perfbench
+    * `tcp_small_frames`, 4 vCPU).
+    */
+  private def windowAgg(df: DataFrame, durationSeconds: Long, delaySeconds: Long,
+                        keys: Seq[String])(aggs: Column*): DataFrame =
+    if (df.isStreaming) {
+      val out = grouped(df, delaySeconds, window(col("__ts"), s"$durationSeconds seconds"), keys)
+        .agg(aggs.head, aggs.tail: _*)
+      out.select(windowStartNs +: out.columns.tail.map(col): _*)
+    } else {
+      val us = expr("time div 1000")
+      val start = (us - pmod(us, lit(durationSeconds * 1000000L))) * 1000
+      df.groupBy(start.as("window_start") +: keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    }
 
   /** Deterministic "latest event" ordering key: ties on `time` broken by
     * `eventId` (the reference keeps first-seen on ties, `math.clj:39-63`;
@@ -48,15 +83,13 @@ object Windows {
     */
   private val latestKey: Column = struct(col("time"), col("eventId"))
 
-  /** Collect a window payload as an array of event structs, ordered by
-    * (time, eventId) regardless of column order.
+  /** Collect a window payload as an array of event structs, sorted by
+    * `key` (default (time, eventId)) regardless of column order.
     */
-  private[graft] def collectOrdered(cols: Seq[String]): Column =
+  private[graft] def collectOrdered(cols: Seq[String], key: Column = latestKey): Column =
     transform(
       array_sort(
-        collect_list(struct(
-          struct(col("time"), col("eventId")).as("__k"),
-          struct(cols.map(col): _*).as("__e"))),
+        collect_list(struct(key.as("__k"), struct(cols.map(col): _*).as("__e"))),
         // events may carry MapType fields (attributes), which Spark's
         // natural struct ordering rejects — compare the orderable key only
         (a, b) => keyCompare(a.getField("__k"), b.getField("__k"))),
@@ -68,23 +101,24 @@ object Windows {
   /** `fixed-time-window` — tumbling window emitting the list of events
     * (`action.clj:2564-2594`), ordered by (time, eventId).
     */
-  def fixedTimeWindow(durationSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    grouped(withWindow(df, durationSeconds), durationSeconds, keys)
-      .agg(collectOrdered(df.columns.toSeq).as("events"))
+  def fixedTimeWindow(durationSeconds: Long, keys: Seq[String] = Nil,
+                      delaySeconds: Long = 0)(df: DataFrame): DataFrame =
+    windowAgg(df, durationSeconds, delaySeconds, keys)(collectOrdered(df.columns.toSeq).as("events"))
 
   /** `sum` — per-window sum of `metric`, payload = latest event
     * (`action.clj:2468-2490`).
     */
-  def sumWindow(durationSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    aggWindow(df, durationSeconds, keys, sum(col("metric")))
+  def sumWindow(durationSeconds: Long, keys: Seq[String] = Nil, delaySeconds: Long = 0)(df: DataFrame): DataFrame =
+    customWindow(durationSeconds, sum(col("metric")), keys, delaySeconds)(df)
 
   /** `mean` — per-window mean (`action.clj:2540-2562`). */
-  def meanWindow(durationSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    aggWindow(df, durationSeconds, keys, avg(col("metric")))
+  def meanWindow(durationSeconds: Long, keys: Seq[String] = Nil, delaySeconds: Long = 0)(df: DataFrame): DataFrame =
+    customWindow(durationSeconds, avg(col("metric")), keys, delaySeconds)(df)
 
   /** `rate` — count/duration per window (`action.clj:2836-2843`). */
-  def rateWindow(durationSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    aggWindow(df, durationSeconds, keys, count(lit(1)).cast(DoubleType) / lit(durationSeconds.toDouble))
+  def rateWindow(durationSeconds: Long, keys: Seq[String] = Nil, delaySeconds: Long = 0)(df: DataFrame): DataFrame =
+    customWindow(durationSeconds, count(lit(1)).cast(DoubleType) / lit(durationSeconds.toDouble),
+      keys, delaySeconds)(df)
 
   /** Pluggable aggregation-pair surface (SURVEY §2.9): the reference's
     * window aggregations are user-extensible accumulate/finalize pairs
@@ -95,14 +129,10 @@ object Windows {
     * aggregate lands on `metric` of the window's latest event, like every
     * built-in window op.
     */
-  def customWindow(durationSeconds: Long, metricAgg: Column, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    aggWindow(df, durationSeconds, keys, metricAgg)
-
-  private def aggWindow(df: DataFrame, durationSeconds: Long, keys: Seq[String], metricAgg: Column): DataFrame = {
+  def customWindow(durationSeconds: Long, metricAgg: Column, keys: Seq[String] = Nil,
+                   delaySeconds: Long = 0)(df: DataFrame): DataFrame = {
     val all = struct(df.columns.map(col): _*)
-    grouped(withWindow(df, durationSeconds), durationSeconds, keys)
-      .agg(max_by(all, latestKey).as("base"), metricAgg.as("m"))
-      .select((col("window_start") +: keys.map(col)) ++ Seq(col("base"), col("m")): _*)
+    windowAgg(df, durationSeconds, delaySeconds, keys)(max_by(all, latestKey).as("base"), metricAgg.as("m"))
       .select(col("window_start"), col("base.*"), col("m"))
       .drop("metric").withColumnRenamed("m", "metric")
   }
@@ -111,12 +141,13 @@ object Windows {
     * (`action.clj:2492-2538`); ties broken by (time, eventId) so the
     * result is a total function of the data.
     */
-  def topWindow(durationSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    extremumWindow(df, durationSeconds, keys, isTop = true)
-  def bottomWindow(durationSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    extremumWindow(df, durationSeconds, keys, isTop = false)
+  def topWindow(durationSeconds: Long, keys: Seq[String] = Nil, delaySeconds: Long = 0)(df: DataFrame): DataFrame =
+    extremumWindow(df, durationSeconds, delaySeconds, keys, isTop = true)
+  def bottomWindow(durationSeconds: Long, keys: Seq[String] = Nil, delaySeconds: Long = 0)(df: DataFrame): DataFrame =
+    extremumWindow(df, durationSeconds, delaySeconds, keys, isTop = false)
 
-  private def extremumWindow(df: DataFrame, durationSeconds: Long, keys: Seq[String], isTop: Boolean): DataFrame = {
+  private def extremumWindow(df: DataFrame, durationSeconds: Long, delaySeconds: Long,
+                             keys: Seq[String], isTop: Boolean): DataFrame = {
     val all = struct(df.columns.map(col): _*)
     // the reference's :max/:min folds keep the NEW event on a metric tie
     // (`action.clj:2286-2311` — strict > / < against the state), so the
@@ -125,8 +156,7 @@ object Windows {
     val pick =
       if (isTop) max_by(all, struct(col("metric"), col("time"), col("eventId")))
       else min_by(all, struct(col("metric"), -col("time"), -col("eventId")))
-    grouped(withWindow(df, durationSeconds), durationSeconds, keys)
-      .agg(pick.as("base"))
+    windowAgg(df, durationSeconds, delaySeconds, keys)(pick.as("base"))
       .select(col("window_start"), col("base.*"))
   }
 
@@ -135,37 +165,34 @@ object Windows {
     * yields Clojure rationals — SURVEY §7.4.5 pins Double here).
     */
   def ratioWindow(durationSeconds: Long, c1: Condition, c2: Condition,
-                  useMetric: Boolean = false, keys: Seq[String] = Nil)(df: DataFrame): DataFrame = {
+                  useMetric: Boolean = false, keys: Seq[String] = Nil,
+                  delaySeconds: Long = 0)(df: DataFrame): DataFrame = {
     def side(c: Condition): Column =
       if (useMetric) sum(when(c.column, col("metric")).otherwise(lit(0.0)))
       else sum(when(c.column, lit(1.0)).otherwise(lit(0.0)))
     // try_divide: a window where nothing matches cond2 yields a NULL
     // ratio instead of aborting the job under ANSI mode (and NULL is
     // DuckDB's x/0 result, so the oracle pins it)
-    grouped(withWindow(df, durationSeconds), durationSeconds, keys)
-      .agg(try_divide(side(c1), side(c2)).as("metric"))
+    windowAgg(df, durationSeconds, delaySeconds, keys)(try_divide(side(c1), side(c2)).as("metric"))
   }
 
   /** `ssort` — buffer per window, emit events sorted by a field
     * (`action.clj:2641-2691`). One shuffle; the sort happens inside each
-    * window's array, not as a global sort.
+    * window's array, not as a global sort. On a stream each window's
+    * events are re-emitted once the watermark closes it — the streaming
+    * sort-with-lateness.
     */
   def ssort(durationSeconds: Long, field: String, keys: Seq[String] = Nil,
-            emitPos: Boolean = false)(df: DataFrame): DataFrame = {
-    val cols = df.columns
-    val sortKey = struct(col(field), col("eventId"))
-    val sorted = withWindow(df, durationSeconds)
-      .groupBy((col("window_start") +: keys.map(col)): _*)
-      .agg(array_sort(
-        collect_list(struct(sortKey.as("__k"), struct(cols.map(col): _*).as("__e"))),
-        (a, b) => keyCompare(a.getField("__k"), b.getField("__k"))).as("sorted"))
+            emitPos: Boolean = false, delaySeconds: Long = 0)(df: DataFrame): DataFrame = {
+    val sorted = windowAgg(df, durationSeconds, delaySeconds, keys)(
+      collectOrdered(df.columns.toSeq, struct(col(field), col("eventId"))).as("sorted"))
     // emitPos surfaces the emission index so tests can assert the one thing
     // ssort adds over its input: the per-window emitted order.
     if (emitPos)
-      sorted.select(col("window_start"), posexplode(col("sorted.__e")).as(Seq("pos", "event")))
+      sorted.select(col("window_start"), posexplode(col("sorted")).as(Seq("pos", "event")))
         .select(col("window_start"), col("pos"), col("event.*"))
     else
-      sorted.select(explode(col("sorted.__e")).as("event")).select(col("event.*"))
+      sorted.select(explode(col("sorted")).as("event")).select(col("event.*"))
   }
 
   /** `coalesce` — every duration, emit the latest non-expired event per
@@ -173,15 +200,32 @@ object Windows {
     * time within the window (batch analog of the reference's running
     * clock).
     */
-  def coalesceWindow(durationSeconds: Long, fields: Seq[String])(df: DataFrame): DataFrame = {
+  def coalesceWindow(durationSeconds: Long, fields: Seq[String],
+                     delaySeconds: Long = 0)(df: DataFrame): DataFrame = {
     val all = struct(df.columns.map(col): _*)
-    withWindow(df, durationSeconds)
-      .groupBy((col("window_start") +: fields.map(col)): _*)
-      .agg(max_by(all, latestKey).as("base"), max(col("time")).as("__clock"))
+    windowAgg(df, durationSeconds, delaySeconds, fields)(
+      max_by(all, latestKey).as("base"), max(col("time")).as("__clock"))
       .select(col("window_start"), col("base.*"), col("__clock"))
       .filter(!Stateless.expiredPredicate(col("__clock")))
       .drop("__clock")
   }
+
+  /** Sessionize: group events into per-key sessions separated by gaps of
+    * more than `gapSeconds`, one output row per session with its start,
+    * end, and event count: (keys, session_start, session_end, n_events),
+    * µs-aligned ns, the session end being `last event + gap`. Spark's
+    * native session window — on a stream, state per open (key, session)
+    * only, merged on overlap, emitted once the watermark passes the
+    * session end.
+    */
+  def sessionize(gapSeconds: Long, keys: Seq[String] = Nil,
+                 delaySeconds: Long = 0)(df: DataFrame): DataFrame =
+    grouped(df, delaySeconds, session_window(col("__ts"), s"$gapSeconds seconds"), keys)
+      .agg(count(lit(1)).as("n_events"))
+      .select(keys.map(col) ++ Seq(
+        (unix_micros(col("__w.start")) * 1000).as("session_start"),
+        (unix_micros(col("__w.end")) * 1000).as("session_end"),
+        col("n_events")): _*)
 
   /** `project` — latest event matching each of N conditions
     * (`action.clj:1377-1463`): one pass, N conditional max_by aggregates —
@@ -202,63 +246,16 @@ object Windows {
     * quantile echoed (`action.clj:2845-2929`). Uses the reference's exact
     * index formula `idx = min(n-1, floor(n*q))` over metric-sorted values
     * (Riemann's `sorted-sample-extract`, `math.clj:109-131`) rather than
-    * interpolation. For cluster-scale data prefer [[percentilesApprox]].
+    * interpolation, through the mergeable value-counts sketch (a
+    * [[graft.functions.ExactPercentiles]] `TypedImperativeAggregate`):
+    * one shuffle, the per-group state is a value→count map bounded by
+    * DISTINCT metric values (monitoring metrics repeat heavily), map-side
+    * partial aggregation, exact index formula at eval. For cluster-scale
+    * data prefer [[percentilesApprox]].
     */
-  def percentiles(durationSeconds: Long, quantiles: Seq[Double], keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    percentilesSketch(durationSeconds, quantiles, keys)(df)
-
-  /** Relational value-counts twin of [[percentiles]] — exact and
-    * codegen-only: (1) count per distinct metric value within the window
-    * (map-side combine, rows after = distinct values, not events);
-    * (2) cumulative counts per window in metric order; (3) per quantile,
-    * keep the single value whose cumulative range covers the exact index
-    * idx = min(n-1, floor(n*q)) — a filter, no second aggregation. No
-    * aggregation buffer ever holds more than one row.
-    *
-    * Measured at sf0.1/local[32]: the sketch wins (0.80s vs 1.25s warm,
-    * 1.8s vs 4.9s cold) — one exchange beats two window sorts at this
-    * shape, object-hash aggregation notwithstanding — so [[percentiles]]
-    * dispatches to the sketch. This form remains for engines/plans where
-    * a TypedImperativeAggregate is unavailable or the single wide
-    * exchange dominates; the property suite pins all three formulations
-    * value-identical.
-    */
-  def percentilesRelational(durationSeconds: Long, quantiles: Seq[Double], keys: Seq[String] = Nil)(df: DataFrame): DataFrame = {
-    // null metrics are not sortable samples — dropped up front like the
-    // sketch/naive twins drop them inside their aggregates (delta: a
-    // window with ONLY null metrics disappears here, yields null-metric
-    // rows there; no gate or reference query observes that window)
-    val part = col("window_start") +: keys.map(col)
-    val vc = withWindow(df, durationSeconds)
-      .filter(col("metric").isNotNull)
-      .withColumn("metric", col("metric").cast("double"))
-      .groupBy(part :+ col("metric"): _*)
-      .agg(count(lit(1)).as("__c"))
-    val byMetric = Window.partitionBy(part: _*).orderBy(col("metric"))
-    val whole = Window.partitionBy(part: _*)
+  def percentiles(durationSeconds: Long, quantiles: Seq[Double], keys: Seq[String] = Nil)(df: DataFrame): DataFrame = {
     val qArr = array(quantiles.map(lit): _*)
-    vc.withColumn("__cum", sum(col("__c")).over(byMetric))
-      .withColumn("__n", sum(col("__c")).over(whole))
-      .withColumn("quantile", explode(qArr))
-      .withColumn("__idx", least(col("__n") - 1, floor(col("__n") * col("quantile"))))
-      // this value covers 0-based sorted indices [__cum - __c, __cum - 1]
-      .filter(col("__cum") - col("__c") <= col("__idx") && col("__idx") < col("__cum"))
-      .drop("__c", "__cum", "__n", "__idx")
-  }
-
-  /** The mergeable value-counts sketch (a
-    * [[graft.functions.ExactPercentiles]] `TypedImperativeAggregate`) —
-    * the gated implementation behind [[percentiles]]: one shuffle, the
-    * per-group state is a value→count map bounded by DISTINCT metric
-    * values (monitoring metrics repeat heavily), map-side partial
-    * aggregation, exact index formula at eval. Object-hash aggregation
-    * runs outside codegen but still beats the two-exchange relational
-    * twin at every measured shape (see [[percentilesRelational]]).
-    */
-  def percentilesSketch(durationSeconds: Long, quantiles: Seq[Double], keys: Seq[String] = Nil)(df: DataFrame): DataFrame = {
-    val qArr = array(quantiles.map(lit): _*)
-    grouped(withWindow(df, durationSeconds), durationSeconds, keys)
-      .agg(graft.functions.PercentileSketch
+    windowAgg(df, durationSeconds, 0, keys)(graft.functions.PercentileSketch
         .exactPercentiles(col("metric").cast("double"), quantiles).as("__ms"))
       .select(col("*"), posexplode(col("__ms")).as(Seq("__qi", "metric")))
       .withColumn("quantile", element_at(qArr, col("__qi") + 1))
@@ -273,8 +270,7 @@ object Windows {
     */
   private[graft] def percentilesNaive(durationSeconds: Long, quantiles: Seq[Double], keys: Seq[String] = Nil)(df: DataFrame): DataFrame = {
     val qArr = array(quantiles.map(lit): _*)
-    grouped(withWindow(df, durationSeconds), durationSeconds, keys)
-      .agg(array_sort(collect_list(col("metric"))).as("sorted"))
+    windowAgg(df, durationSeconds, 0, keys)(array_sort(collect_list(col("metric"))).as("sorted"))
       .withColumn("quantile", explode(qArr))
       .withColumn("metric",
         expr("sorted[cast(least(size(sorted) - 1, floor(size(sorted) * quantile)) as int)]"))
@@ -286,17 +282,18 @@ object Windows {
     */
   def percentilesApprox(durationSeconds: Long, quantiles: Seq[Double], accuracy: Int = 10000,
                         keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    grouped(withWindow(df, durationSeconds), durationSeconds, keys)
-      .agg(percentile_approx(col("metric"), array(quantiles.map(lit): _*), lit(accuracy)).as("metrics"))
+    windowAgg(df, durationSeconds, 0, keys)(
+      percentile_approx(col("metric"), array(quantiles.map(lit): _*), lit(accuracy)).as("metrics"))
       .select(col("window_start") +: keys.map(col) :+
         posexplode(col("metrics")).as(Seq("qi", "metric")): _*)
 
   /** `coll-increase` — counter increase over a window: newest minus oldest
     * metric, drop non-positive (counter reset) (`action.clj:2693-2740`).
     */
-  def collIncrease(durationSeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    grouped(withWindow(df, durationSeconds), durationSeconds, keys)
-      .agg((max_by(col("metric"), latestKey) - min_by(col("metric"), latestKey)).as("metric"))
+  def collIncrease(durationSeconds: Long, keys: Seq[String] = Nil,
+                   delaySeconds: Long = 0)(df: DataFrame): DataFrame =
+    windowAgg(df, durationSeconds, delaySeconds, keys)(
+      (max_by(col("metric"), latestKey) - min_by(col("metric"), latestKey)).as("metric"))
       .filter(col("metric") > 0)
 
   // --------------------------------------------------------------------

@@ -2,7 +2,7 @@ package graft.sinks
 
 import graft.ir.SinkSpec
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.{SparkContext, TaskContext, TaskKilledException}
+import org.apache.spark.{JobExecutionStatus, SparkContext, TaskContext, TaskKilledException}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -30,9 +30,11 @@ import scala.util.control.NonFatal
   * after the call's random id. Once the job succeeded, the driver renames
   * the files of the successful attempts into their partition directories
   * as `part-<partition>-<callId>-a<attempt>.json`. In a `finally`, on
-  * success and failure alike, it deletes every staged file whose name
-  * starts with its call id, which also removes the files of failed task
-  * attempts. A call that fails anywhere also deletes the files it already
+  * success and failure alike, it deletes every staged file named after
+  * its call id (and their hidden `.crc` checksums), which also removes the
+  * files of failed task attempts; a failed call first waits, within a
+  * bound, for its job's killed tasks to end, so none creates a file after
+  * the sweep. A call that fails anywhere also deletes the files it already
   * renamed, and the emptied staging directory when no other call of the
   * process is in flight, then rethrows, so a failed (nacked) push leaves
   * no rows. No successful call creates or removes a directory of its own
@@ -125,17 +127,22 @@ object FileSink {
     val stagingUri = staging.toString
     val published = scala.collection.mutable.ArrayBuffer[Path]()
     var failed = true
+    var submitted = false
     enter(staging)
     try {
       fs.mkdirs(staging) // also the sink root; a no-op once both exist
+      // the tag finds the call's job again if it fails (see awaitTasksEnded)
+      sc.addJobTag(callId)
       // the rows go straight from the plan to the writers: no Row
       // deserialization, and still one SQL execution that listeners see.
       // The job runs this object's task function, which captures no
       // `this`: `collect` would hand the closure cleaner a lambda of
       // `RDD`, whose class file it re-reads on every call.
-      val files = SQLExecution.withNewExecutionId(qe, Some("FileSink.write")) {
-        sc.runJob(qe.toRdd, writeTask(conf, stagingUri, callId) _).flatten
-      }
+      val files = try SQLExecution.withNewExecutionId(qe, Some("FileSink.write")) {
+        val rdd = qe.toRdd
+        submitted = true
+        sc.runJob(rdd, writeTask(conf, stagingUri, callId) _).flatten
+      } finally sc.removeJobTag(callId)
       files.map(_._1).distinct.foreach(d => fs.mkdirs(under(root, d)))
       files.foreach { case (d, staged, name) =>
         val dst = new Path(under(root, d), name)
@@ -153,11 +160,47 @@ object FileSink {
       // of failed task attempts, and on failure everything not renamed.
       // Best effort: a staged file holds no published rows and readers
       // skip it, so failing here must not fail the call.
-      try fs.listStatus(staging, (p: Path) => p.getName.startsWith(callId))
+      if (failed && submitted) awaitTasksEnded(sc, callId)
+      try fs.listStatus(staging, (p: Path) =>
+          p.getName.startsWith(callId) || p.getName.startsWith("." + callId))
         .foreach(f => fs.delete(f.getPath, false))
       catch { case NonFatal(_) => }
       leave(fs, staging, failed)
     }
+  }
+
+  /** Longest wait of a failed call for its job's tasks to end. */
+  private val TaskEndWaitMs = 10000L
+
+  /** How long a failed call waits for the status tracker to list its job
+    * at all. A job that failed before it started (its partitions or its
+    * stages could not be built) is never listed and ran no task; a job
+    * that did start is listed once the listener bus delivers its start,
+    * within milliseconds.
+    */
+  private val JobListedWaitMs = 500L
+
+  /** Waits, at most [[TaskEndWaitMs]], until the job tagged `tag` has
+    * ended and no task of its stages is active, or, if no job with that
+    * tag is listed after [[JobListedWaitMs]], not at all. `runJob` throws
+    * at the first failed task, before the job's other tasks have seen
+    * their kill; one of them may still be creating a staged file and its
+    * checksum, which the sweep must come after. The status tracker learns
+    * of the job's end and of each task's end through the listener bus,
+    * in order, so a job it shows ended with no active task has no task
+    * left running.
+    */
+  private def awaitTasksEnded(sc: SparkContext, tag: String): Unit = {
+    val st = sc.statusTracker
+    val start = System.nanoTime()
+    def waitedMs = (System.nanoTime() - start) / 1000000L
+    def running = {
+      val jobs = st.getJobIdsForTag(tag).flatMap(st.getJobInfo(_))
+      if (jobs.isEmpty) waitedMs < JobListedWaitMs
+      else jobs.exists(j => j.status == JobExecutionStatus.RUNNING ||
+        j.stageIds.exists(s => st.getStageInfo(s).exists(_.numActiveTasks > 0)))
+    }
+    while (running && waitedMs < TaskEndWaitMs) Thread.sleep(2)
   }
 
   /** One task attempt: rows (dir, json) arrive sorted by partition

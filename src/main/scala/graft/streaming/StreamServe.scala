@@ -1,11 +1,12 @@
 package graft.streaming
 
+import graft.operators.Windows
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Config-declared long-running Structured Streaming queries — the serve
-  * path that proves the streaming twins end-to-end OUTSIDE tests: a
+  * path that proves the streaming plans end-to-end OUTSIDE tests: a
   * `:streaming {:queries [...]}` section in the main `config.edn` boots
   * `readStream → TTL'd stateful op → writeStream` with a checkpoint, so a
   * crashed/restarted server resumes per-key state instead of reseeding
@@ -29,10 +30,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * restart from scratch, which is precisely the failure mode this path
   * exists to rule out.
   *
-  * Ops cover one representative of each streaming family (all TTL'd via
-  * [[Streaming]]'s eviction harness): `ewma`, `changed`, `throttle`,
+  * Ops cover one representative of each streaming family: `ewma`,
+  * `changed`, `throttle` (TTL'd via [[Streaming]]'s eviction harness),
   * `dedup`, and the windowed aggregates `sum-window` / `mean-window` /
-  * `rate-window` / `fixed-time-window`.
+  * `rate-window` / `fixed-time-window` ([[graft.operators.Windows]], the
+  * builders the batch path calls).
   */
 object StreamServe {
 
@@ -148,17 +150,17 @@ object StreamServe {
           keys(op) match { case Nil => Seq("host", "service"); case ks => ks },
           num(op, "delay-seconds", 60).toLong)(df)
       case "sum-window" =>
-        df => Streaming.sumWindow(num(op, "seconds", 60).toLong,
-          num(op, "delay-seconds", 60).toLong, keys(op))(df)
+        Windows.sumWindow(num(op, "seconds", 60).toLong, keys(op),
+          num(op, "delay-seconds", 60).toLong)
       case "mean-window" =>
-        df => Streaming.meanWindow(num(op, "seconds", 60).toLong,
-          num(op, "delay-seconds", 60).toLong, keys(op))(df)
+        Windows.meanWindow(num(op, "seconds", 60).toLong, keys(op),
+          num(op, "delay-seconds", 60).toLong)
       case "rate-window" =>
-        df => Streaming.rateWindow(num(op, "seconds", 60).toLong,
-          num(op, "delay-seconds", 60).toLong, keys(op))(df)
+        Windows.rateWindow(num(op, "seconds", 60).toLong, keys(op),
+          num(op, "delay-seconds", 60).toLong)
       case "fixed-time-window" =>
-        df => Streaming.fixedTimeWindow(num(op, "seconds", 60).toLong,
-          num(op, "delay-seconds", 60).toLong, keys(op))(df)
+        Windows.fixedTimeWindow(num(op, "seconds", 60).toLong, keys(op),
+          num(op, "delay-seconds", 60).toLong)
       case "metric-quantiles" =>
         // KMV quantile monitor over the event stream: k*16 bytes of state
         // per open window regardless of rate (ns event time -> timestamp

@@ -9,14 +9,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** The Structured Streaming execution path (SURVEY §7.1 modules 6-7).
   *
   * The reference is a streaming engine whose defining property is that all
-  * clocks advance on EVENT time (`site/.../riemann-diff/_index.md:15-20`);
-  * its shared window machine implements tumbling event-time windows with
-  * allowed lateness `:delay`, flushing a window when
-  * `clock - delay >= window_end` (`action.clj:2387-2454`). That maps 1:1
-  * onto `withWatermark(delay) + window(duration)` in append mode: the
-  * watermark IS the reference's `clock - delay`, advancing at micro-batch
-  * boundaries instead of per event (documented delta, SURVEY §7.4.3 — same
-  * steady-state results on in-delay data, different edge timing).
+  * clocks advance on EVENT time (`site/.../riemann-diff/_index.md:15-20`).
+  * Its event-time windows (tumbling windows with allowed lateness
+  * `:delay`, sessions) are not here: [[graft.operators.Windows]] is the
+  * one builder of each, for batch and streaming frames; on a stream it
+  * is `withWatermark(delay) + window(duration)`. This object holds the
+  * watermarked joins and dedups, the sketch monitors, and the per-key
+  * folds.
   *
   * Genuinely sequential operators (count windows, throttle, ewma, changed,
   * smax/smin) use `flatMapGroupsWithState` keyed by the `by` fork fields —
@@ -30,159 +29,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * StreamingSpec against the batch implementation).
   */
 object Streaming {
-
-  /** µs-precision event-time column for the watermark machinery (event
-    * time stays a ns long everywhere else).
-    */
-  private def withTs(df: DataFrame): DataFrame =
-    df.withColumn("__ts", timestamp_micros(expr("time div 1000")))
-
-  private def windowStartNs: org.apache.spark.sql.Column =
-    (unix_micros(col("window.start")) * 1000).as("window_start")
-
-  private def grouped(df: DataFrame, durationSeconds: Long, delaySeconds: Long,
-                      keys: Seq[String]) =
-    withTs(df).withWatermark("__ts", s"$delaySeconds seconds")
-      .groupBy(window(col("__ts"), s"$durationSeconds seconds") +: keys.map(col): _*)
-
-  /** `fixed-time-window` over a stream: emits each closed window's payload
-    * once the watermark passes its end (`action.clj:2564-2594` + lateness
-    * machine `action.clj:2434-2450`).
-    */
-  def fixedTimeWindow(durationSeconds: Long, delaySeconds: Long,
-                      keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    grouped(df, durationSeconds, delaySeconds, keys)
-      .agg(Windows.collectOrdered(df.columns.toSeq).as("events"))
-      .select(windowStartNs +: keys.map(col) :+ col("events"): _*)
-
-  /** `sum` / `mean` / `rate` / `top` / `bottom` over a stream
-    * (`action.clj:2468-2538, 2836-2843`): same shapes as the batch twins,
-    * same (time, eventId) tie-breaks.
-    */
-  def sumWindow(durationSeconds: Long, delaySeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    aggWindow(df, durationSeconds, delaySeconds, keys, sum(col("metric")))
-
-  def meanWindow(durationSeconds: Long, delaySeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    aggWindow(df, durationSeconds, delaySeconds, keys, avg(col("metric")))
-
-  def rateWindow(durationSeconds: Long, delaySeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    aggWindow(df, durationSeconds, delaySeconds, keys,
-      count(lit(1)).cast("double") / lit(durationSeconds.toDouble))
-
-  def topWindow(durationSeconds: Long, delaySeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    extremum(df, durationSeconds, delaySeconds, keys, isTop = true)
-
-  def bottomWindow(durationSeconds: Long, delaySeconds: Long, keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    extremum(df, durationSeconds, delaySeconds, keys, isTop = false)
-
-  /** Pluggable aggregation pair over a stream — see
-    * [[graft.operators.Windows.customWindow]]; any aggregation `Column`
-    * (built-in or `udaf()`-wrapped Aggregator) works under a watermark.
-    */
-  def customWindow(durationSeconds: Long, delaySeconds: Long, metricAgg: org.apache.spark.sql.Column,
-                   keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    aggWindow(df, durationSeconds, delaySeconds, keys, metricAgg)
-
-  private def aggWindow(df: DataFrame, durationSeconds: Long, delaySeconds: Long,
-                        keys: Seq[String], metricAgg: org.apache.spark.sql.Column): DataFrame = {
-    val all = struct(df.columns.map(col): _*)
-    grouped(df, durationSeconds, delaySeconds, keys)
-      .agg(max_by(all, struct(col("time"), col("eventId"))).as("base"), metricAgg.as("m"))
-      .select(windowStartNs, col("base.*"), col("m"))
-      .drop("metric").withColumnRenamed("m", "metric")
-  }
-
-  private def extremum(df: DataFrame, durationSeconds: Long, delaySeconds: Long,
-                       keys: Seq[String], isTop: Boolean): DataFrame = {
-    val all = struct(df.columns.map(col): _*)
-    // latest tied event wins for top AND bottom (reference :max/:min
-    // folds — see Windows.extremumWindow)
-    val pick =
-      if (isTop) max_by(all, struct(col("metric"), col("time"), col("eventId")))
-      else min_by(all, struct(col("metric"), -col("time"), -col("eventId")))
-    grouped(df, durationSeconds, delaySeconds, keys)
-      .agg(pick.as("base"))
-      .select(windowStartNs, col("base.*"))
-  }
-
-  /** `ratio` over a stream (`action.clj:2975-3009`). */
-  def ratioWindow(durationSeconds: Long, delaySeconds: Long,
-                  c1: graft.conditions.Condition, c2: graft.conditions.Condition,
-                  useMetric: Boolean = false, keys: Seq[String] = Nil)(df: DataFrame): DataFrame = {
-    def side(c: graft.conditions.Condition) =
-      if (useMetric) sum(when(c.column, col("metric")).otherwise(lit(0.0)))
-      else sum(when(c.column, lit(1.0)).otherwise(lit(0.0)))
-    grouped(df, durationSeconds, delaySeconds, keys)
-      .agg(try_divide(side(c1), side(c2)).as("metric")) // NULL, not abort, on zero (see Windows.ratioWindow)
-      .select(windowStartNs +: keys.map(col) :+ col("metric"): _*)
-  }
-
-  /** `coalesce` over a stream (`action.clj:721-821`): latest non-expired
-    * event per fields combination per window; the expiry clock is the
-    * window's max event time, as in the batch twin.
-    */
-  def coalesceWindow(durationSeconds: Long, delaySeconds: Long,
-                     fields: Seq[String])(df: DataFrame): DataFrame = {
-    val all = struct(df.columns.map(col): _*)
-    grouped(df, durationSeconds, delaySeconds, fields)
-      .agg(max_by(all, struct(col("time"), col("eventId"))).as("base"),
-        max(col("time")).as("__clock"))
-      .select(windowStartNs, col("base.*"), col("__clock"))
-      .filter(!graft.operators.Stateless.expiredPredicate(col("__clock")))
-      .drop("__clock")
-  }
-
-  /** Sessionize over a stream: Spark's NATIVE session window — state per
-    * open (key, session) only, merged on overlap, emitted once the
-    * watermark passes `last event + gap`. Emits (keys, session_start,
-    * session_end, n_events) in µs-aligned ns, row-identical to the batch
-    * twin ([[graft.operators.Analytics.sessionize]]).
-    */
-  def sessionize(gapSeconds: Long, delaySeconds: Long,
-                 keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    withTs(df).withWatermark("__ts", s"$delaySeconds seconds")
-      .groupBy(keys.map(col) :+ session_window(col("__ts"), s"$gapSeconds seconds").as("__w"): _*)
-      .agg(count(lit(1)).as("n_events"))
-      .select(keys.map(col) ++ Seq(
-        (unix_micros(col("__w.start")) * 1000).as("session_start"),
-        (unix_micros(col("__w.end")) * 1000).as("session_end"),
-        col("n_events")): _*)
-
-  /** `percentiles` over a stream (`action.clj:2845-2929`): exact per-window
-    * quantiles, one row per quantile — the same mergeable value-counts
-    * aggregate as the batch twin ([[graft.functions.ExactPercentiles]]),
-    * so open-window state is a distinct-value map, not the window's full
-    * payload. For unbounded distinct cardinality prefer
-    * `percentile_approx` (constant-state sketch) — same plan shape.
-    */
-  def percentiles(durationSeconds: Long, delaySeconds: Long, quantiles: Seq[Double],
-                  keys: Seq[String] = Nil)(df: DataFrame): DataFrame =
-    grouped(df, durationSeconds, delaySeconds, keys)
-      .agg(graft.functions.PercentileSketch
-        .exactPercentiles(col("metric").cast("double"), quantiles).as("__ms"))
-      .select(windowStartNs +: keys.map(col) :+ col("__ms"): _*)
-      .select(col("*"), posexplode(col("__ms")).as(Seq("__qi", "metric")))
-      .withColumn("quantile",
-        element_at(array(quantiles.map(lit): _*), col("__qi") + 1))
-      .drop("__ms", "__qi")
-
-  /** `ssort` over a stream (`action.clj:2641-2691`): the window payload
-    * re-emitted as individual events in (field, eventId) order once the
-    * watermark closes the window — the true streaming sort-with-lateness.
-    */
-  def ssort(durationSeconds: Long, delaySeconds: Long, field: String,
-            keys: Seq[String] = Nil)(df: DataFrame): DataFrame = {
-    val cols = df.columns
-    val sortKey = struct(col(field), col("eventId"))
-    def cmp(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-      when(x < y, -1).when(x > y, 1).otherwise(0)
-    grouped(df, durationSeconds, delaySeconds, keys)
-      .agg(array_sort(
-        collect_list(struct(sortKey.as("__k"), struct(cols.map(col): _*).as("__e"))),
-        (a, b) => cmp(a.getField("__k"), b.getField("__k"))).as("sorted"))
-      .select(explode(col("sorted.__e")).as("event"))
-      .select(col("event.*"))
-  }
 
   /** Stream-stream interval join — the streaming twin of
     * [[graft.operators.Joins.rangeJoin]] for the "events × incident
@@ -207,9 +53,9 @@ object Streaming {
     require(keys.nonEmpty, "rangeJoinEvents: at least one key column")
     require(spanSeconds >= 0, s"rangeJoinEvents: negative span ($spanSeconds s) can never match")
     require(delaySeconds >= 0, s"rangeJoinEvents: negative watermark delay ($delaySeconds s)")
-    val l = withTs(left).withWatermark("__ts", s"$delaySeconds seconds")
+    val l = Windows.watermarked(left, delaySeconds)
     val payload = (valueCols :+ "time").distinct
-    val r = withTs(right).withWatermark("__ts", s"$delaySeconds seconds")
+    val r = Windows.watermarked(right, delaySeconds)
       .select(keys.map(col) ++ Seq(col("__ts").as("__rts")) ++
         payload.map(c => col(c).as(s"$prefix$c")): _*)
     val cond = keys.map(k => l(k) === r(k)).reduce(_ && _) &&
@@ -238,7 +84,7 @@ object Streaming {
   def dedupWithinWatermark(keyCols: Seq[String], delaySeconds: Long)(df: DataFrame): DataFrame = {
     require(keyCols.nonEmpty, "dedupWithinWatermark: at least one key column")
     require(delaySeconds >= 0, s"dedupWithinWatermark: negative horizon ($delaySeconds s)")
-    withTs(df).withWatermark("__ts", s"$delaySeconds seconds")
+    Windows.watermarked(df, delaySeconds)
       .dropDuplicatesWithinWatermark(keyCols)
       .drop("__ts")
   }
@@ -268,17 +114,16 @@ object Streaming {
       // per-row cost of this monitor
       .withColumn("__tok", graft.functions.Text.tokenCount(col(textCol)))
       .withWatermark("__ts", s"$delaySeconds seconds")
-      .groupBy(window(col("__ts"), s"$durationSeconds seconds"), col(groupCol))
+      .groupBy(window(col("__ts"), s"$durationSeconds seconds").as("__w"), col(groupCol))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("__tok")).as("n_tokens"),
         approx_count_distinct(col(langCol)).cast("long").as("n_langs"),
         graft.functions.PercentileSketch.exactPercentiles(
           col("__tok").cast("double"), quantiles).as("__qs"))
-      .select(col("window"), col(groupCol), col("n_docs"), col("n_tokens"), col("n_langs"),
+      .select(Windows.windowStartNs, col(groupCol), col("n_docs"), col("n_tokens"), col("n_langs"),
         posexplode(col("__qs")).as(Seq("__qi", "tokens_q")))
       .withColumn("quantile", element_at(qArr, col("__qi") + 1))
-      .select((unix_micros(col("window.start")) * 1000).as("window_start"),
-        col(groupCol), col("n_docs"), col("n_tokens"), col("n_langs"),
+      .select(col("window_start"), col(groupCol), col("n_docs"), col("n_tokens"), col("n_langs"),
         col("quantile"), col("tokens_q"))
   }
 
@@ -308,7 +153,7 @@ object Streaming {
       .select(col("__ts"),
         explode(graft.functions.Text.tokens(col(textCol))).as("__tok"))
     val agged = toks
-      .groupBy(window(col("__ts"), s"$durationSeconds seconds"))
+      .groupBy(window(col("__ts"), s"$durationSeconds seconds").as("__w"))
       .agg(count(lit(1)).as("n_tokens"),
         graft.functions.Hll.hll(col("__tok"), b, seed).as("__regs"),
         graft.functions.MisraGries.misraGries(col("__tok"), k).as("__hh"))
@@ -320,7 +165,7 @@ object Streaming {
     val est = when(raw <= lit(graft.functions.Hll.LinearCutoff * m) && zeros > 0,
       lit(m.toDouble) * log(lit(m.toDouble) / zeros.cast("double"))).otherwise(raw)
     agged.select(
-      windowStartNs,
+      Windows.windowStartNs,
       col("n_tokens"), est.as("vocab_est"),
       transform(col("__hh"), h => h.getField("item")).as("top_tokens"))
   }
@@ -346,7 +191,7 @@ object Streaming {
       s"metricSketchWindow: quantiles must be in [0, 1], got $qs")
     val agged = df.withColumn("__ts", col(tsCol).cast("timestamp"))
       .withWatermark("__ts", s"$delaySeconds seconds")
-      .groupBy(window(col("__ts"), s"$durationSeconds seconds"))
+      .groupBy(window(col("__ts"), s"$durationSeconds seconds").as("__w"))
       .agg(count(lit(1)).as("n_rows"),
         graft.functions.BottomK.bottomK(
           graft.functions.Text.md5Hash64(
@@ -364,7 +209,7 @@ object Streaming {
         when(size(vals) > 0, element_at(vals, idx(q)))
           .otherwise(lit(null).cast("double")).as("value"))
     }: _*)
-    agged.select(windowStartNs, col("n_rows"), quants.as("quantiles"))
+    agged.select(Windows.windowStartNs, col("n_rows"), quants.as("quantiles"))
   }
 
   /** One near-dup candidate: `doc_id` collides with the earlier
@@ -817,7 +662,7 @@ object Streaming {
         // __ts must survive the projection: it is the only attribute
         // carrying the watermark metadata, and EventTimeTimeout requires
         // one in the child output (see typed()'s scaladoc)
-        (typed(withTs(df).withWatermark("__ts", s"$ttl seconds"), Seq(col("__ts"))),
+        (typed(Windows.watermarked(df, ttl), Seq(col("__ts"))),
           GroupStateTimeout.EventTimeTimeout)
       case None => (typed(df), GroupStateTimeout.NoTimeout)
     }

@@ -2,6 +2,9 @@ package graft
 
 import graft.ir.{Engine, EngineCtx, Node}
 import graft.sinks.FileSink
+import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -115,6 +118,24 @@ class FileSinkSpec extends AnyFunSuite {
     intercept[Exception](Engine.run(node, df, EngineCtx(testMode = false)))
     assert(walk(out).filter(Files.isRegularFile(_)).isEmpty)
     assert(staged(out).isEmpty)
+  }
+
+  test("a job failing before it starts returns at once and leaves nothing staged") {
+    // runJob computes the partitions before it submits a job, so this call
+    // fails with no job listed under its tag
+    val noParts = new RDD[Row](spark.sparkContext, Nil) {
+      override def compute(p: Partition, ctx: TaskContext): Iterator[Row] = Iterator.empty
+      override protected def getPartitions: Array[Partition] = throw new IllegalStateException("no partitions")
+    }
+    val df = spark.createDataFrame(noParts, events(ev(1, 1 * S)).schema)
+    val out = tmp("graft-fsink-nojob").resolve("out")
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](FileSink.write(df, out.toString, Nil))
+    val ms = (System.nanoTime() - t0) / 1000000L
+    assert(e.getMessage == "no partitions")
+    assert(ms < 5000, s"$ms ms")
+    assert(walk(out).filter(Files.isRegularFile(_)).isEmpty)
+    assert(!Files.exists(out.resolve("_staging")))
   }
 
   test("concurrent appends into one directory: 4 threads x 25 calls, every row once, no staging left") {

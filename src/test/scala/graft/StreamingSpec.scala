@@ -8,10 +8,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Structured Streaming twins vs batch implementations: every op runs a
-  * MemoryStream through the streaming path and must produce the same rows
-  * as the CORRECTNESS-gated batch twin on the same fixture (VERDICT r1
-  * task 2's done-criterion).
+/** Streaming vs batch: every op runs a MemoryStream through the
+  * streaming path and must produce the same rows as the CORRECTNESS-gated
+  * batch run on the same fixture. The event-time windows are one
+  * [[graft.operators.Windows]] builder called on both sides; the per-key
+  * folds are `Streaming` twins of `Analytics`.
   */
 class StreamingSpec extends AnyFunSuite {
   import TestSpark._
@@ -72,7 +73,7 @@ class StreamingSpec extends AnyFunSuite {
     ev(9, 130 * S, host = "b", id = 5))
 
   test("streaming fixed-time-window == batch twin after watermark flush") {
-    val out = runStream(Streaming.fixedTimeWindow(60, 10, Seq("host")),
+    val out = runStream(Windows.fixedTimeWindow(60, Seq("host"), 10),
       Seq(windowFixture, flush1, flush2))
     def proj(df: DataFrame) = df
       .select(col("window_start"), col("host"),
@@ -83,14 +84,14 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming sum/top == batch twins after watermark flush") {
-    val sumOut = runStream(Streaming.sumWindow(60, 10, Seq("host")),
+    val sumOut = runStream(Windows.sumWindow(60, Seq("host"), 10),
       Seq(windowFixture, flush1, flush2))
     def projSum(df: DataFrame) = df.select("window_start", "host", "metric")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
     assert(projSum(noFlush(sumOut)) ==
       projSum(Windows.sumWindow(60, Seq("host"))(events(windowFixture: _*))))
 
-    val topOut = runStream(Streaming.topWindow(60, 10, Seq("host")),
+    val topOut = runStream(Windows.topWindow(60, Seq("host"), 10),
       Seq(windowFixture, flush1, flush2))
     def projTop(df: DataFrame) = df.select("window_start", "host", "eventId")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
@@ -163,7 +164,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming sessionize (native session window) == batch twin") {
-    import graft.operators.Analytics
     // host a: events at 1s,2s then a 100s gap then 200s → two sessions;
     // host b: one session
     val fixture = Seq(
@@ -174,11 +174,35 @@ class StreamingSpec extends AnyFunSuite {
       .select("host", "session_start", "session_end", "n_events").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val streamed = rows(runStream(
-      df => Streaming.sessionize(30, 5, Seq("host"))(df)
+      df => Windows.sessionize(30, Seq("host"), 5)(df)
         .filter(col("session_start") < 90000L * S), // drop the flush events' session
       Seq(fixture, flush1, flush2)))
-    val batch = rows(Analytics.sessionize(30, Seq("host"))(events(fixture: _*)))
+    val batch = rows(Windows.sessionize(30, Seq("host"))(events(fixture: _*)))
     assert(streamed.nonEmpty && streamed == batch)
+  }
+
+  test("pre-1970 window key and a gap-exact session: batch == stream") {
+    // window() floors event time: -15 s falls in [-20 s, -10 s) for a
+    // 10 s window (time div d would truncate it to -10 s); host b's events
+    // are exactly one gap apart and stay one session
+    val fixture = Seq(ev(1, -15 * S, host = "a", id = 1),
+      ev(2, 100 * S, host = "b", id = 2), ev(3, 130 * S, host = "b", id = 3))
+    def starts(df: DataFrame) = df.filter(col("window_start") < 90000L * S)
+      .select("window_start", "host").collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val batchStarts = starts(Windows.sumWindow(10, Seq("host"))(events(fixture: _*)))
+    assert(batchStarts == Set((-20 * S, "a"), (100 * S, "b"), (130 * S, "b")))
+    // a stream's watermark starts at the epoch, so a window that ends at
+    // or before it is late from the first micro-batch on and never emitted
+    assert(starts(runStream(Windows.sumWindow(10, Seq("host"), 5),
+      Seq(fixture, flush1, flush2))) == batchStarts.filter(_._1 + 10 * S > 0))
+
+    def sessions(df: DataFrame) = df.filter(col("session_start") < 90000L * S)
+      .select("host", "session_start", "session_end", "n_events").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val batchSessions = sessions(Windows.sessionize(30, Seq("host"))(events(fixture: _*)))
+    assert(batchSessions == Set(("a", -15 * S, 15 * S, 1L), ("b", 100 * S, 160 * S, 2L)))
+    assert(sessions(runStream(Windows.sessionize(30, Seq("host"), 5),
+      Seq(fixture, flush1, flush2))) == batchSessions)
   }
 
   test("streaming generic cond-dt (IR dispatch) == batch twin") {
@@ -255,20 +279,20 @@ class StreamingSpec extends AnyFunSuite {
     val flushes = Seq(flush1, flush2)
 
     val ratioOut = runStream(
-      Streaming.ratioWindow(60, 10, Eq(Field("state"), "critical"), AlwaysTrue),
+      Windows.ratioWindow(60, Eq(Field("state"), "critical"), AlwaysTrue, delaySeconds = 10),
       fx +: flushes)
     def projR(df: DataFrame) = df.select("window_start", "metric")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(projR(noFlush(ratioOut)) ==
       projR(graft.operators.Windows.ratioWindow(60, Eq(Field("state"), "critical"), AlwaysTrue)(events(fx: _*))))
 
-    val coalOut = runStream(Streaming.coalesceWindow(60, 10, Seq("host")), fx +: flushes)
+    val coalOut = runStream(Windows.coalesceWindow(60, Seq("host"), 10), fx +: flushes)
     def projC(df: DataFrame) = df.select("window_start", "host", "eventId")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(projC(noFlush(coalOut)) ==
       projC(graft.operators.Windows.coalesceWindow(60, Seq("host"))(events(fx: _*))))
 
-    val ssortOut = runStream(Streaming.ssort(60, 10, "metric"), fx +: flushes)
+    val ssortOut = runStream(Windows.ssort(60, "metric", delaySeconds = 10), fx +: flushes)
     def projS(df: DataFrame) = df.filter(col("time") < 90000L * S)
       .select("eventId").collect().map(_.getLong(0)).toSet
     assert(projS(ssortOut) ==
@@ -309,7 +333,7 @@ class StreamingSpec extends AnyFunSuite {
   test("too-late events are dropped by the watermark (action.clj:2419-2426)") {
     // event at 10s arrives after the watermark has passed its window end
     val late = Seq(ev(42, 10 * S, id = 50))
-    val out = runStream(Streaming.sumWindow(60, 10, Seq("host")),
+    val out = runStream(Windows.sumWindow(60, Seq("host"), 10),
       Seq(windowFixture, flush1, late, flush2))
     // the [0,60) window for host a flushed before the late event arrived:
     // its sum must NOT include the late 42
