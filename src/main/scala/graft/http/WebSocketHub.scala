@@ -112,6 +112,7 @@ final class WebSocketHub(port: Int = 0,
   private val server = new ServerSocket()
   private val subs = new java.util.concurrent.CopyOnWriteArrayList[Sub]()
   private val closeTimer = new java.util.Timer("graft-ws-close", true)
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   @volatile private var running = false
 
   def boundPort: Int = server.getLocalPort
@@ -158,11 +159,11 @@ final class WebSocketHub(port: Int = 0,
           group.foreach(sub => if (!frames.forall(sub.offer) && !sub.isClosed) dropSub(sub))
         } catch {
           case e: org.apache.spark.sql.AnalysisException =>
-            System.err.println(s"[ws] dropping ${group.size} subscriber(s) on '$channel': " +
+            log.warn(s"[ws] dropping ${group.size} subscriber(s) on '$channel': " +
               s"condition failed analysis: ${e.getMessage}")
             group.foreach(dropSub)
           case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[ws] publish to '$channel' failed: ${e.getMessage}")
+            log.warn(s"[ws] publish to '$channel' failed: ${e.getMessage}")
         }
       }
   }

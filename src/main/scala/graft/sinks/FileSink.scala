@@ -1,18 +1,27 @@
 package graft.sinks
 
 import graft.ir.SinkSpec
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.{JobExecutionStatus, SparkContext, TaskContext, TaskKilledException}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
+import java.net.URI
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
 import java.util.UUID
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** JSON-lines file sink — the Spark-native form of the reference's `file`
@@ -22,29 +31,40 @@ import scala.util.control.NonFatal
   * partition directories (`field=value/.../date=.../part-*.json`), which
   * also makes the written data partition-prunable on re-read.
   *
-  * [[write]] is an append-only protocol with one Spark job per call, not
-  * the Hadoop commit protocol of `df.write`. Every call stages in one
-  * shared hidden directory, `<path>/_staging/`, created once and kept: its
-  * tasks write flat files there, one per (task attempt × partition
-  * directory), each named `<callId>-p<partition>-a<attempt>-<k>.json`
-  * after the call's random id. Once the job succeeded, the driver renames
-  * the files of the successful attempts into their partition directories
-  * as `part-<partition>-<callId>-a<attempt>.json`. In a `finally`, on
+  * [[write]] is an append-only protocol, not the Hadoop commit protocol of
+  * `df.write`. A frame whose plan reads only driver-local rows (every leaf
+  * a `LocalTableScanExec`, no exchange, no subquery) in one partition, as
+  * every pushed frame does, is written on the calling thread with no Spark
+  * job (`Bridge.computeOnDriver`); any other frame runs one Spark job per
+  * call. Both run the same task function, inside one SQL execution that
+  * listeners see. Every call stages in one shared hidden directory,
+  * `<path>/_staging/`, created once and kept: a task writes flat files
+  * there, one per (task attempt × partition directory), each named
+  * `<callId>-p<partition>-a<attempt>-<k>.json` after the call's random
+  * id. Once every task succeeded, the driver renames the files of the
+  * successful attempts into their partition directories as
+  * `part-<partition>-<callId>-a<attempt>.json`. In a `finally`, on
   * success and failure alike, it deletes every staged file named after
   * its call id (and their hidden `.crc` checksums), which also removes the
-  * files of failed task attempts; a failed call first waits, within a
-  * bound, for its job's killed tasks to end, so none creates a file after
-  * the sweep. A call that fails anywhere also deletes the files it already
+  * files of failed task attempts; a failed job first waits, within a
+  * bound, for its killed tasks to end, so none creates a file after the
+  * sweep. A call that fails anywhere also deletes the files it already
   * renamed, and the emptied staging directory when no other call of the
   * process is in flight, then rethrows, so a failed (nacked) push leaves
   * no rows. No successful call creates or removes a directory of its own
-  * (partition directories aside, once each): on a local file system
-  * without native Hadoop each created file or directory forks a `chmod`,
-  * so a per-call directory cost milliseconds on every push. Calls own
-  * disjoint file names, so concurrent appends into one path are safe. No
-  * `_SUCCESS` marker is written. A process that dies mid-call leaves its
-  * staged files behind; Spark's readers skip them (underscore prefix) and
-  * no later call sweeps them, since it only deletes its own.
+  * (partition directories aside, once each). Calls own disjoint file
+  * names, so concurrent appends into one path are safe. No `_SUCCESS`
+  * marker is written. A process that dies mid-call leaves its staged
+  * files behind; Spark's readers skip them (underscore prefix), and the
+  * first call into the same path of a later process deletes staged
+  * files older than an hour, with any `_staging-*` directory of the
+  * per-call staging that earlier versions used.
+  *
+  * On a `file:` path the sink creates files and directories through a
+  * local file system that sets their permissions with NIO: Hadoop's own
+  * forks a `chmod` for each one when native Hadoop is not loaded, several
+  * milliseconds per file on the serving path. Checksums (`.crc`),
+  * permission bits and names are the same.
   *
   * Lines and directory names are what `df.write.partitionBy(...).json`
   * writes for the same frame: the data columns through `to_json`, the
@@ -88,6 +108,28 @@ object FileSink {
     taskConf._2
   }
 
+  /** The local file system of the last configuration asked for. */
+  private var localFs: (Configuration, FileSystem) = (null, null)
+
+  /** The file system the sink writes `path` with. A `file:` path, chosen
+    * by its scheme, gets a checksummed local file system over
+    * [[NioLocalFileSystem]], built here: `fs.file.impl` cannot select it,
+    * since Hadoop caches file systems by scheme and user, not by
+    * configuration.
+    */
+  private def fileSystem(path: Path, conf: Configuration): FileSystem = {
+    val scheme = Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    if (scheme != "file") path.getFileSystem(conf)
+    else synchronized {
+      if (localFs._1 ne conf) {
+        val fs = new LocalFileSystem(new NioLocalFileSystem)
+        fs.initialize(URI.create("file:///"), conf)
+        localFs = (conf, fs)
+      }
+      localFs._2
+    }
+  }
+
   /** Calls of this process in flight, per staging directory. */
   private val callsIn = scala.collection.mutable.HashMap[Path, Int]()
 
@@ -107,6 +149,42 @@ object FileSink {
       try fs.delete(staging, false) catch { case NonFatal(_) => } // not empty: kept
   }
 
+  /** Age past which a staged file, or a `_staging-*` directory of the
+    * per-call staging of earlier versions, is taken to be left by a
+    * process that died mid-call. No call of a live process takes so long.
+    */
+  private val StaleAfterMs = 60L * 60 * 1000
+
+  /** Sink roots this process has swept for what crashed processes left. */
+  private val sweptRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+
+  /** Deletes, once per sink root and process, the staged files older than
+    * [[StaleAfterMs]] and the `_staging-*` directories as old. Listing
+    * goes through the raw file system, so orphaned `.crc` files go too.
+    * Best effort, like the per-call sweep.
+    */
+  private def sweepStale(fs: FileSystem, root: Path, staging: Path): Unit =
+    if (sweptRoots.add(root)) {
+      val raw = fs match { case c: ChecksumFileSystem => c.getRawFileSystem; case f => f }
+      val cutoff = System.currentTimeMillis() - StaleAfterMs
+      def stale(s: FileStatus) = s.getModificationTime < cutoff
+      try {
+        raw.listStatus(staging).filter(s => s.isFile && stale(s)).foreach(s => raw.delete(s.getPath, false))
+        raw.listStatus(root, (p: Path) => p.getName.startsWith(StagingDir + "-"))
+          .filter(s => s.isDirectory && stale(s)).foreach(s => raw.delete(s.getPath, true))
+      } catch { case NonFatal(_) => }
+    }
+
+  /** Whether `plan` reads only driver-local rows: every leaf a
+    * `LocalTableScanExec`, no exchange and no subquery. An adaptive plan
+    * is judged by its plan before execution, which holds its exchanges.
+    */
+  private def driverLocal(plan: SparkPlan): Boolean = {
+    val p = plan match { case a: AdaptiveSparkPlanExec => a.executedPlan; case p => p }
+    p.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]) &&
+      p.find(_.isInstanceOf[Exchange]).isEmpty && p.subqueriesAll.isEmpty
+  }
+
   def write(df: DataFrame, spec: SinkSpec): Unit = {
     val (toWrite, partCols) = spec.datePattern match {
       case Some(p) => (df.withColumn("date", dateCol(p)), spec.partitionFields :+ "date")
@@ -114,7 +192,7 @@ object FileSink {
     }
     val sc = df.sparkSession.sparkContext
     val base = new Path(spec.path)
-    val fs = base.getFileSystem(sc.hadoopConfiguration)
+    val fs = fileSystem(base, sc.hadoopConfiguration)
     val root = fs.makeQualified(base)
     val staging = new Path(root, StagingDir)
     val callId = UUID.randomUUID().toString
@@ -131,18 +209,25 @@ object FileSink {
     enter(staging)
     try {
       fs.mkdirs(staging) // also the sink root; a no-op once both exist
-      // the tag finds the call's job again if it fails (see awaitTasksEnded)
-      sc.addJobTag(callId)
+      sweepStale(fs, root, staging)
       // the rows go straight from the plan to the writers: no Row
       // deserialization, and still one SQL execution that listeners see.
-      // The job runs this object's task function, which captures no
+      // A job runs this object's task function, which captures no
       // `this`: `collect` would hand the closure cleaner a lambda of
       // `RDD`, whose class file it re-reads on every call.
-      val files = try SQLExecution.withNewExecutionId(qe, Some("FileSink.write")) {
-        val rdd = qe.toRdd
-        submitted = true
-        sc.runJob(rdd, writeTask(conf, stagingUri, callId) _).flatten
-      } finally sc.removeJobTag(callId)
+      val files = SQLExecution.withNewExecutionId(qe, Some("FileSink.write")) {
+        if (driverLocal(qe.executedPlan) && qe.toRdd.partitions.length == 1)
+          Bridge.computeOnDriver(qe.toRdd)(writeTask(conf, stagingUri, callId) _)
+        else {
+          // the tag finds the call's job again if it fails (see awaitTasksEnded)
+          sc.addJobTag(callId)
+          try {
+            val rdd = qe.toRdd
+            submitted = true
+            sc.runJob(rdd, writeTask(conf, stagingUri, callId) _).flatten
+          } finally sc.removeJobTag(callId)
+        }
+      }
       files.map(_._1).distinct.foreach(d => fs.mkdirs(under(root, d)))
       files.foreach { case (d, staged, name) =>
         val dst = new Path(under(root, d), name)
@@ -214,7 +299,7 @@ object FileSink {
     val (part, attempt) = (ctx.partitionId(), ctx.attemptNumber())
     val name = f"part-$part%05d-$callId-a$attempt.json"
     val stagingDir = new Path(staging)
-    val fs = stagingDir.getFileSystem(conf.value.value)
+    val fs = fileSystem(stagingDir, conf.value.value)
     val written = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
     var out: java.io.OutputStream = null
     var dir: UTF8String = null
@@ -307,5 +392,17 @@ object FileSink {
       .option("checkpointLocation", spec.path + "/_checkpoints")
       .outputMode("append")
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).start()
+  }
+}
+
+/** The raw local file system, with the permission of each created file
+  * and directory set through NIO. Hadoop's own forks a `chmod` for each
+  * when native Hadoop is not loaded.
+  */
+private final class NioLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    // PosixFilePermission lists owner, group, others, each r, w, x: mode bits 8 to 0
+    val perms = PosixFilePermission.values().filter(perm => (permission.toShort & (0x100 >> perm.ordinal)) != 0)
+    Files.setPosixFilePermissions(pathToFile(p).toPath, perms.toSet.asJava)
   }
 }

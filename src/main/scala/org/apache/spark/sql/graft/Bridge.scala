@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{Partition, SparkEnv, TaskContext, TaskContextImpl}
+import org.apache.spark.memory.{MemoryMode, TaskMemoryManager}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -7,6 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.Utils
+
+import java.util.concurrent.atomic.AtomicLong
 
 /** Column ↔ Catalyst `Expression` / DataFrame ↔ `InternalRow` bridge.
   *
@@ -56,6 +61,56 @@ object Bridge {
   def ofAnalyzedPlan(spark: SparkSession, plan: LogicalPlan): DataFrame = {
     plan.setAnalyzed()
     ofPlan(spark, plan)
+  }
+
+  /** Task-attempt ids of [[computeOnDriver]] runs: negative and below
+    * the block manager's reserved ids (-1, -1024), so one never collides
+    * with a scheduled task's id or with another run's.
+    */
+  private val driverTaskIds = new AtomicLong(-2048L)
+
+  /** Computes the one partition of `rdd` with `f` on the calling thread,
+    * instead of submitting a job. It runs as an executor would run the
+    * task: on its own deserialized copy of `rdd`, `f` and the partition,
+    * under a task context of its own with a task memory manager and the
+    * caller's local properties; completion and failure listeners run at
+    * its end, and its memory and block locks are released in a `finally`.
+    * The copy matters: expressions keep evaluation state (the variables of
+    * a higher-order function's lambda, for one), and a plan built from a
+    * kept plan shares them with every other plan built from it, which
+    * other threads may be running.
+    */
+  def computeOnDriver[T, U](rdd: RDD[T])(f: (TaskContext, Iterator[T]) => U): U = {
+    require(rdd.partitions.length == 1, s"computeOnDriver: ${rdd.partitions.length} partitions, not 1")
+    // the lineage walk a job's scheduling makes: it fills each RDD's
+    // dependencies, which a serialized RDD carries instead of its parents
+    def walk(r: RDD[_]): Unit = r.dependencies.foreach(d => walk(d.rdd))
+    walk(rdd)
+    val env = SparkEnv.get
+    val ser = env.closureSerializer.newInstance()
+    val (taskRdd, taskF, part) = ser.deserialize[(RDD[T], (TaskContext, Iterator[T]) => U, Partition)](
+      ser.serialize((rdd, f, rdd.partitions(0))), Utils.getContextOrSparkClassLoader)
+    val id = driverTaskIds.decrementAndGet()
+    val memory = new TaskMemoryManager(env.memoryManager, id)
+    val ctx = new TaskContextImpl(0, 0, 0, id, 0, 1, memory,
+      Utils.cloneProperties(rdd.sparkContext.getLocalProperties), env.metricsSystem)
+    TaskContext.setTaskContext(ctx)
+    env.blockManager.registerTask(id)
+    try {
+      try taskF(ctx, taskRdd.iterator(part, ctx))
+      catch {
+        case e: Throwable =>
+          try ctx.markTaskFailed(e) catch { case t: Throwable => e.addSuppressed(t) }
+          throw e
+      } finally ctx.markTaskCompleted(None)
+    } finally {
+      try {
+        env.blockManager.memoryStore.releaseUnrollMemoryForThisTask(MemoryMode.ON_HEAP)
+        env.blockManager.memoryStore.releaseUnrollMemoryForThisTask(MemoryMode.OFF_HEAP)
+        env.blockManager.releaseAllLocksForTask(id)
+        memory.cleanUpAllAllocatedMemory()
+      } finally TaskContext.unset()
+    }
   }
 
   /** Register a SQL function builder on a LIVE session (the runtime twin

@@ -97,7 +97,7 @@ class DdSketchSpec extends AnyFunSuite {
   }
 
   test("persisted store: append(build(A), B) == build(A ∪ B); gamma travels with the store") {
-    val dir = java.nio.file.Files.createTempDirectory("ddspec").toString
+    val dir = TestSpark.tempDir("ddspec").toString
     val (a, b) = values.splitAt(1000)
     Sketches.writeDdSketch(Sketches.ddBuckets(df(a), "v", Gamma), dir, Gamma)
     Sketches.appendDdSketch(df(b), "v", dir)
@@ -119,7 +119,7 @@ class DdSketchSpec extends AnyFunSuite {
   }
 
   test("recoverDdSketch repairs a half-finished swap and sweeps debris") {
-    val dir = java.nio.file.Files.createTempDirectory("ddspec2").toString
+    val dir = TestSpark.tempDir("ddspec2").toString
     Sketches.writeDdSketch(Sketches.ddBuckets(df(values), "v", Gamma), dir, Gamma)
     val before = Sketches.ddQuantilesStored(spark, dir, Seq(0.5)).collect().head.getDouble(1)
     // simulate a crash between the two renames: live moved aside, tmp gone
@@ -135,7 +135,7 @@ class DdSketchSpec extends AnyFunSuite {
   }
 
   test("every read repairs a half-finished swap without an explicit recover") {
-    val dir = java.nio.file.Files.createTempDirectory("ddspec3").toString
+    val dir = TestSpark.tempDir("ddspec3").toString
     Sketches.writeDdSketch(Sketches.ddBuckets(df(values), "v", Gamma), dir, Gamma)
     val before = Sketches.ddQuantilesStored(spark, dir, Seq(0.5)).collect().head.getDouble(1)
     assert(new java.io.File(s"$dir/buckets").renameTo(new java.io.File(s"$dir/buckets_old")))

@@ -11,7 +11,7 @@ class ServeCliSpec extends AnyFunSuite {
   import TestSpark.spark
 
   private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    TestSpark.tempDir(prefix).toString
 
   private def write(dir: String, name: String, text: String): Unit =
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, name), text)

@@ -36,7 +36,7 @@ class StreamServeSpec extends AnyFunSuite {
   test("boot from config: file source -> ewma -> checkpointed sink; restart resumes state") {
     val s = spark
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("stream_serve")
+    val base = TestSpark.tempDir("stream_serve")
     val (inDir, outDir, ckDir) = (s"$base/in", s"$base/out", s"$base/ck")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
 
@@ -91,7 +91,7 @@ class StreamServeSpec extends AnyFunSuite {
     // offsets, and a torn shutdown must not double-write.
     val s = spark
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("stream_crash")
+    val base = TestSpark.tempDir("stream_crash")
     val (inDir, outDir, ckDir) = (s"$base/in", s"$base/out", s"$base/ck")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val conf = graft.ir.Config.parse(
@@ -187,7 +187,7 @@ class StreamServeSpec extends AnyFunSuite {
     for ((opName, opEdn, batchTwin) <- ops;
          kill <- Seq("clean", "torn-commit", "mid-batch", "mid-write", "torn-state")) {
       val afterBatch = 1 + rng.nextInt(2) // seeded kill position (after land 1 or 2)
-      val base = java.nio.file.Files.createTempDirectory(s"stream_sweep_${opName}_$kill")
+      val base = TestSpark.tempDir(s"stream_sweep_${opName}_$kill")
       val (inDir, outDir, ckDir) = (s"$base/in", s"$base/out", s"$base/ck")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
       val conf = graft.ir.Config.parse(
@@ -325,7 +325,7 @@ class StreamServeSpec extends AnyFunSuite {
   test("metric-quantiles op: config-declared KMV monitor over the event stream") {
     val s = spark
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("stream_serve_kmv")
+    val base = TestSpark.tempDir("stream_serve_kmv")
     val (inDir, outDir, ckDir) = (s"$base/in", s"$base/out", s"$base/ck")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
     val conf = graft.ir.Config.parse(

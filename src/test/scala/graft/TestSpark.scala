@@ -3,6 +3,9 @@ package graft
 import graft.model.Event
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+
 /** One shared local SparkSession for the whole test run. */
 object TestSpark {
   lazy val spark: SparkSession = {
@@ -23,6 +26,22 @@ object TestSpark {
       "org.apache.spark.sql.classic.ExpressionColumnNode", org.apache.logging.log4j.Level.ERROR)
     s
   }
+
+  /** The run's one directory under the JVM temp dir; a shutdown hook
+    * deletes it with everything below it.
+    */
+  private lazy val tempRoot: Path = {
+    val root = Files.createTempDirectory("graft-test-")
+    sys.addShutdownHook {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }
+    root
+  }
+
+  /** A fresh directory for one test's files, below the run's temp root. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(tempRoot, prefix)
 
   /** Literal event fixtures, reference-test style
     * (`test/mirabelle/action_test.clj`): sparse maps with metric/time/etc.
