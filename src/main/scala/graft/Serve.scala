@@ -34,6 +34,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Serve {
 
+  /** Boot, status and warning lines; the CLI commands' own output goes to stderr. */
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Everything one boot started; [[stop]] tears it down in reverse. */
   final case class Booted(registry: StreamRegistry, controlPlane: ControlPlane,
                           tcp: Option[RiemannTcpServer], websockets: Option[WebSocketHub]) {
@@ -56,7 +59,7 @@ object Serve {
     val registry = new StreamRegistry(ctx)
     val loaded = registry.loadFrom(streamsDir)
     if (loaded.nonEmpty)
-      System.err.println(s"[serve] loaded streams: ${loaded.mkString(", ")}")
+      log.info(s"[serve] loaded streams: ${loaded.mkString(", ")}")
     // a later transport failing to start (busy port, bad TLS PEM) must
     // not leak the sockets/threads of the ones already started
     var hub: Option[WebSocketHub] = None
@@ -122,7 +125,7 @@ object Serve {
   def installReloadHandler(registry: StreamRegistry, streamsDirs: Seq[String]): Boolean =
     try {
       if (sighupIgnoredAtStartup) {
-        System.err.println("[serve] SIGHUP reload unavailable: the signal was ignored " +
+        log.warn("[serve] SIGHUP reload unavailable: the signal was ignored " +
           "at JVM start (nohup'd parent) and the kernel will discard it — " +
           "use the HTTP reload route instead")
         return false
@@ -130,12 +133,12 @@ object Serve {
       sun.misc.Signal.handle(new sun.misc.Signal("HUP"), (_: sun.misc.Signal) =>
         try {
           val r = registry.reloadFrom(streamsDirs)
-          System.err.println(s"[serve] SIGHUP reload: added=${r.added.mkString(",")} " +
+          log.info(s"[serve] SIGHUP reload: added=${r.added.mkString(",")} " +
             s"reloaded=${r.reloaded.mkString(",")} removed=${r.removed.mkString(",")} " +
             s"unchanged=${r.unchanged.size}")
         } catch {
           case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[serve] reload failed: ${e.getMessage}")
+            log.warn(s"[serve] reload failed: ${e.getMessage}")
         } finally reloadCount.incrementAndGet())
       true
     } catch {
@@ -164,7 +167,7 @@ object Serve {
       // same contract as StreamRegistry persistence: a #secret serializes
       // as its MASK — the compiled copy cannot round-trip the secret
       if (StreamRegistry.hasSecret(pipeline))
-        System.err.println(s"[serve] compile: stream '$name' contains #secret values — " +
+        log.warn(s"[serve] compile: stream '$name' contains #secret values — " +
           "the compiled copy is REDACTED; keep the EDN source as the source of truth")
       val out = graft.ir.Node("stream",
         Seq(Map("name" -> name, "default" -> default)), Seq(pipeline))
@@ -250,6 +253,9 @@ object Serve {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // the boot and status lines stay visible under the WARN root level
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      log.getName, org.apache.logging.log4j.Level.INFO)
     if (args.nonEmpty) {
       // command mode, reference `core.clj:116-128`: resolve dirs the same
       // way the server boot does, run the command, exit
@@ -269,7 +275,7 @@ object Serve {
     // (graft.ir.Config) and supplies ports/TLS/stream dirs/outputs;
     // the SPARK_GRAFT_* variables are the env-only alternative.
     val conf = sys.env.get("SPARK_GRAFT_CONFIG").map(graft.ir.Config.load)
-    conf.foreach(_.warnings.foreach(w => System.err.println(s"[serve] config: $w")))
+    conf.foreach(_.warnings.foreach(w => log.warn(s"[serve] config: $w")))
     val dirs = conf.map(_.streamDirs).filter(_.nonEmpty)
       .getOrElse(Seq(sys.env.getOrElse("SPARK_GRAFT_STREAMS_DIR", "streams")))
     val port = conf.flatMap(_.httpPort)
@@ -293,17 +299,17 @@ object Serve {
       tls = conf.flatMap(_.tls).orElse(envTls))
     dirs.tail.foreach { d =>
       val extra = b.registry.loadFrom(d)
-      if (extra.nonEmpty) System.err.println(s"[serve] loaded streams: ${extra.mkString(", ")}")
+      if (extra.nonEmpty) log.info(s"[serve] loaded streams: ${extra.mkString(", ")}")
     }
     installReloadHandler(b.registry, dirs)
     // config-declared Structured Streaming queries: boot each with its
     // checkpoint so a server restart resumes state and source offsets
     val streamingQueries = conf.map(_.streaming).getOrElse(Nil).map { q =>
       val sq = graft.streaming.StreamServe.start(spark, q)
-      System.err.println(s"[serve] streaming query '${q.name}' started (${sq.id})")
+      log.info(s"[serve] streaming query '${q.name}' started (${sq.id})")
       sq
     }
-    System.err.println(s"[serve] http on 127.0.0.1:${b.controlPlane.boundPort}" +
+    log.info(s"[serve] http on 127.0.0.1:${b.controlPlane.boundPort}" +
       b.tcp.map(t => s", riemann-tcp on ${t.boundPort}" + (if (conf.flatMap(_.tls).orElse(envTls).isDefined) " (mTLS)" else "")).getOrElse("") +
       b.websockets.map(h => s", websocket on ${h.boundPort}").getOrElse(""))
     val done = new java.util.concurrent.CountDownLatch(1)

@@ -267,6 +267,8 @@ final class ControlPlane(registry: StreamRegistry, spark: SparkSession, port: In
                |graft_streams ${registry.list.size}
                |# TYPE graft_stream_compiles_total counter
                |graft_stream_compiles_total ${registry.compiles}
+               |# TYPE graft_push_plans_total counter
+               |graft_push_plans_total ${registry.pushPlans}
                |""".stripMargin
           respondPlain(ex, 200, text)
         case _ => respond(ex, 404, """{"error":"not found"}""")

@@ -1,7 +1,7 @@
 package graft.http
 
 import graft.conditions.Condition
-import graft.ir.{Edn, StreamResult}
+import graft.ir.{Edn, PushPlans, StreamResult}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, struct, to_json}
 
@@ -139,7 +139,9 @@ final class WebSocketHub(port: Int = 0,
     * subscribers: for each subscriber on a channel this result published
     * to, the events passing its condition are sent as JSON text frames
     * (one frame per event, in the channel frame's deterministic
-    * (time, eventId) order, see [[WebSocketHub.orderedJson]]). Subscribers
+    * (time, eventId) order, see [[WebSocketHub.channelJson]]; a channel
+    * frame pushed through a compiled stream runs that stream's kept plan
+    * for the (channel, condition) pair, on the calling thread). Subscribers
     * sharing a (channel, condition) pair share one collect (conditions are
     * case classes, so identical queries group structurally); a condition
     * that fails analysis (e.g. referencing a field the frame lacks) is
@@ -152,7 +154,7 @@ final class WebSocketHub(port: Int = 0,
     subs.asScala.filter(s => channels.contains(s.channel))
       .groupBy(s => (s.channel, s.condition)).foreach { case ((channel, cond), group) =>
         try {
-          val frames = WebSocketHub.orderedJson(result.subscribe(channel, cond))
+          val frames = WebSocketHub.channelJson(result, channel, cond)
             .map(j => frameBytes(0x1, j.getBytes(UTF_8)))
           // a false offer on an already-closing sub is the graceful path
           // doing its job, not a slow consumer — don't abort the drain
@@ -378,11 +380,28 @@ object WebSocketHub {
     * job at all (Catalyst evaluates it in `ConvertToLocalRelation`). A
     * frame without `time` or `eventId` fails analysis, as the sort did.
     */
-  private[graft] def orderedJson(df: DataFrame): Array[String] =
+  private[graft] def orderedJson(df: DataFrame): Array[String] = sortedJson(jsonRows(df).collect())
+
+  /** The events of `channel` in `result` that pass `cond`, as
+    * [[orderedJson]] writes them. A channel frame pushed through a
+    * compiled stream runs that stream's kept plan for (channel, `cond`) on
+    * the driver: no Catalyst phase and no code generation per push
+    * (`graft.ir.PushPlans`). Any other frame, or one whose plan cannot be
+    * kept, goes through [[orderedJson]]. A condition that fails analysis
+    * throws either way, and is not kept.
+    */
+  private[graft] def channelJson(result: StreamResult, channel: String, cond: Condition): Array[String] =
+    result.channels.get(channel)
+      .flatMap(PushPlans.run(_, (channel, cond))(df => jsonRows(df.filter(cond.column)))(
+        (plan, rows) => sortedJson(plan.collect(rows))))
+      .getOrElse(orderedJson(result.subscribe(channel, cond)))
+
+  /** (time, eventId, JSON text) per row. */
+  private def jsonRows(df: DataFrame): DataFrame =
     df.select(col("time"), col("eventId"), to_json(struct(col("*"))))
-      .collect()
-      .sortWith((a, b) => sortKeyCompare(a, b) < 0)
-      .map(_.getString(2))
+
+  private def sortedJson(rows: Array[Row]): Array[String] =
+    rows.sortWith((a, b) => sortKeyCompare(a, b) < 0).map(_.getString(2))
 
   /** Spark's ascending, nulls-first order on the (time, eventId) prefix. */
   private def sortKeyCompare(a: Row, b: Row): Int = {

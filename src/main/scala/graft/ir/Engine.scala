@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
+import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
@@ -107,7 +108,12 @@ final class StreamResult {
   * `LocalRelation` with [[graft.model.Event.schema]], and each push swaps
   * its rows into the placeholder leaf of the kept analyzed plans. The
   * swapped plans are marked analyzed, so a push builds one Dataset per
-  * effect and runs no Catalyst analysis of its own.
+  * effect and runs no Catalyst analysis of its own. Each such frame is
+  * also marked with its template and rows ([[Run.frame]]): a file sink and
+  * a WebSocket subscriber of the frame then run a physical plan the
+  * compiled stream keeps for them ([[PushPlans]]), built at the first push
+  * that needs it, so a push runs no Catalyst optimization or planning and
+  * no code generation for them either.
   *
   * `by` is special-cased as in the reference (`stream.clj:38-44`): instead
   * of re-compiling the subtree per fork, the grouping keys are threaded
@@ -1052,15 +1058,26 @@ object Engine {
   /** One frame through a compiled pipeline: where its results go, and how
     * a template becomes this frame. With `rows == null` the templates are
     * the frames (a pipeline compiled against its own input); otherwise
-    * every leaf reading the placeholder's `data` reads `rows` instead.
+    * every leaf reading the placeholder's `data` reads `rows` instead, and
+    * `plans` is the compiled stream's.
     */
   private final class Run(val res: StreamResult, val registry: StreamRegistry, val depth: Int,
-                          placeholder: LocalRelation, rows: Seq[InternalRow]) {
+                          plans: PushPlans, rows: Seq[InternalRow]) {
+    private def placeholder = plans.placeholder
+
+    /** The template with this push's rows in its placeholder leaf, marked
+      * with the template and the rows (a tag on the plan's root), so a file
+      * sink or a subscriber of the frame can run its kept plan instead
+      * ([[PushPlans]]). Everyone else sees the frame as it is.
+      */
     def frame(template: DataFrame): DataFrame =
       if (rows == null) template
-      else Bridge.ofAnalyzedPlan(template.sparkSession, template.queryExecution.analyzed.transformUp {
-        case l: LocalRelation if l.data eq placeholder.data => l.copy(data = rows)
-      })
+      else {
+        val t = template.queryExecution.analyzed
+        val plan = t.transformUp { case l: LocalRelation if l.data eq placeholder.data => l.copy(data = rows) }
+        if (plan ne t) plans.mark(plan, t, rows)
+        Bridge.ofAnalyzedPlan(template.sparkSession, plan)
+      }
 
     /** This run over templates that already hold its rows. */
     def interpreted: Run = if (rows == null) this else new Run(res, registry, depth, null, null)
@@ -1086,12 +1103,14 @@ object Engine {
       }
   }
 
-  /** A stream compiled over its placeholder; see [[compileStream]]. */
-  private[ir] final class Compiled(val spark: SparkSession, placeholder: LocalRelation, root: Step) {
+  /** A stream compiled over its placeholder, with the kept consumer plans
+    * of its pushes; see [[compileStream]].
+    */
+  private[ir] final class Compiled(val spark: SparkSession, plans: PushPlans, root: Step) {
     /** Run one pushed frame, given as the rows of its `LocalRelation`. */
     def run(rows: Seq[InternalRow], ctx: EngineCtx, registry: StreamRegistry): StreamResult = {
       val res = new StreamResult
-      root(new Run(res, registry, 0, placeholder, rows))
+      root(new Run(res, registry, 0, plans, rows))
       drainReinjects(ctx, res, registry)
       res
     }
@@ -1101,10 +1120,11 @@ object Engine {
     * `LocalRelation` with [[graft.model.Event.schema]]. Returns the
     * compiled stream and whether to keep it: a node that failed to
     * compile makes every run rethrow its error at that node, and the next
-    * push compiles again.
+    * push compiles again. `planBuilds` counts the kept consumer plans its
+    * pushes build.
     */
-  private[ir] def compileStream(expanded: Node, spark: SparkSession,
-                                ctx: EngineCtx): (Compiled, Boolean) = {
+  private[ir] def compileStream(expanded: Node, spark: SparkSession, ctx: EngineCtx,
+                                planBuilds: AtomicLong): (Compiled, Boolean) = {
     lint(expanded)
     // a fresh empty array: its wrapper is the placeholder's identity, kept
     // by reference by every copy of the leaf in the plans built over it
@@ -1112,7 +1132,7 @@ object Engine {
       scala.collection.immutable.ArraySeq.unsafeWrapArray(new Array[InternalRow](0)))
     val c = new Compilation(ctx)
     val root = compile(expanded, Bridge.ofPlan(spark, placeholder), Nil, c)
-    (new Compiled(spark, placeholder, root), !c.failed)
+    (new Compiled(spark, new PushPlans(spark, placeholder, planBuilds), root), !c.failed)
   }
 
   /** The rows of a frame a compiled stream can run: a batch frame that is
@@ -2799,6 +2819,7 @@ final class StreamRegistry(ctx: EngineCtx = EngineCtx()) {
 
   private val streams = new scala.collection.concurrent.TrieMap[String, Registered]()
   private val compileCount = new java.util.concurrent.atomic.AtomicLong()
+  private val planBuildCount = new java.util.concurrent.atomic.AtomicLong()
 
   def add(name: String, pipeline: Node, default: Boolean = false): Unit = synchronized {
     // names arrive from JSON documents (the HTTP add-stream analog) and
@@ -2900,7 +2921,7 @@ final class StreamRegistry(ctx: EngineCtx = EngineCtx()) {
     def kept = Option(s.compiled.get).filter(_.spark eq spark)
     kept.getOrElse(s.synchronized {
       kept.getOrElse {
-        val (c, keep) = Engine.compileStream(s.pipeline, spark, ctx)
+        val (c, keep) = Engine.compileStream(s.pipeline, spark, ctx, planBuildCount)
         if (keep) { s.compiled.set(c); compileCount.incrementAndGet() }
         c
       }
@@ -2912,6 +2933,12 @@ final class StreamRegistry(ctx: EngineCtx = EngineCtx()) {
     * that was pushed to.
     */
   def compiles: Long = compileCount.get()
+
+  /** Kept plan instances that pushes built for their file sinks and
+    * subscribers (`graft_push_plans_total`, [[PushPlans]]): one per
+    * (template, consumer) and push running at once, again after a re-add.
+    */
+  def pushPlans: Long = planBuildCount.get()
 
   /** Registered streams that hold a compiled form. */
   private[graft] def compiledStreams: Int = streams.values.count(_.compiled.get != null)

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import graft.ir.SinkSpec
+import graft.ir.{PushPlans, SinkSpec}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -9,9 +9,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,11 +30,17 @@ import scala.util.control.NonFatal
   * also makes the written data partition-prunable on re-read.
   *
   * [[write]] is an append-only protocol, not the Hadoop commit protocol of
-  * `df.write`. A frame whose plan reads only driver-local rows (every leaf
-  * a `LocalTableScanExec`, no exchange, no subquery) in one partition, as
-  * every pushed frame does, is written on the calling thread with no Spark
-  * job (`Bridge.computeOnDriver`); any other frame runs one Spark job per
-  * call. Both run the same task function, inside one SQL execution that
+  * `df.write`. A frame pushed through a compiled stream runs the lines
+  * plan that stream keeps for this sink (`graft.ir.PushPlans`): optimized,
+  * planned and code-generated at the stream's first push into the sink,
+  * then run on each push's rows on the calling thread, with no Catalyst
+  * phase, no Spark job and no task copy. Any other frame, or a pushed one
+  * whose plan cannot be kept (a `current_timestamp()` or `rand()` in it),
+  * plans its lines per call: when the plan reads only driver-local rows
+  * (every leaf a `LocalTableScanExec`, no exchange, no subquery) in one
+  * partition, it is written on the calling thread with no Spark job
+  * (`Bridge.computeOnDriver`); otherwise it runs one Spark job per call.
+  * All run the same task function, inside one SQL execution that
   * listeners see. Every call stages in one shared hidden directory,
   * `<path>/_staging/`, created once and kept: a task writes flat files
   * there, one per (task attempt × partition directory), each named
@@ -175,34 +179,28 @@ object FileSink {
       } catch { case NonFatal(_) => }
     }
 
-  /** Whether `plan` reads only driver-local rows: every leaf a
-    * `LocalTableScanExec`, no exchange and no subquery. An adaptive plan
-    * is judged by its plan before execution, which holds its exchanges.
+  /** The frame's lines: (partition directory, JSON line) per row, sorted
+    * by directory when the sink is partitioned.
     */
-  private def driverLocal(plan: SparkPlan): Boolean = {
-    val p = plan match { case a: AdaptiveSparkPlanExec => a.executedPlan; case p => p }
-    p.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]) &&
-      p.find(_.isInstanceOf[Exchange]).isEmpty && p.subqueriesAll.isEmpty
-  }
-
-  def write(df: DataFrame, spec: SinkSpec): Unit = {
+  private def lines(df: DataFrame, spec: SinkSpec): DataFrame = {
     val (toWrite, partCols) = spec.datePattern match {
       case Some(p) => (df.withColumn("date", dateCol(p)), spec.partitionFields :+ "date")
       case None    => (df, spec.partitionFields)
     }
+    val dir = concat_ws("/", partCols.map(c => partitionDir(c)(quoted(c).cast("string"))): _*)
+    val data = struct(toWrite.columns.filterNot(partCols.contains).map(quoted).toIndexedSeq: _*)
+    val l = toWrite.select(dir.as("dir"), to_json(data).as("json"))
+    if (partCols.isEmpty) l else l.sortWithinPartitions("dir")
+  }
+
+  def write(df: DataFrame, spec: SinkSpec): Unit = {
     val sc = df.sparkSession.sparkContext
     val base = new Path(spec.path)
     val fs = fileSystem(base, sc.hadoopConfiguration)
     val root = fs.makeQualified(base)
     val staging = new Path(root, StagingDir)
     val callId = UUID.randomUUID().toString
-
-    val dir = concat_ws("/", partCols.map(c => partitionDir(c)(quoted(c).cast("string"))): _*)
-    val data = struct(toWrite.columns.filterNot(partCols.contains).map(quoted).toIndexedSeq: _*)
-    val lines = toWrite.select(dir.as("dir"), to_json(data).as("json"))
-    val qe = (if (partCols.isEmpty) lines else lines.sortWithinPartitions("dir")).queryExecution
-    val conf = taskConfFor(sc)
-    val stagingUri = staging.toString
+    val task = writeTask(taskConfFor(sc), staging.toString, callId) _
     val published = scala.collection.mutable.ArrayBuffer[Path]()
     var failed = true
     var submitted = false
@@ -212,22 +210,27 @@ object FileSink {
       sweepStale(fs, root, staging)
       // the rows go straight from the plan to the writers: no Row
       // deserialization, and still one SQL execution that listeners see.
-      // A job runs this object's task function, which captures no
-      // `this`: `collect` would hand the closure cleaner a lambda of
-      // `RDD`, whose class file it re-reads on every call.
-      val files = SQLExecution.withNewExecutionId(qe, Some("FileSink.write")) {
-        if (driverLocal(qe.executedPlan) && qe.toRdd.partitions.length == 1)
-          Bridge.computeOnDriver(qe.toRdd)(writeTask(conf, stagingUri, callId) _)
-        else {
-          // the tag finds the call's job again if it fails (see awaitTasksEnded)
-          sc.addJobTag(callId)
-          try {
-            val rdd = qe.toRdd
-            submitted = true
-            sc.runJob(rdd, writeTask(conf, stagingUri, callId) _).flatten
-          } finally sc.removeJobTag(callId)
+      // A pushed frame runs its stream's kept plan for this sink on the
+      // driver. Otherwise, a job runs this object's task function, which
+      // captures no `this`: `collect` would hand the closure cleaner a
+      // lambda of `RDD`, whose class file it re-reads on every call.
+      val files = PushPlans.run(df, spec)(lines(_, spec))((plan, rows) => plan.run(rows, "FileSink.write")(task))
+        .getOrElse {
+          val qe = lines(df, spec).queryExecution
+          SQLExecution.withNewExecutionId(qe, Some("FileSink.write")) {
+            if (Bridge.driverLocal(qe.executedPlan) && qe.toRdd.partitions.length == 1)
+              Bridge.computeOnDriver(qe.toRdd)(task)
+            else {
+              // the tag finds the call's job again if it fails (see awaitTasksEnded)
+              sc.addJobTag(callId)
+              try {
+                val rdd = qe.toRdd
+                submitted = true
+                sc.runJob(rdd, task).flatten
+              } finally sc.removeJobTag(callId)
+            }
+          }
         }
-      }
       files.map(_._1).distinct.foreach(d => fs.mkdirs(under(root, d)))
       files.foreach { case (d, staged, name) =>
         val dst = new Path(under(root, d), name)

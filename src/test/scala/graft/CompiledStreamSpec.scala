@@ -176,7 +176,7 @@ class CompiledStreamSpec extends AnyFunSuite {
   }
 
   test("includes expand at registration: editing the file changes nothing until the stream is re-added") {
-    val dir = Files.createTempDirectory("graft-compiled-include")
+    val dir = TestSpark.tempDir("graft-compiled-include")
     val inc = dir.resolve("inc.json")
     def threshold(t: Int) = Files.writeString(inc, s"""{"action":"where","params":[[">","metric",$t]]}""")
     threshold(50)
@@ -215,7 +215,7 @@ class CompiledStreamSpec extends AnyFunSuite {
     assert(registry.compiles == 0 && registry.compiledStreams == 0)
 
     // a missing include fails every push until the file exists
-    val inc = Files.createTempDirectory("graft-compiled-missing").resolve("later.json")
+    val inc = TestSpark.tempDir("graft-compiled-missing").resolve("later.json")
     registry.add("late", doc(s"""{"action":"include","params":["$inc"]}"""))
     intercept[java.nio.file.NoSuchFileException](registry.push(frame(1), "late"))
     Files.writeString(inc, one("increment"))

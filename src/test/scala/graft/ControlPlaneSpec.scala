@@ -72,7 +72,7 @@ class ControlPlaneSpec extends AnyFunSuite {
     // real (non-test) ctx: the file sink must actually fire on push
     withServer(EngineCtx()) { (_, base) =>
       // pipeline writing matching events to a file sink via output-file
-      val outDir = java.nio.file.Files.createTempDirectory("cp_push").toString
+      val outDir = TestSpark.tempDir("cp_push").toString
       val pipeline =
         s"""{"action":"where","params":[[">","metric",100]],
            | "children":[{"action":"output-file","params":[{"path":"$outDir/out"}]}]}""".stripMargin
@@ -99,7 +99,7 @@ class ControlPlaneSpec extends AnyFunSuite {
   }
 
   private def addFileSinkStream(base: String, name: String): String = {
-    val outDir = java.nio.file.Files.createTempDirectory(s"cp_$name").toString
+    val outDir = TestSpark.tempDir(s"cp_$name").toString
     val pipeline =
       s"""{"action":"sdo","params":[],
          | "children":[{"action":"output-file","params":[{"path":"$outDir/out"}]}]}""".stripMargin
@@ -247,7 +247,7 @@ class ControlPlaneSpec extends AnyFunSuite {
   }
 
   test("Serve.boot loads a streams dir and serves it over HTTP") {
-    val dir = java.nio.file.Files.createTempDirectory("serve_streams")
+    val dir = TestSpark.tempDir("serve_streams")
     java.nio.file.Files.writeString(dir.resolve("alerts.json"),
       """{"action":"stream","params":[{"name":"alerts","default":true}],
         | "children":[{"action":"where","params":[[">","metric",100]],
@@ -263,7 +263,7 @@ class ControlPlaneSpec extends AnyFunSuite {
 
   test("bootAll wires TCP ingest through streams to websocket fan-out end to end") {
     import graft.sources.RiemannCodec
-    val dir = java.nio.file.Files.createTempDirectory("serve_full")
+    val dir = TestSpark.tempDir("serve_full")
     java.nio.file.Files.writeString(dir.resolve("alerts.json"),
       """{"action":"stream","params":[{"name":"alerts","default":true}],
         | "children":[{"action":"where","params":[[">","metric",100]],
@@ -311,7 +311,7 @@ class ControlPlaneSpec extends AnyFunSuite {
   }
 
   test("SIGHUP triggers a diff-reload of the streams directory (core.clj:136-143)") {
-    val dir = java.nio.file.Files.createTempDirectory("serve_hup")
+    val dir = TestSpark.tempDir("serve_hup")
     java.nio.file.Files.writeString(dir.resolve("a.json"),
       """{"action":"stream","params":[{"name":"a"}],
         | "children":[{"action":"tap","params":["out"]}]}""".stripMargin)
@@ -380,6 +380,35 @@ class ControlPlaneSpec extends AnyFunSuite {
       assert(compiles() == 1) // compiled at the first push, not at registration
       push(3)
       assert(compiles() == 2)
+    }
+  }
+
+  test("metrics route: graft_push_plans_total counts kept sink plans and stays flat across pushes") {
+    withServer(EngineCtx(testMode = false)) { (_, base) =>
+      def built(): Long = {
+        val (code, text) = send("GET", s"$base/metrics")
+        assert(code == 200 && text.contains("# TYPE graft_push_plans_total counter"))
+        text.linesIterator.collectFirst {
+          case l if l.startsWith("graft_push_plans_total ") => l.stripPrefix("graft_push_plans_total ").toLong
+        }.get
+      }
+      val out = tempDir("cp_push_plans").resolve("out")
+      val pipeline = s"""{"action":"where","params":[[">","metric",1]],"children":[
+                        |  {"action":"output-file","params":[{"path":"$out"}]}]}""".stripMargin
+      def add(): Unit =
+        assert(send("POST", s"$base/api/v1/stream/s", s"""{"config":"${b64(pipeline)}"}""")._1 == 200)
+      def push(n: Int): Unit = (1 to n).foreach { i =>
+        assert(send("PUT", s"$base/api/v1/stream/s", s"""{"events":[{"metric":$i.5,"time":$i}]}""")._1 == 200)
+      }
+      assert(built() == 0)
+      add()
+      push(1)
+      assert(built() == 1)
+      push(10)
+      assert(built() == 1)
+      add()
+      push(3)
+      assert(built() == 2) // the re-added stream keeps its own plan
     }
   }
 

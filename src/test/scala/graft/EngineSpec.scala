@@ -239,7 +239,7 @@ class EngineSpec extends AnyFunSuite {
     // saveTo survives a secret-bearing stream and persists the others too
     reg.addJson("""{"streams":[{"action":"stream","params":[{"name":"plain"}],
                   | "children":[{"action":"tap","params":["out"]}]}]}""".stripMargin)
-    val dir = java.nio.file.Files.createTempDirectory("graft-secret").toString
+    val dir = TestSpark.tempDir("graft-secret").toString
     reg.saveTo(dir)
     val reloaded = new StreamRegistry(EngineCtx(testMode = true))
     assert(reloaded.loadFrom(dir).sorted == Seq("plain", "s"))
@@ -286,7 +286,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("EDN in the streams directory: loadFrom reads reference-style .edn files; #profile resolves") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-edn").toString
+    val dir = TestSpark.tempDir("graft-edn").toString
     // verbatim reference fixture shape (test/resources/streams/streams.edn)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/streams.edn"),
       """{:bar {:actions {:action :above-dt, :params [[:> :metric 200] 200], :children []}},
@@ -331,7 +331,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("file sink round-trip: pipeline → JSON-lines → re-read equals memory output") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString + "/out"
+    val dir = TestSpark.tempDir("graft-sink").toString + "/out"
     val df = events(ev(200, 1 * S, host = "a", id = 1), ev(300, 2 * S, host = "b", id = 2))
     val node = Node.fromJson(
       s"""{"action":"increment","children":[
@@ -405,7 +405,7 @@ class EngineSpec extends AnyFunSuite {
         |               "children":[{"action":"tap","params":["out"]}]}]},
         | {"action":"stream","params":[{"name":"audit"}],
         |  "children":[{"action":"tap","params":["all"]}]}]}""".stripMargin)
-    val dir = java.nio.file.Files.createTempDirectory("graft-streams").toString
+    val dir = TestSpark.tempDir("graft-streams").toString
     reg.saveTo(dir)
     val reg2 = new StreamRegistry(EngineCtx(testMode = true))
     assert(reg2.loadFrom(dir).sorted == Seq("alerts", "audit"))
@@ -427,7 +427,7 @@ class EngineSpec extends AnyFunSuite {
       s"""{"streams":[{"action":"stream","params":[{"name":"$name","default":$default}],
          |  "children":[{"action":"where","params":[[">","metric",$threshold]],
          |               "children":[{"action":"tap","params":["out"]}]}]}]}""".stripMargin
-    val dir = java.nio.file.Files.createTempDirectory("graft-reload")
+    val dir = TestSpark.tempDir("graft-reload")
     def write(file: String, text: String) =
       java.nio.file.Files.writeString(dir.resolve(file), text)
     write("a.json", streamJson("a", 100))
@@ -474,7 +474,7 @@ class EngineSpec extends AnyFunSuite {
     // multi-directory reload diffs the MERGED listing (the reference's
     // streams-directories is a list): the second directory's streams are
     // never mistaken for removed
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-reload2")
+    val dir2 = TestSpark.tempDir("graft-reload2")
     java.nio.file.Files.writeString(dir2.resolve("e.json"), streamJson("e", 1))
     reg.loadFrom(dir2.toString)
     val r4 = reg.reloadFrom(Seq(dir.toString, dir2.toString))
@@ -488,8 +488,8 @@ class EngineSpec extends AnyFunSuite {
     def streamJson(name: String) =
       s"""{"streams":[{"action":"stream","params":[{"name":"$name"}],
          |  "children":[{"action":"tap","params":["out"]}]}]}""".stripMargin
-    val head = java.nio.file.Files.createTempDirectory("graft-phead")
-    val tail = java.nio.file.Files.createTempDirectory("graft-ptail")
+    val head = TestSpark.tempDir("graft-phead")
+    val tail = TestSpark.tempDir("graft-ptail")
     java.nio.file.Files.writeString(head.resolve("a.json"), streamJson("a"))
     java.nio.file.Files.writeString(tail.resolve("b.json"), streamJson("b"))
     val reg = new StreamRegistry(EngineCtx(testMode = true))
@@ -524,7 +524,7 @@ class EngineSpec extends AnyFunSuite {
       c.warnings.exists(_.contains(":actions")))
 
     // the wired file output actually writes through output!
-    val outDir = java.nio.file.Files.createTempDirectory("cfg_out").toString + "/o"
+    val outDir = TestSpark.tempDir("cfg_out").toString + "/o"
     val loaded = Config.parse(
       s"""{:outputs {:write-file {:type :file :config {:path "$outDir"}}}}""")
     val reg = new StreamRegistry(EngineCtx(testMode = false, outputs = loaded.outputs))
@@ -863,7 +863,7 @@ class EngineSpec extends AnyFunSuite {
                         | "children":[{"action":"tap","params":["out"]}]}""".stripMargin)
     assert(up.count() == 4) // 2 docs x 2 copies
 
-    val benchPath = java.nio.file.Files.createTempDirectory("ir-bench").toString + "/b"
+    val benchPath = TestSpark.tempDir("ir-bench").toString + "/b"
     Seq((100L, "clean text here")).toDF("doc_id", "text")
       .write.parquet(benchPath)
     val ov = tap(docs, s"""{"action":"decontam-overlap",

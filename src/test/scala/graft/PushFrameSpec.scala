@@ -113,7 +113,7 @@ class PushFrameSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
     // the same pipeline over a parquet-backed copy plans its exchange,
     // and writes the same rows
-    val dir = Files.createTempDirectory("graft-pushframe").resolve("events").toString
+    val dir = TestSpark.tempDir("graft-pushframe").resolve("events").toString
     frame.write.parquet(dir)
     val (onDisk, diskRows, _, _) = push(spark.read.parquet(dir), "parquet-push")
     assert(shuffles(onDisk).nonEmpty, onDisk.queryExecution.executedPlan.treeString)
@@ -123,7 +123,7 @@ class PushFrameSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("streaming and mixed local-plus-file frames are left unchanged") {
     val streaming = spark.readStream.format("rate").load()
     assert(Engine.singlePartitionIfLocal(streaming) eq streaming)
-    val dir = Files.createTempDirectory("graft-pushframe-mixed").resolve("events").toString
+    val dir = TestSpark.tempDir("graft-pushframe-mixed").resolve("events").toString
     frame.write.parquet(dir)
     val mixed = frame.unionByName(spark.read.parquet(dir))
     assert(Engine.singlePartitionIfLocal(mixed) eq mixed)

@@ -204,7 +204,7 @@ class RetrievalSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     val direct = canon(graft.operators.Retrieval.bm25TopK(
       docs, queries, "doc_id", "text", "qid", "qtext", 3))
-    val dir = java.nio.file.Files.createTempDirectory("bm25spec").toString
+    val dir = TestSpark.tempDir("bm25spec").toString
     graft.operators.Retrieval.buildBm25Index(docs, "doc_id", "text", dir, nBuckets = 8)
     val stored = canon(graft.operators.Retrieval.queryBm25Index(
       s, dir, queries, "qid", "qtext", 3))
@@ -240,9 +240,9 @@ class RetrievalSpec extends AnyFunSuite {
     val queries = Seq((10L, "shuffle memory"), (11L, "catalyst columns")).toDF("qid", "qtext")
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val full = java.nio.file.Files.createTempDirectory("bm25_full").toString
+    val full = TestSpark.tempDir("bm25_full").toString
     graft.operators.Retrieval.buildBm25Index(corpus, "doc_id", "text", full, nBuckets = 8)
-    val inc = java.nio.file.Files.createTempDirectory("bm25_incr").toString
+    val inc = TestSpark.tempDir("bm25_incr").toString
     graft.operators.Retrieval.buildBm25Index(
       corpus.filter(col("doc_id") <= 3), "doc_id", "text", inc, nBuckets = 8)
     graft.operators.Retrieval.appendBm25Index(

@@ -32,7 +32,7 @@ class RiemannTcpSpec extends AnyFunSuite {
   }
 
   test("framed Msg pushes through default streams; ACK arrives after apply; errors keep the connection") {
-    val outDir = java.nio.file.Files.createTempDirectory("riemann_tcp").toString
+    val outDir = TestSpark.tempDir("riemann_tcp").toString
     val reg = new StreamRegistry(EngineCtx(testMode = false))
     reg.add("sink", Node.fromJson(
       s"""{"action":"where","params":[[">","metric",100]],
@@ -81,7 +81,7 @@ class RiemannTcpSpec extends AnyFunSuite {
   }
 
   test("a frame whose file-sink job fails is nacked and leaves no sink rows; the next frame lands") {
-    val out = java.nio.file.Files.createTempDirectory("riemann_tcp_fail").resolve("out")
+    val out = TestSpark.tempDir("riemann_tcp_fail").resolve("out")
     val boom = org.apache.spark.sql.functions.udf((m: Double) =>
       if (m == 666.0) throw new IllegalStateException("boom") else m)
     val reg = new StreamRegistry(EngineCtx(testMode = false, custom = Map("boom" ->
@@ -113,7 +113,7 @@ class RiemannTcpSpec extends AnyFunSuite {
       try { new ProcessBuilder("openssl", "version").start().waitFor() == 0 }
       catch { case _: java.io.IOException => false },
       "openssl not on PATH")
-    val dir = java.nio.file.Files.createTempDirectory("graft-tls")
+    val dir = TestSpark.tempDir("graft-tls")
     def sh(cmd: String*): Unit = {
       val p = new ProcessBuilder(cmd: _*).directory(dir.toFile)
         .redirectErrorStream(true).start()
@@ -136,7 +136,7 @@ class RiemannTcpSpec extends AnyFunSuite {
       cert = dir.resolve(s"$side.pem").toString,
       cacert = dir.resolve("ca.pem").toString)
 
-    val outDir = java.nio.file.Files.createTempDirectory("riemann_tls_out").toString
+    val outDir = TestSpark.tempDir("riemann_tls_out").toString
     val reg = new StreamRegistry(EngineCtx(testMode = false))
     reg.add("sink", Node.fromJson(
       s"""{"action":"output-file","params":[{"path":"$outDir/out"}]}"""), default = true)

@@ -348,7 +348,7 @@ class StreamingSpec extends AnyFunSuite {
     import s.implicits._
     implicit val sq: org.apache.spark.sql.classic.SQLContext =
       s.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
-    val dir = java.nio.file.Files.createTempDirectory("graft-ssink").toString + "/out"
+    val dir = TestSpark.tempDir("graft-ssink").toString + "/out"
     val ms = MemoryStream[Event]
     val node = Node.fromJson(
       s"""{"action":"where","params":[[">","metric",100]],"children":[
@@ -507,8 +507,8 @@ class StreamingSpec extends AnyFunSuite {
     import s.implicits._
     implicit val sq: org.apache.spark.sql.classic.SQLContext =
       s.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
-    val ck = java.nio.file.Files.createTempDirectory("graft-ck").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-ck-out").toString + "/out"
+    val ck = TestSpark.tempDir("graft-ck").toString
+    val outDir = TestSpark.tempDir("graft-ck-out").toString + "/out"
     val ms = MemoryStream[Event]
     def start() = Streaming.ewmaTimeless(0.5, Seq("host"))(ms.toDF()).toDF()
       .writeStream.format("json").option("path", outDir)
@@ -1075,7 +1075,7 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = (0 until 60).map { i =>
       (i.toLong, (0 until 8).map(d => math.cos(i * 0.37 + d * 1.1).toFloat))
     }.toDF("vec_id", "embedding")
-    val tmp = java.nio.file.Files.createTempDirectory("ann_serve").toString
+    val tmp = TestSpark.tempDir("ann_serve").toString
     graft.operators.Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding",
       s"$tmp/idx", nCells = 4, m = 2, codes = 4)
     val queries = corpus.filter(col("vec_id") < 5)
@@ -1111,7 +1111,7 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = (0 until 40).map { i =>
       (i.toLong, (0 until 12).map(j => words((i * 7 + j * 3) % words.size)).mkString(" "))
     }.toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("bm25_serve").toString
+    val tmp = TestSpark.tempDir("bm25_serve").toString
     graft.operators.Retrieval.buildBm25Index(corpus, "doc_id", "text",
       s"$tmp/idx", nBuckets = 8)
     val queries = Seq((1L, "spark index score"), (2L, "lexical stream")).toDF("query_id", "text")
